@@ -42,21 +42,9 @@ case class CosineSimilarity(left: Expression, right: Expression)
         s"cosine_similarity expects array<float|double>, got ${left.dataType} / ${right.dataType}")
   }
 
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val xs = a.asInstanceOf[ArrayData]
-    val ys = b.asInstanceOf[ArrayData]
-    val n = math.min(xs.numElements(), ys.numElements())
-    val ld = elemIsDouble(left)
-    val rd = elemIsDouble(right)
-    var dot = 0.0; var na = 0.0; var nb = 0.0; var i = 0
-    while (i < n) {
-      val x = if (ld) xs.getDouble(i) else xs.getFloat(i).toDouble
-      val y = if (rd) ys.getDouble(i) else ys.getFloat(i).toDouble
-      dot += x * y; na += x * x; nb += y * y
-      i += 1
-    }
-    dot / (java.lang.Math.sqrt(na) * java.lang.Math.sqrt(nb))
-  }
+  override def nullSafeEval(a: Any, b: Any): Any =
+    CosineSimilarity.of(a.asInstanceOf[ArrayData], elemIsDouble(left),
+      b.asInstanceOf[ArrayData], elemIsDouble(right))
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     nullSafeCodeGen(ctx, ev, (a, b) => {
@@ -85,6 +73,24 @@ case class CosineSimilarity(left: Expression, right: Expression)
     copy(left = newLeft, right = newRight)
 }
 
+object CosineSimilarity {
+  /** The interpreted kernel, shared with the per-row IVF kernels
+    * (`graft.streaming.IvfKernels`); the codegen path above emits the
+    * same loop.
+    */
+  def of(xs: ArrayData, xDouble: Boolean, ys: ArrayData, yDouble: Boolean): Double = {
+    val n = math.min(xs.numElements(), ys.numElements())
+    var dot = 0.0; var na = 0.0; var nb = 0.0; var i = 0
+    while (i < n) {
+      val x = if (xDouble) xs.getDouble(i) else xs.getFloat(i).toDouble
+      val y = if (yDouble) ys.getDouble(i) else ys.getFloat(i).toDouble
+      dot += x * y; na += x * x; nb += y * y
+      i += 1
+    }
+    dot / (java.lang.Math.sqrt(na) * java.lang.Math.sqrt(nb))
+  }
+}
+
 /** Dot product with the same memory-access/codegen strategy. */
 case class DotProduct(left: Expression, right: Expression) extends BinaryExpression {
 
@@ -94,21 +100,9 @@ case class DotProduct(left: Expression, right: Expression) extends BinaryExpress
   private def elemIsDouble(e: Expression): Boolean =
     e.dataType.asInstanceOf[ArrayType].elementType == DoubleType
 
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val xs = a.asInstanceOf[ArrayData]
-    val ys = b.asInstanceOf[ArrayData]
-    val n = math.min(xs.numElements(), ys.numElements())
-    val ld = elemIsDouble(left)
-    val rd = elemIsDouble(right)
-    var dot = 0.0; var i = 0
-    while (i < n) {
-      val x = if (ld) xs.getDouble(i) else xs.getFloat(i).toDouble
-      val y = if (rd) ys.getDouble(i) else ys.getFloat(i).toDouble
-      dot += x * y
-      i += 1
-    }
-    dot
-  }
+  override def nullSafeEval(a: Any, b: Any): Any =
+    DotProduct.of(a.asInstanceOf[ArrayData], elemIsDouble(left),
+      b.asInstanceOf[ArrayData], elemIsDouble(right))
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     nullSafeCodeGen(ctx, ev, (a, b) => {
@@ -129,21 +123,41 @@ case class DotProduct(left: Expression, right: Expression) extends BinaryExpress
     copy(left = newLeft, right = newRight)
 }
 
+object DotProduct {
+  /** The interpreted kernel, shared with the per-row IVF kernels. */
+  def of(xs: ArrayData, xDouble: Boolean, ys: ArrayData, yDouble: Boolean): Double = {
+    val n = math.min(xs.numElements(), ys.numElements())
+    var dot = 0.0; var i = 0
+    while (i < n) {
+      val x = if (xDouble) xs.getDouble(i) else xs.getFloat(i).toDouble
+      val y = if (yDouble) ys.getDouble(i) else ys.getFloat(i).toDouble
+      dot += x * y
+      i += 1
+    }
+    dot
+  }
+}
+
 /** Integer squared L2 distance over two BIGINT arrays (the frozen-vector
-  * kernel of the trained-PQ family): sum (x−y)² in Long arithmetic over
-  * the common prefix — bit-identical to the previous
-  * `aggregate(zip_with(a, b, (x,y) => (x−y)*(x−y)), 0L, _+_)` form on the
-  * equal-length arrays this engine feeds it (integer adds are exact and
-  * order-trivial), but codegen'd: the higher-order-function form is
-  * CodegenFallback — per-element interpreted lambdas plus an intermediate
-  * array allocation per row — and it sat on the hot path of every
-  * assignment/probe/Lloyd-scoring stage (r16: q250's probe stage spent
-  * 1.7 s CPU on 128k rows in the interpreted form).
+  * kernel of the trained-PQ family): sum (x−y)² in Long arithmetic —
+  * bit-identical to the previous
+  * `aggregate(zip_with(a, b, (x,y) => (x−y)*(x−y)), 0L, _+_)` form on
+  * equal-length arrays (integer adds are exact and order-trivial), but
+  * codegen'd: the higher-order-function form is CodegenFallback —
+  * per-element interpreted lambdas plus an intermediate array allocation
+  * per row — and it sat on the hot path of every assignment/probe/
+  * Lloyd-scoring stage (r16: q250's probe stage spent 1.7 s CPU on 128k
+  * rows in the interpreted form).
+  *
+  * Arrays of unequal length have no distance: the result is NULL, never
+  * the sum over the shorter prefix (a plausible wrong value). The rule
+  * lives once, in the companion, and both evaluation paths and the
+  * per-row IVF kernels call it.
   */
 case class IntSqDist(left: Expression, right: Expression) extends BinaryExpression {
 
   override def dataType: DataType = LongType
-  override def nullable: Boolean = left.nullable || right.nullable
+  override def nullable: Boolean = true
 
   override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {
     def ok(e: Expression) = e.dataType match {
@@ -160,7 +174,30 @@ case class IntSqDist(left: Expression, right: Expression) extends BinaryExpressi
   override def nullSafeEval(a: Any, b: Any): Any = {
     val xs = a.asInstanceOf[ArrayData]
     val ys = b.asInstanceOf[ArrayData]
-    val n = math.min(xs.numElements(), ys.numElements())
+    if (IntSqDist.defined(xs, ys)) IntSqDist.sumSq(xs, ys) else null
+  }
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, (a, b) => {
+      val k = "graft.functions.IntSqDist$.MODULE$"
+      s"""
+         |${ev.isNull} = !$k.defined($a, $b);
+         |if (!${ev.isNull}) { ${ev.value} = $k.sumSq($a, $b); }
+       """.stripMargin
+    })
+
+  override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression): Expression =
+    copy(left = newLeft, right = newRight)
+}
+
+object IntSqDist {
+  /** A distance exists only between vectors of one length. */
+  def defined(xs: ArrayData, ys: ArrayData): Boolean =
+    xs.numElements() == ys.numElements()
+
+  /** Σ (x−y)² in exact Long arithmetic; callers check [[defined]] first. */
+  def sumSq(xs: ArrayData, ys: ArrayData): Long = {
+    val n = xs.numElements()
     var s = 0L; var i = 0
     while (i < n) {
       val d = xs.getLong(i) - ys.getLong(i)
@@ -169,26 +206,6 @@ case class IntSqDist(left: Expression, right: Expression) extends BinaryExpressi
     }
     s
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val i = ctx.freshName("i")
-      val n = ctx.freshName("n")
-      val s = ctx.freshName("s")
-      val d = ctx.freshName("d")
-      s"""
-         |final int $n = java.lang.Math.min($a.numElements(), $b.numElements());
-         |long $s = 0L;
-         |for (int $i = 0; $i < $n; $i++) {
-         |  final long $d = $a.getLong($i) - $b.getLong($i);
-         |  $s += $d * $d;
-         |}
-         |${ev.value} = $s;
-       """.stripMargin
-    })
-
-  override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression): Expression =
-    copy(left = newLeft, right = newRight)
 }
 
 /** ADC lookup-sum: Σ_m lut[m·k + codes[m]] with element_at's 1-BASED

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, BooleanType, FloatType, IntegerType, LongType, StringType, StructField, StructType}
 
@@ -68,11 +68,22 @@ import org.apache.spark.sql.types.{ArrayType, BooleanType, FloatType, IntegerTyp
   * BIT-EQUAL to the full exact-verify path (spec-pinned), which remains
   * available as `spark.graft.ivfIndex.exactVerify=true`.
   *
-  * Per-batch cost = batch + candidates: the batch assigns against the
-  * BROADCAST frozen pivots, codes against the BROADCAST frozen
-  * codebook, the list store is only ever SCANNED against a broadcast of
-  * the batch's probe rows, and raw-vector fetches are gray-band only —
-  * no corpus-sized shuffle anywhere (the all-broadcast probe-plan pin).
+  * Per-batch cost = batch + candidates, not a fixed scheduling bill.
+  * Each call ([[admitBatch]], [[topK]], [[rebuild]]) loads its epoch
+  * ONCE onto the driver: one `meta/` read, one collect per bounded store
+  * (`piv/` is ⌊√n⌋ rows, `cb/` ≤ 256) carrying a per-row xxhash64 that
+  * is XOR-folded into the consistency fingerprints. Assignment, PQ
+  * coding and ADC LUTs then run as per-row, map-only [[IvfKernels]]
+  * over that epoch — bit-equal to the relational `Similarity` kernels,
+  * with no window or group-by shuffle and no partition-count probe.
+  * The list store is only ever SCANNED against a broadcast of the
+  * batch's probe rows, and raw-vector fetches are gray-band only — no
+  * corpus-sized shuffle anywhere (the all-broadcast probe-plan pin).
+  * Spark jobs per call, relational kernels with per-call store reads →
+  * this form, on perfbench's `vector_ingest` episode (1,088 vectors in
+  * batches of 512/128/448, a 64-query topK after each): bootstrap
+  * admission 41 → 24, incremental 52 → 30, re-policy 63 → 37, topK
+  * 20 → 12 — 216 → 127 per episode.
   *
   * Crash story identical to the siblings: corpus parquet is the source
   * of truth, stores append after it, pre-probe divergence heal rebuilds
@@ -123,6 +134,16 @@ object IvfIndex extends IndexLifecycle {
       payloadRk: Int, version: String, pivotFp: Long, cbFp: Long,
       committed: Boolean)
 
+  /** One call's epoch, held on the driver: the parsed meta (None when
+    * absent or unreadable), the per-row kernels over the collected
+    * pivots and codebook, and those stores' content fingerprints.
+    */
+  private final case class Epoch(meta: Option[Meta], kernels: IvfKernels,
+      pivotFp: Long, cbFp: Long)
+
+  private val pivCols = Seq("p_id", "pe")
+  private val cbCols = Seq("m", "c_id", "fc")
+
   /** Meta parsed BY NAME with conservative defaults: a meta written by an
     * older store format (or a partially-evolved one) parses with
     * `committed = false`, so the epoch-consistency heal rebuilds it —
@@ -145,15 +166,67 @@ object IvfIndex extends IndexLifecycle {
         get[Boolean]("committed", false))).toOption
     }
 
-  /** Order-free content fingerprint of a bounded store relation (xxhash64
-    * per row folded with bit_xor — deterministic under any partitioning;
-    * empty relation = 0). Bounded inputs only: piv/ is nlist rows, cb/ is
-    * 256 — never corpus-sized.
+  /** A bounded store relation collected in ONE job, with its order-free
+    * content fingerprint: xxhash64 per row, XOR-folded on the driver
+    * (empty relation = 0) — bit-equal to the `coalesce(bit_xor(h), 0)`
+    * aggregate earlier stores were stamped with, so their meta still
+    * verifies. Bounded inputs only: piv/ is nlist rows, cb/ is 256 —
+    * never corpus-sized.
     */
-  private def fpOf(df: DataFrame, cols: Seq[String]): Long =
-    df.select(xxhash64(cols.map(col): _*).as("h"))
-      .agg(expr("coalesce(bit_xor(h), CAST(0 AS BIGINT))"))
-      .head().getLong(0)
+  private def collectHashed(df: DataFrame, cols: Seq[String]): (Array[Row], Long) = {
+    val rows = df.select(cols.map(col) :+ xxhash64(cols.map(col): _*).as("h"): _*)
+      .collect()
+    (rows, rows.foldLeft(0L)((fp, r) => fp ^ r.getLong(cols.length)))
+  }
+
+  /** The epoch as stored under `indexDir`: one meta read, one collect
+    * per bounded store.
+    */
+  private def loadEpoch(spark: SparkSession, indexDir: String): Epoch = {
+    val (piv, pivotFp) = collectHashed(
+      readOrEmpty(spark, s"$indexDir/piv", pivSchema), pivCols)
+    val (cb, cbFp) = collectHashed(
+      readOrEmpty(spark, s"$indexDir/cb", cbSchema), cbCols)
+    Epoch(metaRow(spark, indexDir), IvfKernels(piv, cb), pivotFp, cbFp)
+  }
+
+  private def requireVersion(indexDir: String, m: Meta): Unit =
+    require(m.version == graft.operators.Similarity.ivfLogicVersion,
+      s"index at $indexDir was built with IVF version ${m.version}, this " +
+        s"code is ${graft.operators.Similarity.ivfLogicVersion} — rebuild() required")
+
+  /** A (bounded) collected store written back as one parquet file, from
+    * its local relation — the rows the epoch's kernels were built from.
+    */
+  private def writeStore(spark: SparkSession, rows: Array[Row],
+      schema: StructType, dir: String): Unit =
+    spark.createDataFrame(java.util.Arrays.asList(
+        rows.map(r => Row.fromSeq(r.toSeq.take(schema.length))): _*), schema)
+      .coalesce(1).write.mode("overwrite").parquet(dir)
+
+  /** `rel` with its per-row epoch kernels as columns: `near` (the top-`r`
+    * assignment), `pq` (codes + residual) and `lut`.
+    */
+  private def withKernels(rel: DataFrame, k: IvfKernels, r: Int): DataFrame =
+    rel.withColumn("near", k.near(col("embedding"), r))
+      .withColumn("pq", k.code(col("embedding")))
+      .withColumn("lut", k.lut(col("embedding")))
+
+  /** The (vec_id, p_id, rk) assignment rows of a [[withKernels]] relation
+    * — the `ivfNearOf` shape.
+    */
+  private def nearRows(rel: DataFrame): DataFrame =
+    rel.select(col("vec_id"), explode(col("near")).as("n"))
+      .select(col("vec_id"), col("n.p_id").as("p_id"), col("n.rk").as("rk"))
+
+  /** The `near/` store rows of a [[withKernels]] relation: every
+    * assignment, with the (code, resid) payload inlined on rk ≤ payloadRk.
+    */
+  private def storeRows(rel: DataFrame, payloadRk: Int): DataFrame =
+    rel.select(col("vec_id"), explode(col("near")).as("n"), col("pq"))
+      .select(col("vec_id"), col("n.p_id").as("p_id"), col("n.rk").as("rk"),
+        when(col("n.rk") <= payloadRk, col("pq.codes")).as("code"),
+        when(col("n.rk") <= payloadRk, col("pq.resid")).as("resid"))
 
   private def writeMeta(spark: SparkSession, indexDir: String, n: Long,
       nlist: Int, nprobe: Int, payloadRk: Int, pivotSrc: String,
@@ -271,7 +344,15 @@ object IvfIndex extends IndexLifecycle {
     metaRow(spark, indexDir).map(_.payloadRk).getOrElse(1)
 
   def candidatePairsCoded(spark: SparkSession, indexDir: String,
-      batchNear: DataFrame): DataFrame = {
+      batchNear: DataFrame): DataFrame =
+    candidatePairsCoded(spark, indexDir, batchNear,
+      storedPayloadRk(spark, indexDir))
+
+  /** [[candidatePairsCoded]] at the store's payload depth as the caller's
+    * epoch already read it from meta.
+    */
+  private def candidatePairsCoded(spark: SparkSession, indexDir: String,
+      batchNear: DataFrame, payloadRk: Int): DataFrame = {
     import spark.implicits._
     val store = readOrEmpty(spark, s"$indexDir/near", nearSchema)
     // ONE store scan: every rk ≤ payload_rk membership row SELF-CARRIES
@@ -281,7 +362,7 @@ object IvfIndex extends IndexLifecycle {
     // capped at the STORE's payload depth: rows beyond it would join
     // payload-less and the ADC bands could not decide them (the r15
     // null-payload admission hole).
-    val rEff = math.min(admitListRk(spark), storedPayloadRk(spark, indexDir))
+    val rEff = math.min(admitListRk(spark), payloadRk)
     val members = store.filter($"rk" <= rEff)
       .select($"vec_id".as("a_id"), $"p_id", $"code", $"resid")
     members.join(broadcast(batchNear.select($"vec_id".as("b_id"), $"p_id")),
@@ -326,18 +407,16 @@ object IvfIndex extends IndexLifecycle {
     * evidence ladder's census from production).
     */
   private def adcScoredOf(spark: SparkSession, batch: DataFrame,
-      candCoded: DataFrame, cb: DataFrame): DataFrame = {
+      candCoded: DataFrame, kEff: Int): DataFrame = {
     import spark.implicits._
     val sim = graft.operators.Similarity
-    // the codebook's EFFECTIVE per-subspace size: an epoch trained on
-    // fewer vectors than K has that many centroids, and the positional
-    // LUT pack must stride by the actual count (0 on a first-touch
-    // empty store → no LUTs → no ADC rejections, matching the empty
-    // candidate set)
-    val kEff = cb.agg(coalesce(max($"c_id"), lit(0))).head().getInt(0)
-    val luts = sim.trainedPqLutsFor(
-        batch.select($"vec_id", $"embedding"), cb, kEff)
-      .select($"a_id".as("b_id"), $"lut")
+    // `batch` carries its per-row LUTs ([[withKernels]]); kEff is the
+    // codebook's EFFECTIVE per-subspace size: an epoch trained on fewer
+    // vectors than K has that many centroids, and the positional LUT
+    // pack must stride by the actual count (0 on a first-touch empty
+    // store → no LUTs → no ADC rejections, matching the empty candidate
+    // set)
+    val luts = batch.filter($"lut".isNotNull).select($"vec_id".as("b_id"), $"lut")
     candCoded
       .join(broadcast(luts), Seq("b_id"))
       .withColumn("a", sqrt(sim.adcDistOf($"code", $"lut", kEff).cast("double")))
@@ -371,9 +450,9 @@ object IvfIndex extends IndexLifecycle {
 
   private[streaming] def adcRejectedIds(spark: SparkSession,
       corpusDir: String, batch: DataFrame, candCoded: DataFrame,
-      cb: DataFrame, maxCosine: Double, ck: CkptScope): DataFrame = {
+      kEff: Int, maxCosine: Double, ck: CkptScope): DataFrame = {
     import spark.implicits._
-    val scored = adcScoredOf(spark, batch, candCoded, cb)
+    val scored = adcScoredOf(spark, batch, candCoded, kEff)
     // ONE pass over the candidate join materializes BOTH decided bands
     // (certain-dup ∪ gray), dropping the certain-clean bulk in the same
     // scan — the r16 first cut filtered `scored` twice (the gray
@@ -406,15 +485,12 @@ object IvfIndex extends IndexLifecycle {
     */
   private[graft] def admitBandCounts(spark: SparkSession, indexDir: String,
       batch: DataFrame, maxCosine: Double = 0.92): (Long, Long, Long) = {
-    import spark.implicits._
-    val sim = graft.operators.Similarity
-    val nprobe = metaRow(spark, indexDir).map(_.nprobe).getOrElse(1)
-    val piv = readOrEmpty(spark, s"$indexDir/piv", pivSchema)
-    val cb = readOrEmpty(spark, s"$indexDir/cb", cbSchema)
-    val bn = sim.ivfNearOf(batch.select($"vec_id", $"embedding"), piv,
-      admitNprobe(spark, nprobe))
-    val candCoded = candidatePairsCoded(spark, indexDir, bn)
-    val row = adcScoredOf(spark, batch, candCoded, cb)
+    val epoch = loadEpoch(spark, indexDir)
+    val b = withKernels(batch, epoch.kernels,
+      admitNprobe(spark, epoch.meta.map(_.nprobe).getOrElse(1)))
+    val candCoded = candidatePairsCoded(spark, indexDir, nearRows(b),
+      epoch.meta.map(_.payloadRk).getOrElse(1))
+    val row = adcScoredOf(spark, b, candCoded, epoch.kernels.kEff)
       .agg(sum(when(certainPred(maxCosine), 1L).otherwise(0L)),
         sum(when(!certainPred(maxCosine) && grayPred(maxCosine), 1L)
           .otherwise(0L)),
@@ -437,17 +513,16 @@ object IvfIndex extends IndexLifecycle {
     */
   private[graft] def batchProbePlan(spark: SparkSession, indexDir: String,
       corpusDir: String, batch: DataFrame, maxCosine: Double): DataFrame = {
-    val nprobe = metaRow(spark, indexDir).map(_.nprobe).getOrElse(1)
-    val piv = readOrEmpty(spark, s"$indexDir/piv", pivSchema)
-    val cb = readOrEmpty(spark, s"$indexDir/cb", cbSchema)
-    val bn = graft.operators.Similarity.ivfNearOf(
-      batch.select(col("vec_id"), col("embedding")), piv,
-      admitNprobe(spark, nprobe))
+    val epoch = loadEpoch(spark, indexDir)
+    val b = withKernels(batch, epoch.kernels,
+      admitNprobe(spark, epoch.meta.map(_.nprobe).getOrElse(1)))
     // the scope is deliberately NOT freed: the returned plan references
     // the gray checkpoint and may execute later (diagnostic API — one
     // tiny gray block per call)
-    adcRejectedIds(spark, corpusDir, batch,
-      candidatePairsCoded(spark, indexDir, bn), cb, maxCosine, new CkptScope)
+    adcRejectedIds(spark, corpusDir, b,
+      candidatePairsCoded(spark, indexDir, nearRows(b),
+        epoch.meta.map(_.payloadRk).getOrElse(1)),
+      epoch.kernels.kEff, maxCosine, new CkptScope)
   }
 
   /** Full index (re)derivation from the corpus store — bootstrap,
@@ -476,11 +551,17 @@ object IvfIndex extends IndexLifecycle {
     * under surviving data heals via the counts-or-missing-meta path in
     * [[admitBatch]] (never re-stamped with first-touch params).
     */
-  def rebuild(spark: SparkSession, corpusDir: String, indexDir: String): Long = {
+  def rebuild(spark: SparkSession, corpusDir: String, indexDir: String): Long =
+    rebuildEpoch(spark, corpusDir, indexDir).meta.map(_.n).getOrElse(0L)
+
+  /** [[rebuild]], returning the epoch it committed — so a healing or
+    * re-policying [[admitBatch]] probes with it instead of re-reading
+    * the stores it just wrote.
+    */
+  private def rebuildEpoch(spark: SparkSession, corpusDir: String,
+      indexDir: String): Epoch = {
     import spark.implicits._
     val sim = graft.operators.Similarity
-    val ck = new CkptScope
-    try {
     val corpus = readOrEmpty(spark, corpusDir, vecSchema)
       .select($"vec_id", $"embedding")
     val n = corpus.count()
@@ -492,29 +573,29 @@ object IvfIndex extends IndexLifecycle {
     val payloadRk = math.min(admitListRk(spark), math.max(1, nlist))
     val storeRk = math.max(nprobe, payloadRk)
     val pivotSrc = if (trainedPivots(spark)) "trained" else "policy"
-    val piv = ck(if (pivotSrc == "trained") sim.trainedCoarsePivots(corpus, nlist)
-      else sim.ivfPivotsOf(corpus, nlist))
-    val cb = ck(sim.trainedPqCodebookOf(corpus))
-    piv.coalesce(1).write.mode("overwrite").parquet(s"$indexDir/piv")
-    cb.coalesce(1).write.mode("overwrite").parquet(s"$indexDir/cb")
-    // fingerprints once per rebuild: piv/cb are checkpointed, so the
-    // values cannot move between the two meta writes
-    val fpPiv = fpOf(piv, Seq("p_id", "pe"))
-    val fpCb = fpOf(cb, Seq("m", "c_id", "fc"))
+    // the epoch state, collected once with its fingerprints: the
+    // collected rows are what gets written, what the fingerprints hash
+    // and what the kernels assign and code against, so the values cannot
+    // move between the two meta writes
+    val (piv, fpPiv) = collectHashed(
+      if (pivotSrc == "trained") sim.trainedCoarsePivots(corpus, nlist)
+      else sim.ivfPivotsOf(corpus, nlist), pivCols)
+    val (cb, fpCb) = collectHashed(sim.trainedPqCodebookOf(corpus), cbCols)
+    writeStore(spark, piv, pivSchema, s"$indexDir/piv")
+    writeStore(spark, cb, cbSchema, s"$indexDir/cb")
     writeMeta(spark, indexDir, n, nlist, nprobe, payloadRk, pivotSrc,
       fpPiv, fpCb, committed = false)
-    val codes = sim.trainedPqCodesWithResid(corpus, cb)
-    val near = ck(sim.ivfNearOf(corpus, piv, storeRk)
-      .join(codes.select($"vec_id", $"codes", $"resid"), Seq("vec_id"), "left")
-      .select($"vec_id", $"p_id", $"rk",
-        when($"rk" <= payloadRk, $"codes").as("code"),
-        when($"rk" <= payloadRk, $"resid").as("resid")))
-    near.coalesce(compactFiles(spark, n)).write.mode("overwrite")
+    val kernels = IvfKernels(piv, cb)
+    // corpus-sized but map-only: each vector is assigned and coded in
+    // place, then exploded into its store rows — no join, no shuffle
+    storeRows(corpus.withColumn("near", kernels.near($"embedding", storeRk))
+        .withColumn("pq", kernels.code($"embedding")), payloadRk)
+      .coalesce(compactFiles(spark, n)).write.mode("overwrite")
       .parquet(s"$indexDir/near")
     writeMeta(spark, indexDir, n, nlist, nprobe, payloadRk, pivotSrc,
       fpPiv, fpCb, committed = true)
-    n
-    } finally ck.freeAll()
+    Epoch(Some(Meta(n, nlist, nprobe, payloadRk, sim.ivfLogicVersion,
+      fpPiv, fpCb, committed = true)), kernels, fpPiv, fpCb)
   }
 
   /** One micro-batch of IVF-indexed admission: reject batch vectors with
@@ -535,14 +616,10 @@ object IvfIndex extends IndexLifecycle {
     val sim = graft.operators.Similarity
     val ck = new CkptScope
     try {
-    // ONE meta read serves the guard, the consistency heal and the
-    // first-touch stamp; re-read only after a heal can have rewritten it.
-    val meta0 = metaRow(spark, indexDir)
-    meta0.foreach { m =>
-      require(m.version == sim.ivfLogicVersion,
-        s"index at $indexDir was built with IVF version ${m.version}, this " +
-          s"code is ${sim.ivfLogicVersion} — rebuild() required")
-    }
+    // ONE epoch load serves the guard, the consistency heal, the probe
+    // and the append; a heal replaces it with the epoch it rebuilt.
+    val loaded = loadEpoch(spark, indexDir)
+    loaded.meta.foreach(requireVersion(indexDir, _))
     // Pre-probe self-heal ([[IndexLifecycle.healIfNeeded]] — ordering
     // argument in the trait doc), extended with the epoch-consistency
     // check: counts catch orphaned rows, fingerprints + the committed
@@ -550,55 +627,56 @@ object IvfIndex extends IndexLifecycle {
     val preIdxCount = readOrEmpty(spark, s"$indexDir/near", nearSchema)
       .select($"vec_id").distinct().count()
     val preCorpusCount = readOrEmpty(spark, corpusDir, vecSchema).count()
-    // epoch state loaded ONCE per batch (checkpointed): the fingerprint
-    // check and the probe share the same read; reloaded only if a heal
-    // rewrote the stores
-    val piv0 = ck(readOrEmpty(spark, s"$indexDir/piv", pivSchema))
-    val cb0 = ck(readOrEmpty(spark, s"$indexDir/cb", cbSchema))
+    var epoch = loaded
     var healed = false
-    def doRebuild(): Unit = { rebuild(spark, corpusDir, indexDir); healed = true }
-    meta0 match {
+    def doRebuild(): Unit = {
+      epoch = rebuildEpoch(spark, corpusDir, indexDir); healed = true
+    }
+    loaded.meta match {
       case None =>
         if (preIdxCount > 0 || preCorpusCount > 0) doRebuild() // lost meta under data: re-derive, never re-stamp
-        else writeMeta(spark, indexDir, 0L, sim.ivfPolicyNlist(0L),
-          sim.ivfPolicyNprobe(sim.ivfPolicyNlist(0L)), 1,
-          if (trainedPivots(spark)) "trained" else "policy",
-          0L, 0L, committed = true)
+        else {
+          val nlist0 = sim.ivfPolicyNlist(0L)
+          val m0 = Meta(0L, nlist0, sim.ivfPolicyNprobe(nlist0), 1,
+            sim.ivfLogicVersion, 0L, 0L, committed = true)
+          writeMeta(spark, indexDir, m0.n, m0.nlist, m0.nprobe, m0.payloadRk,
+            if (trainedPivots(spark)) "trained" else "policy", 0L, 0L,
+            committed = true)
+          epoch = loaded.copy(meta = Some(m0))
+        }
       case Some(m) =>
         val epochConsistent = m.committed &&
-          m.pivotFp == fpOf(piv0, Seq("p_id", "pe")) &&
-          m.cbFp == fpOf(cb0, Seq("m", "c_id", "fc"))
+          m.pivotFp == loaded.pivotFp && m.cbFp == loaded.cbFp
         if (!epochConsistent) doRebuild()
     }
     if (!healed)
       healIfNeeded(spark, preCorpusCount, preIdxCount,
         Seq(s"$indexDir/near")) { doRebuild() }
-    // the post-heal epoch: re-read only if the heal rewrote it
-    val meta1 = if (healed || meta0.isEmpty) metaRow(spark, indexDir) else meta0
-    val lastN = meta1.map(_.n).getOrElse(0L)
-    val nprobe = meta1.map(_.nprobe).getOrElse(
-      sim.ivfPolicyNprobe(sim.ivfPolicyNlist(0L)))
+    // every branch above leaves a parsed, rebuilt or first-touch meta
+    val meta = epoch.meta.get
+    val lastN = meta.n
+    val nprobe = meta.nprobe
     // the EPOCH's recorded depths, not the live conf: incremental
     // appends must write the exact slice the rebuild wrote, or the
     // store==batch-path pin (and the heal's count invariant) drift
-    val payloadRkEpoch = meta1.map(_.payloadRk).getOrElse(1)
+    val payloadRkEpoch = meta.payloadRk
     val storeRkEpoch = math.max(nprobe, payloadRkEpoch)
     val existingIds = readOrEmpty(spark, corpusDir, vecSchema).select($"vec_id")
     val idHits = existingIds
       .join(broadcast(batch.select($"vec_id")), Seq("vec_id")).distinct()
     // in-batch exact-id dedup — same rationale and winner rule as
     // [[AnnIndex.admitBatch]] (a duplicated vec_id in one batch would
-    // wedge the row-vs-distinct heal into perpetual rebuilds)
-    val fresh = ck(batch.join(broadcast(idHits), Seq("vec_id"), "left_anti")
-      .withColumn("rk", row_number().over(
-        org.apache.spark.sql.expressions.Window.partitionBy($"vec_id")
-          .orderBy(xxhash64($"embedding"), $"label")))
-      .filter($"rk" === 1)
-      .select($"vec_id", $"embedding", $"label"))
-    val piv = if (healed) ck(readOrEmpty(spark, s"$indexDir/piv", pivSchema)) else piv0
-    val cb = if (healed) ck(readOrEmpty(spark, s"$indexDir/cb", cbSchema)) else cb0
-    val batchNear = ck(sim
-      .ivfNearOf(fresh.select($"vec_id", $"embedding"), piv, storeRkEpoch))
+    // wedge the row-vs-distinct heal into perpetual rebuilds). The same
+    // checkpoint carries each fresh vector's epoch kernels: its
+    // full-slice assignment, its (code, resid) and its LUT.
+    val fresh = ck(withKernels(
+      batch.join(broadcast(idHits), Seq("vec_id"), "left_anti")
+        .withColumn("rk", row_number().over(
+          org.apache.spark.sql.expressions.Window.partitionBy($"vec_id")
+            .orderBy(xxhash64($"embedding"), $"label")))
+        .filter($"rk" === 1)
+        .select($"vec_id", $"embedding", $"label"),
+      epoch.kernels, storeRkEpoch))
     // DELIBERATELY NOT checkpointed: the candidate relation is
     // batch × corpus × (admitNprobe/nlist) pairs — at a 32k batch
     // against a 64k corpus with the epoch's recall nprobe that was
@@ -611,16 +689,19 @@ object IvfIndex extends IndexLifecycle {
     // [[admitNprobe]] prefix of the epoch assignment (default: the
     // nearest list only — √n candidates per vector under the policy);
     // the store append below keeps the FULL epoch slice.
-    val probeNear = batchNear.filter($"rk" <= admitNprobe(spark, nprobe))
-    val candCoded = candidatePairsCoded(spark, indexDir, probeNear)
+    val probeNear = nearRows(fresh).filter($"rk" <= admitNprobe(spark, nprobe))
+    val candCoded = candidatePairsCoded(spark, indexDir, probeNear, payloadRkEpoch)
     val rejected =
       if (exactVerify(spark))
         cosineRejectedIds(spark, corpusDir, vecSchema, fresh,
           candCoded.select($"a_id", $"b_id"), maxCosine)
-      else adcRejectedIds(spark, corpusDir, fresh, candCoded, cb, maxCosine, ck)
-    val admitted = ck(fresh.join(broadcast(rejected), Seq("vec_id"), "left_anti"))
+      else adcRejectedIds(spark, corpusDir, fresh, candCoded,
+        epoch.kernels.kEff, maxCosine, ck)
+    val admitted = ck(fresh.drop("lut")
+      .join(broadcast(rejected), Seq("vec_id"), "left_anti"))
     val nAdmitted = admitted.count()
-    admitted.write.mode("append").parquet(corpusDir)
+    admitted.select($"vec_id", $"embedding", $"label")
+      .write.mode("append").parquet(corpusDir)
     // RE-POLICY trigger (post-append, so the rebuild sees this batch):
     // doubling since the last snapshot — or ANY admission while the
     // store has never rebuilt (lastN == 0: the pivot/codebook stores
@@ -635,16 +716,10 @@ object IvfIndex extends IndexLifecycle {
         (lastN == 0L && corpusTotal > 0L)) {
       rebuild(spark, corpusDir, indexDir)
     } else {
-      val admittedCodes = sim.trainedPqCodesWithResid(
-        admitted.select($"vec_id", $"embedding"), cb)
-      val admittedNear = ck(batchNear
-        .join(broadcast(admitted.select($"vec_id")), Seq("vec_id"))
-        .join(broadcast(admittedCodes.select($"vec_id", $"codes", $"resid")),
-          Seq("vec_id"), "left")
-        .select($"vec_id", $"p_id", $"rk",
-          when($"rk" <= payloadRkEpoch, $"codes").as("code"),
-          when($"rk" <= payloadRkEpoch, $"resid").as("resid")))
-      admittedNear.repartition(appendWriters(spark, nAdmitted), $"p_id")
+      // the admitted rows already carry their frozen-epoch assignment
+      // and payload: the append is a projection, no join
+      storeRows(admitted, payloadRkEpoch)
+        .repartition(appendWriters(spark, nAdmitted), $"p_id")
         .write.mode("append").parquet(s"$indexDir/near")
       compactIfOverCap(spark, Seq(s"$indexDir/near")) {
         rebuild(spark, corpusDir, indexDir)
@@ -692,25 +767,19 @@ object IvfIndex extends IndexLifecycle {
       exactRerank: Boolean = true): DataFrame = {
     import spark.implicits._
     val sim = graft.operators.Similarity
-    metaRow(spark, indexDir).foreach { m =>
-      require(m.version == sim.ivfLogicVersion,
-        s"index at $indexDir was built with IVF version ${m.version}, this " +
-          s"code is ${sim.ivfLogicVersion} — rebuild() required")
-    }
-    val nprobe = metaRow(spark, indexDir).map(_.nprobe).getOrElse(1)
-    val piv = readOrEmpty(spark, s"$indexDir/piv", pivSchema)
-    val cb = readOrEmpty(spark, s"$indexDir/cb", cbSchema)
+    val epoch = loadEpoch(spark, indexDir)
+    epoch.meta.foreach(requireVersion(indexDir, _))
+    val nprobe = epoch.meta.map(_.nprobe).getOrElse(1)
+    val kEff = epoch.kernels.kEff
     val q = queries.select($"vec_id", $"embedding")
-    val probes = sim.ivfNearOf(q, piv, nprobe)
-      .select($"vec_id".as("q_id"), $"p_id")
+    val qk = withKernels(q, epoch.kernels, nprobe)
+    val probes = nearRows(qk).select($"vec_id".as("q_id"), $"p_id")
     val cand = readOrEmpty(spark, s"$indexDir/near", nearSchema)
       .filter($"rk" === 1)
       .select($"vec_id".as("n_id"), $"p_id", $"code")
       .join(broadcast(probes), Seq("p_id"))
       .filter($"n_id" =!= $"q_id")
-    val kEff = cb.agg(coalesce(max($"c_id"), lit(0))).head().getInt(0)
-    val luts = sim.trainedPqLutsFor(q, cb, kEff)
-      .select($"a_id".as("q_id"), $"lut")
+    val luts = qk.filter($"lut".isNotNull).select($"vec_id".as("q_id"), $"lut")
     val sl = if (shortlist > 0) shortlist else 4 * k
     val topSl = graft.functions.TopKByScore(sl)
     val adcTop = cand.join(broadcast(luts), Seq("q_id"))

@@ -43,6 +43,22 @@ class FunctionsSpec extends AnyFunSuite with SparkSpec {
     assert(got == (4.0 + 10.0 + 18.0))
   }
 
+  test("int_sq_dist: equal lengths sum (x−y)²; unequal lengths are NULL on both eval paths") {
+    // a checkpointed relation, not a local one: projections over a local
+    // relation are folded at planning time by the interpreted path only
+    val df = Seq((Array(1L, 2L, 3L), Array(4L, 6L, 3L)), (Array(1L, 2L, 3L), Array(1L, 2L)),
+        (Array.empty[Long], Array(5L)))
+      .toDF("a", "b").localCheckpoint()
+    def run(): Seq[Option[Long]] = df.select(VectorFunctions.intSqDist($"a", $"b"))
+      .as[Option[Long]].collect().toSeq
+    assert(run() == Seq(Some(25L), None, None), "codegen path")
+    val confs = Seq("spark.sql.codegen.wholeStage" -> "false",
+      "spark.sql.codegen.factoryMode" -> "NO_CODEGEN")
+    confs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try assert(run() == Seq(Some(25L), None, None), "interpreted path")
+    finally confs.foreach { case (k, _) => spark.conf.unset(k) }
+  }
+
   test("SQL registration works") {
     VectorFunctions.register(spark)
     val got = spark.sql("SELECT cosine_similarity(array(1.0F, 0.0F), array(1.0F, 0.0F)) c")

@@ -497,6 +497,176 @@ class IvfIndexSpec extends AnyFunSuite with SparkSpec {
     assert(!admitted.exists(_ >= 7000000L))
   }
 
+  // ——— per-row epoch kernels vs their relational references ———————————
+
+  private def kernelsOf(piv: org.apache.spark.sql.DataFrame,
+      cb: org.apache.spark.sql.DataFrame): IvfKernels =
+    IvfKernels(piv.select($"p_id", $"pe").collect(),
+      cb.select($"m", $"c_id", $"fc").collect())
+
+  /** A relation's rows, rendered and sorted (multiplicity kept). */
+  private def rowsOf(df: org.apache.spark.sql.DataFrame): Seq[String] =
+    df.collect().map(_.toSeq.map {
+      case s: scala.collection.Seq[_] => s.mkString("[", ",", "]")
+      case v => String.valueOf(v)
+    }.mkString("|")).toSeq.sorted
+
+  /** Each per-row kernel against its `Similarity` reference on `emb`
+    * under the epoch (piv, cb), at assignment depths `rs`.
+    */
+  private def assertKernelsMatch(emb: org.apache.spark.sql.DataFrame,
+      piv: org.apache.spark.sql.DataFrame, cb: org.apache.spark.sql.DataFrame,
+      rs: Seq[Int]): Unit = {
+    val sim = graft.operators.Similarity
+    val k = kernelsOf(piv, cb)
+    rs.foreach { r =>
+      val perRow = emb.select($"vec_id", explode(k.near($"embedding", r)).as("n"))
+        .select($"vec_id", $"n.p_id", $"n.rk")
+      assert(rowsOf(perRow) == rowsOf(sim.ivfNearOf(emb, piv, r)), s"assignment at r=$r")
+    }
+    val codes = emb.select($"vec_id", k.code($"embedding").as("pq"))
+      .filter($"pq".isNotNull).select($"vec_id", $"pq.codes", $"pq.resid")
+    assert(rowsOf(codes) == rowsOf(sim.trainedPqCodesWithResid(emb, cb)
+      .select($"vec_id", $"codes", $"resid")), "PQ codes + residual")
+    val kEff = cb.agg(coalesce(max($"c_id"), lit(0))).head().getInt(0)
+    assert(k.kEff == kEff)
+    val luts = emb.select($"vec_id", k.lut($"embedding").as("lut"))
+      .filter($"lut".isNotNull)
+    assert(rowsOf(luts) == rowsOf(sim.trainedPqLutsFor(emb, cb, kEff)
+      .select($"a_id", $"lut")), "ADC LUTs")
+  }
+
+  test("per-row kernels == relational kernels: NaN cosines, exact ties, null and zero-norm vectors, kEff < 16") {
+    val emb = ((1 to 12).map(i => (i.toLong, vec(i))) ++ Seq(
+        (100L, Array.fill(64)(0f)), // zero norm: NaN against every pivot
+        (101L, null.asInstanceOf[Array[Float]]), // null: NULL cosines
+        (102L, vec(3))))
+      .toDF("vec_id", "embedding").localCheckpoint()
+    // p_id 3 is pivot 7 doubled (power-of-two scaling is exact, so the
+    // two cosines tie bit-for-bit and p_id must break it); pivot 9 is
+    // zero-norm, so its NaN cosine ranks FIRST under DESC for every
+    // vector; listed out of p_id order on purpose
+    val piv = Seq((7L, vec(1)), (5L, vec(2)), (3L, vec(1).map(_ * 2f)),
+        (9L, Array.fill(64)(0f)), (1L, vec(4)))
+      .toDF("p_id", "pe").localCheckpoint()
+    // codebooks trained on 5 and on 12 vectors: kEff = 5 and 12
+    val small = graft.operators.Similarity
+      .trainedPqCodebookOf(emb.filter($"vec_id" <= 5L)).localCheckpoint()
+    val mid = graft.operators.Similarity
+      .trainedPqCodebookOf(emb.filter($"vec_id" <= 12L)).localCheckpoint()
+    assert(small.agg(max($"c_id")).head().getInt(0) == 5)
+    assert(mid.agg(max($"c_id")).head().getInt(0) == 12)
+    assertKernelsMatch(emb, piv, small, Seq(0, 1, 3, 5, 9))
+    assertKernelsMatch(emb, piv, mid, Seq(2))
+    // the orderings are exercised: the NaN pivot 9 ranks first for
+    // every vector, and pivot 3 precedes its exact-tie twin 7
+    val k = kernelsOf(piv, small)
+    val top = emb.select($"vec_id", k.near($"embedding", 3).as("n"))
+      .filter($"vec_id" <= 12L).select($"n.p_id").as[Seq[Long]].collect()
+    assert(top.nonEmpty && top.forall(_.take(1) == Seq(9L)))
+    assert(top.exists(_ == Seq(9L, 3L, 7L)))
+  }
+
+  test("per-row kernels == relational kernels on an empty first-touch epoch") {
+    val emb = fixtureVecs.filter($"vec_id" % 7 === 0).select($"vec_id", $"embedding")
+    val piv = spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+      IvfIndex.pivSchema)
+    val cb = spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+      IvfIndex.cbSchema)
+    assertKernelsMatch(emb, piv, cb, Seq(1, 4))
+    val k = kernelsOf(piv, cb)
+    assert(k.kEff == 0)
+    assert(emb.select(size(k.near($"embedding", 4))).as[Int].collect().forall(_ == 0))
+  }
+
+  test("per-row kernels == relational kernels on the fixture epoch (trained 16-centroid codebook)") {
+    val (corpus, index) = freshDirs()
+    IvfIndex.admitBatch(fixtureVecs.filter($"vec_id" % 2 === 0), corpus, index)
+    val piv = spark.read.schema(IvfIndex.pivSchema).parquet(s"$index/piv")
+    val cb = spark.read.schema(IvfIndex.cbSchema).parquet(s"$index/cb")
+    assert(cb.agg(max($"c_id")).head().getInt(0) == 16)
+    assertKernelsMatch(fixtureVecs.select($"vec_id", $"embedding"), piv, cb, Seq(1, 4))
+  }
+
+  test("meta fingerprints from the relational bit_xor fold verify without a rebuild; a tampered piv/ still heals") {
+    val (corpus, index) = freshDirs()
+    IvfIndex.admitBatch((1 to 40).map(i => (i.toLong, vec(i), 0))
+      .toDF("vec_id", "embedding", "label"), corpus, index)
+    // the fold earlier stores were stamped with: xxhash64 per row,
+    // bit_xor aggregate, 0 when empty
+    def relationalFp(store: String, schema: org.apache.spark.sql.types.StructType,
+        cols: Seq[String]): Long =
+      spark.read.schema(schema).parquet(s"$index/$store")
+        .select(xxhash64(cols.map(col): _*).as("h"))
+        .agg(expr("coalesce(bit_xor(h), CAST(0 AS BIGINT))"))
+        .head().getLong(0)
+    def pivFp = relationalFp("piv", IvfIndex.pivSchema, Seq("p_id", "pe"))
+    def cbFp = relationalFp("cb", IvfIndex.cbSchema, Seq("m", "c_id", "fc"))
+    val meta0 = spark.read.parquet(s"$index/meta").head()
+    assert(meta0.getAs[Long]("pivot_fp") == pivFp && meta0.getAs[Long]("cb_fp") == cbFp,
+      "the driver-folded fingerprints must equal the relational fold")
+    // re-stamp meta with the relational values, as an older writer did
+    spark.read.parquet(s"$index/meta")
+      .withColumn("pivot_fp", lit(pivFp)).withColumn("cb_fp", lit(cbFp))
+      .localCheckpoint().coalesce(1).write.mode("overwrite").parquet(s"$index/meta")
+    def nearFiles: Set[String] =
+      new java.io.File(s"$index/near").listFiles().map(_.getName)
+        .filter(_.endsWith(".parquet")).toSet
+    val before = nearFiles
+    // far below the doubling trigger: only a heal could rebuild here
+    IvfIndex.admitBatch(Seq((41L, vec(41), 0), (42L, vec(42), 0))
+      .toDF("vec_id", "embedding", "label"), corpus, index)
+    val after = nearFiles
+    assert(before.subsetOf(after) && after.size > before.size,
+      "a consistent older-stamped epoch must append, not rebuild")
+    // a tampered piv/ with matching counts still triggers the heal
+    spark.read.schema(IvfIndex.pivSchema).parquet(s"$index/piv")
+      .select($"p_id", reverse($"pe").as("pe")).localCheckpoint()
+      .coalesce(1).write.mode("overwrite").parquet(s"$index/piv")
+    IvfIndex.admitBatch(Seq((43L, vec(43), 0)).toDF("vec_id", "embedding", "label"),
+      corpus, index)
+    assert(nearFiles.intersect(after).isEmpty, "the fingerprint heal must rebuild near/")
+    val meta = spark.read.parquet(s"$index/meta").head()
+    assert(meta.getAs[Boolean]("committed") && meta.getAs[Long]("pivot_fp") == pivFp)
+  }
+
+  /** Spark jobs started while `body` runs (listener bus drained on both
+    * sides, so no job is missed or borrowed from a neighbour).
+    */
+  private def jobsOf(body: => Unit): Int = {
+    def drain(): Unit = {
+      val sc = spark.sparkContext
+      val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
+      bus.getClass.getMethod("waitUntilEmpty").invoke(bus)
+    }
+    val n = new java.util.concurrent.atomic.AtomicInteger
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        n.incrementAndGet()
+    }
+    drain()
+    spark.sparkContext.addSparkListener(l)
+    try { body; drain() } finally spark.sparkContext.removeSparkListener(l)
+    n.get
+  }
+
+  test("per-call job budget: an incremental admitBatch and a topK stay within their Spark job counts") {
+    val (corpus, index) = freshDirs()
+    IvfIndex.admitBatch(fixtureVecs.filter($"vec_id" % 4 =!= 3), corpus, index)
+    val n0 = spark.read.parquet(s"$index/meta").head().getLong(0)
+    val batch = fixtureVecs.filter($"vec_id" % 4 === 3).localCheckpoint()
+    val queries = fixtureVecs.filter($"vec_id" % 4 === 0).limit(16)
+      .select($"vec_id", $"embedding").localCheckpoint()
+    val admitJobs = jobsOf(IvfIndex.admitBatch(batch, corpus, index))
+    assert(spark.read.parquet(s"$index/meta").head().getLong(0) == n0,
+      "the measured batch must be incremental (no re-policy rebuild)")
+    val topkJobs = jobsOf(IvfIndex.topK(spark, index, corpus, queries, k = 5).collect())
+    // upper bounds at this fixture's counts: a per-call action added
+    // back fails here
+    assert(admitJobs <= 29, s"incremental admitBatch ran $admitJobs jobs")
+    assert(topkJobs <= 12, s"topK ran $topkJobs jobs")
+  }
+
   test("version guard: an index persisted under different assignment arithmetic refuses probes") {
     val (corpus, index) = freshDirs()
     IvfIndex.admitBatch(fixtureVecs.limit(10), corpus, index)
