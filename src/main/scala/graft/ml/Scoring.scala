@@ -1,6 +1,5 @@
 package graft.ml
 
-import graft.operators.OpUtils.SpreadOps
 import org.apache.spark.ml.{Pipeline, PipelineModel}
 import org.apache.spark.ml.classification.LogisticRegression
 import org.apache.spark.ml.clustering.KMeans
@@ -59,33 +58,5 @@ object Scoring {
       .withColumn("features", array_to_vector($"embedding"))
     val model = new KMeans().setK(k).setSeed(42L).setFeaturesCol("features").fit(vecs)
     model.transform(vecs).select($"vec_id", $"label", $"prediction".as("cluster"))
-  }
-
-  /** IVF-style ANN: KMeans coarse quantizer assigns every vector to a
-    * cluster; queries search only their own cluster's inverted list
-    * (nProbe=1 here) with the exact codegen cosine kernel. The scale
-    * companion to the hyperplane-LSH variant (Similarity.q35AnnLsh):
-    * centroids broadcast, candidate generation is an equi-join on
-    * cluster id — n²/k pairs instead of n². Not oracle-checked (KMeans
-    * initialization is MLlib-internal); quality is asserted in tests
-    * against the brute-force baseline.
-    */
-  def ivfTopK(spark: SparkSession, dir: String, k: Int = 8, topK: Int = 3): DataFrame = {
-    import spark.implicits._
-    import org.apache.spark.sql.expressions.Window
-    val assigned = clusterEmbeddings(spark, dir, k)
-      .join(Tables.embeddings(spark, dir), Seq("vec_id"))
-      .select($"vec_id", $"cluster", $"embedding")
-      .spreadAcrossCores
-      .localCheckpoint()
-    val a = assigned.select($"vec_id".as("a_id"), $"cluster", $"embedding".as("ea"))
-    val b = assigned.select($"vec_id".as("b_id"), $"cluster", $"embedding".as("eb"))
-    val w = Window.partitionBy($"a_id").orderBy($"cs".desc, $"b_id")
-    a.join(b, Seq("cluster"))
-      .filter($"a_id" =!= $"b_id")
-      .withColumn("cs", graft.functions.VectorFunctions.cosineSim($"ea", $"eb"))
-      .withColumn("rk", row_number().over(w))
-      .filter($"rk" <= topK)
-      .select($"a_id", $"rk", $"b_id", $"cluster", $"cs")
   }
 }

@@ -681,8 +681,8 @@ object Dedup {
     * isolation, which is what lets the indexed streaming intake
     * ([[graft.streaming.NearDupIndex]]) maintain a persisted corpus
     * index incrementally instead of re-shingling the corpus per
-    * micro-batch. Values are bit-identical to [[invertedHxFast]] /
-    * [[crossNearDupIds]]'s hashes.
+    * micro-batch. Values are bit-identical to [[crossNearDupIds]]'s
+    * hashes.
     */
   private[graft] def hxOfDocs(docs: DataFrame): DataFrame = {
     val spark = docs.sparkSession
@@ -751,22 +751,6 @@ object Dedup {
       .localCheckpoint()
   }
 
-  /** Diagnostic stage view of [[crossNearDupIds]]: the candidate-pair
-    * relation the cross probe would verify — lets the off-fixture
-    * streaming stress tool (graft.tools.ScaleEvidence `stream`) count
-    * candidate volume per micro-batch without touching the declared path.
-    */
-  private[graft] def crossCandidates(corpus: DataFrame, batch: DataFrame,
-      minJaccard: Double): DataFrame = {
-    val spark = corpus.sparkSession
-    import spark.implicits._
-    val gx = crossGx(corpus, batch)
-    val hx = gx.join(gramDictFast(spark, gx), Seq("g"))
-      .select($"doc_id", $"h").localCheckpoint()
-    val docs = invertedDocsFromHx(spark, hx, minJaccard)
-    invertedCandidatesFromDocs(docs, minJaccard)
-  }
-
   private def ngramJaccardInvertedCore(spark: SparkSession, dir: String,
       minJaccard: Double,
       dict: (SparkSession, DataFrame) => DataFrame): DataFrame =
@@ -786,10 +770,7 @@ object Dedup {
 
   /** The prefix-filter pipeline over a prebuilt hashed (doc_id, h)
     * relation — the branch point: document frequencies, prefixes and
-    * verification sets all derive from it. Split into three
-    * `private[graft]` stages so the off-fixture stress tool
-    * (graft.tools.SSJoinStress) can count candidate pairs separately
-    * from verified output.
+    * verification sets all derive from it, in three stages.
     */
   private def ngramJaccardInvertedFromHx(spark: SparkSession, hx: DataFrame,
       minJaccard: Double): DataFrame = {
@@ -799,7 +780,7 @@ object Dedup {
   }
 
   /** Stage 1: per-doc sorted hash arrays + rarity-ordered prefix length. */
-  private[graft] def invertedDocsFromHx(spark: SparkSession, hx: DataFrame,
+  private def invertedDocsFromHx(spark: SparkSession, hx: DataFrame,
       minJaccard: Double): DataFrame = {
     import spark.implicits._
     val dfreq = hx.groupBy($"h").agg(count(lit(1)).as("df"))
@@ -821,7 +802,7 @@ object Dedup {
   }
 
   /** Stage 2: candidate pairs from the rare-shingle prefix equi-join. */
-  private[graft] def invertedCandidatesFromDocs(docs: DataFrame,
+  private def invertedCandidatesFromDocs(docs: DataFrame,
       minJaccard: Double): DataFrame = {
     import docs.sparkSession.implicits._
     val prefixes = docs
@@ -841,7 +822,7 @@ object Dedup {
   }
 
   /** Stage 3: exact merge-intersection verification of the candidates. */
-  private[graft] def invertedVerifyFromDocs(docs: DataFrame, cand: DataFrame,
+  private def invertedVerifyFromDocs(docs: DataFrame, cand: DataFrame,
       minJaccard: Double): DataFrame = {
     import docs.sparkSession.implicits._
     val da = docs.select($"doc_id".as("a_id"), $"harr".as("ha"), $"n".as("na"))
@@ -855,17 +836,6 @@ object Dedup {
       .filter($"jaccard" >= minJaccard)
       .select($"a_id", $"b_id", $"jaccard")
       .orderBy($"a_id", $"b_id")
-  }
-
-  /** Evidence seam for the stress tool: the hashed (doc_id, h) relation
-    * over the FAST (xxhash64) dictionary — Spark-only deployment naming,
-    * no cross-engine md5 needed off-fixture.
-    */
-  private[graft] def invertedHxFast(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    val gx = gxCheckpointed(spark, dir)
-    gx.join(gramDictFast(spark, gx), Seq("g"))
-      .select($"doc_id", $"h").localCheckpoint()
   }
 
   /** Declared inverted-index dedup at the near-dup threshold (0.7,
@@ -1547,16 +1517,9 @@ object Dedup {
     * replaces the per-round join; the fixpoint driver loop is the same.)
     * Singleton docs (no near-dup) are not emitted, matching the oracle.
     */
-  /** Rounds the most recent component run took — diagnostic for the
-    * stress tool (graft.tools.ComponentStress); not part of the query
-    * contract.
-    */
-  private[graft] val lastRounds = new java.util.concurrent.atomic.AtomicInteger(0)
-
   def dedupClusters(pairs: DataFrame): DataFrame = {
     val spark = pairs.sparkSession
     import spark.implicits._
-    lastRounds.set(0)
     val edges = pairs.select($"a_id".as("s"), $"b_id".as("d"))
       .union(pairs.select($"b_id".as("s"), $"a_id".as("d")))
       .localCheckpoint()
@@ -1585,7 +1548,6 @@ object Dedup {
       org.apache.spark.sql.graft.CheckpointUtils.free(labels)
       changed = next.filter($"lbl" < $"prev").count()
       labels = next.select($"v", $"lbl")
-      lastRounds.incrementAndGet()
     }
     val sizes = labels.groupBy($"lbl").agg(count(lit(1)).as("cluster_size"))
     labels.join(sizes, Seq("lbl"))
@@ -1624,7 +1586,6 @@ object Dedup {
   def dedupClustersStar(pairs: DataFrame): DataFrame = {
     val spark = pairs.sparkSession
     import spark.implicits._
-    lastRounds.set(0)
     val input = pairs.select($"a_id".as("s"), $"b_id".as("d")).localCheckpoint()
     // canonical orientation: (larger, smaller), self-loops dropped from
     // the ITERATION (they carry no connectivity) but their vertices are
@@ -1670,7 +1631,6 @@ object Dedup {
       edges = nextEdges
       prev = cur
       cur = fingerprint(edges)
-      lastRounds.incrementAndGet()
     }
     // converged: stars (node → component min); roots label themselves.
     // Vertices that appeared ONLY in self-pairs never entered the

@@ -634,12 +634,13 @@ object Similarity {
   private val ivfRecallNprobe = 8
 
   /** The measured IVF scaling policy — THE documented constructor for an
-    * IVF index over a corpus of n vectors (r11 `ScaleEvidence ann`
-    * finding, verified by the r12 `ivf-policy` row): a FIXED nlist keeps
-    * the candidate fraction flat but each list grows O(n) (per-query cost
-    * grows linearly), while a √n-grown nlist at FIXED nprobe sees its
-    * candidate fraction — and with it recall — decay as nprobe/nlist
-    * shrinks. The policy that holds BOTH per-list size and recall:
+    * IVF index over a corpus of n vectors (the r11 ANN scaling finding,
+    * NOTES_r11 §8, verified by the r12 policy row, NOTES_r12 §5): a FIXED
+    * nlist keeps the candidate fraction flat but each list grows O(n)
+    * (per-query cost grows linearly), while a √n-grown nlist at FIXED
+    * nprobe sees its candidate fraction — and with it recall — decay as
+    * nprobe/nlist shrinks. The policy that holds BOTH per-list size and
+    * recall:
     *
     *   nlist  = max(4, ⌊√n⌋)          (lists stay ~√n entries)
     *   nprobe = max(1, ⌈nlist / 8⌉)   (candidate fraction pinned ≈ 1/8,
@@ -650,8 +651,8 @@ object Similarity {
     * GREATEST/floor(sqrt)/`//` mirror) compute the identical parameters
     * from the identical count. q226 keeps the frozen fixture-scale sweep
     * point (64, 8) as the tuning artifact; q236 runs THIS policy
-    * oracle-gated, and `ScaleEvidence ann` measures it across 64×
-    * corpus growth.
+    * oracle-gated, and NOTES_r12 §5 records it across 64× corpus
+    * growth.
     */
   private[graft] def ivfPolicyNlist(n: Long): Int =
     math.max(4, math.sqrt(n.toDouble).toInt)
@@ -879,12 +880,6 @@ object Similarity {
     aggregate(zip_with(a, b, (x, y) => (x - y) * (x - y)),
       lit(0.0), (s, v) => s + v)
 
-  /** The PQ-ADC retrieval kernel over ANY (vec_id, embedding) relation —
-    * q239's body, factored so [[graft.tools.ScaleEvidence]] can measure
-    * the identical arithmetic across synthetic corpus growth and byte
-    * budgets. `panel` is a bounded (a_id) query relation; returns the
-    * per-query ADC top-5 as (a_id, b_id).
-    */
   /** L2-normalized view of a (vec_id, embedding) relation — the PQ model
     * domain (zero-norm vectors carry no direction — excluded; the exact
     * arm's isnan filter excludes them too).
@@ -967,9 +962,7 @@ object Similarity {
     graft.functions.VectorFunctions.adcLookupSum(codes, lut, kCent)
 
   /** ADC full-code scan + bounded top-5: packed codes against broadcast
-    * LUTs — the shared tail of [[pqAnnTop5]] and q239 (one definition, so
-    * a scoring/tie-break change cannot desynchronize the memoized path
-    * from the ScaleEvidence kernel).
+    * LUTs — q239's retrieval tail.
     */
   private def pqAdcTop5(codes: DataFrame, lutArr: DataFrame, kCent: Int): DataFrame = {
     val spark = codes.sparkSession
@@ -999,15 +992,6 @@ object Similarity {
       .withColumn("hits", coalesce($"hits", lit(0L)))
       .groupBy($"hits")
       .agg(count(lit(1)).as("n_queries"), sum($"a_id").as("a_checksum"))
-  }
-
-  private[graft] def pqAnnTop5(emb: DataFrame, panel: DataFrame,
-      mSub: Int, subDim: Int, kCent: Int): DataFrame = {
-    val nv = pqNormalized(emb)
-    val cent = pqCentroids(nv, mSub, subDim, kCent)
-    val codes = pqCodesOf(nv, cent, mSub, subDim)
-    val lutArr = pqLutsOf(nv, cent, panel, mSub, subDim, kCent)
-    pqAdcTop5(codes, lutArr, kCent)
   }
 
   /** Version token for anything persisting PQ codes of the adopted
@@ -1044,7 +1028,7 @@ object Similarity {
   // division, verified identical in Spark `div` and DuckDB `//` on
   // negatives) — so training is bit-deterministic under ANY
   // partitioning AND mirrors exactly in unrolled oracle SQL.
-  // Training size/depth measured, not guessed (graft.tools.TrainedPqSweep
+  // Training size/depth measured, not guessed (NOTES_r14 §4: a sweep
   // at the scale audit's decayed point n=128000, grid S ∈ {64,256,1024} ×
   // T ∈ {0,2,4,8}): iters=0 reproduces the fixed codebook exactly
   // (16/160 — Lloyd IS the win, not sample init); S=64 (4 points per
@@ -1052,12 +1036,8 @@ object Similarity {
   // T=4 (32/160); S=1024 — 64 training points per centroid, the classic
   // k-means sizing — keeps improving through T=8 (33→38→41/160).
   // Adopted: 64·K sample, 8 iterations.
-  // private[graft]: ScaleEvidence's measurement arms must reference the
-  // SAME constants the gated kernels use (r14 advisor — a hardcoded
-  // copy would silently desynchronize the evidence from the kernel on
-  // the next re-tune that bumps pqTrainedLogicVersion).
   private val pqTrainSample = 1024
-  private[graft] val pqTrainIters = 8
+  private val pqTrainIters = 8
   private[graft] val pqFreezeScale = 1e6
 
   /** Version token for anything persisting TRAINED-PQ state — bump on
@@ -1104,10 +1084,10 @@ object Similarity {
     * [[lloydSerialOpsBudget]] op count, the bit-identical
     * [[pqTrainedCentroidsSharded]] above it — every caller (the
     * q244/q245/q246 memos, [[trainedCoarsePivots]],
-    * [[graft.streaming.IvfIndex]] epochs, the ScaleEvidence arms) gets
-    * the scale path automatically, and because the two kernels are
-    * bit-equal (spec-pinned, q247 oracle-gated) the dispatch can never
-    * change a gated result.
+    * [[graft.streaming.IvfIndex]] epochs) gets the scale path
+    * automatically, and because the two kernels are bit-equal
+    * (spec-pinned, q247 oracle-gated) the dispatch can never change a
+    * gated result.
     */
   private[graft] def pqTrainedCentroids(nv: DataFrame, mSub: Int,
       subDim: Int, kCent: Int, sampleN: Int, iters: Int): DataFrame =
@@ -1340,19 +1320,6 @@ object Similarity {
         s => s.getField("lf")).as("lut"))
   }
 
-  /** The trained-PQ retrieval kernel over ANY (vec_id, embedding)
-    * relation — q244's body, factored so [[graft.tools.ScaleEvidence]]
-    * measures the identical arithmetic across synthetic corpus growth
-    * (the r14 companion to [[pqAnnTop5]]).
-    */
-  private[graft] def trainedPqAnnTop5(emb: DataFrame, panel: DataFrame,
-      mSub: Int, subDim: Int, kCent: Int, sampleN: Int, iters: Int): DataFrame = {
-    val nv = pqNormalized(emb)
-    val cent = pqTrainedCentroids(nv, mSub, subDim, kCent, sampleN, iters)
-    pqAdcTop5(pqTrainedCodesOf(nv, cent, mSub, subDim),
-      pqTrainedLutsOf(nv, cent, panel, mSub, subDim, kCent), kCent)
-  }
-
   /** Trained codebook as a session memo (256 rows — the training loop
     * runs once per (session, dir), not once per consumer).
     */
@@ -1380,16 +1347,16 @@ object Similarity {
     * sub-vectors. Measured against q239 on the same panel/ground truth,
     * this is the codebook-quality experiment as an oracle-gated query:
     * any recall difference between the two histograms is attributable
-    * to training alone. `ScaleEvidence ann` re-trains per corpus size
-    * and measures the r13 decay finding's answer: across the same 64×
-    * growth where the fixed codebook decays 37→16/160, the trained
-    * codebook holds essentially FLAT past the first rung (59→40→45→41
-    * at s1024/t8 — 2.6× the fixed codebook at n=128k; the first rung is
-    * inflated because the sample is half that corpus). Training closes
-    * the scale defect at this byte budget; the remaining recall gap vs
-    * lsh_tuned/ivf is the 8-byte quantization floor itself, which is
-    * why the composed IVF+PQ pipeline (q242) remains the production
-    * answer — now with a trained codebook available for its
+    * to training alone. The r14 ANN scale run (NOTES_r14 §9) re-trains
+    * per corpus size and measures the r13 decay finding's answer: across
+    * the same 64× growth where the fixed codebook decays 37→16/160, the
+    * trained codebook holds essentially FLAT past the first rung
+    * (59→40→45→41 at s1024/t8 — 2.6× the fixed codebook at n=128k; the
+    * first rung is inflated because the sample is half that corpus).
+    * Training closes the scale defect at this byte budget; the remaining
+    * recall gap vs lsh_tuned/ivf is the 8-byte quantization floor itself,
+    * which is why the composed IVF+PQ pipeline (q242) remains the
+    * production answer — now with a trained codebook available for its
     * quantization stage.
     *
     * At 100 TB: training cost is sample-bounded (a broadcast-sized
@@ -1532,7 +1499,7 @@ object Similarity {
 
   /** The m=1 trained-coarse inverted lists of a normalized relation:
     * (b_id, c_id) — each vector's nearest trained pivot by
-    * frozen-integer L2 (q245's index kernel, shared with ScaleEvidence).
+    * frozen-integer L2 (q245's index kernel).
     */
   private[graft] def trainedCoarseLists(nv: DataFrame, cent: DataFrame): DataFrame = {
     val spark = nv.sparkSession
@@ -1542,7 +1509,7 @@ object Similarity {
   }
 
   /** A panel's nprobe nearest trained pivots by frozen-integer L2:
-    * (a_id, c_id) — q245's probe kernel, shared with ScaleEvidence.
+    * (a_id, c_id) — q245's probe kernel.
     */
   private[graft] def trainedCoarseProbes(nv: DataFrame, cent: DataFrame,
       panel: DataFrame, nprobe: Int): DataFrame =
@@ -1575,24 +1542,17 @@ object Similarity {
     * consume: q245's k-means centroids (frozen-integer Lloyd over the
     * full vectors, 64-points-per-centroid sample, [[pqTrainIters]]
     * iterations) thawed back to FLOAT at the freeze scale. Cosine
-    * ranking against them is scale-invariant in the pivot, and the
-    * ScaleEvidence spherical arm measures it at recall parity with the
-    * gated integer-L2 form across 64× growth.
+    * ranking against them is scale-invariant in the pivot; the r14
+    * spherical arm measured it at recall parity with the gated
+    * integer-L2 form across 64× growth (NOTES_r14 §9).
     */
-  private[graft] def trainedCoarsePivots(emb: DataFrame, nlist: Int): DataFrame =
-    thawedPivots(pqTrainedCentroids(pqNormalized(emb), 1,
-      pqSubspaces * pqSubDim, nlist, 64 * nlist, pqTrainIters))
-
-  /** Frozen m=1 centroids thawed back to the (p_id, pe) FLOAT payload
-    * shape [[ivfNearOf]] consumes — factored so the ScaleEvidence
-    * spherical arm measures the IDENTICAL thaw the production pivots use
-    * (one definition, one [[pqFreezeScale]]; r14 advisor).
-    */
-  private[graft] def thawedPivots(cent: DataFrame): DataFrame = {
-    val spark = cent.sparkSession
+  private[graft] def trainedCoarsePivots(emb: DataFrame, nlist: Int): DataFrame = {
+    val spark = emb.sparkSession
     import spark.implicits._
-    cent.select($"c_id".cast("long").as("p_id"),
-      expr(s"transform(fc, x -> CAST(x / ${pqFreezeScale.toLong}.0D AS FLOAT))").as("pe"))
+    pqTrainedCentroids(pqNormalized(emb), 1, pqSubspaces * pqSubDim, nlist,
+      64 * nlist, pqTrainIters)
+      .select($"c_id".cast("long").as("p_id"),
+        expr(s"transform(fc, x -> CAST(x / ${pqFreezeScale.toLong}.0D AS FLOAT))").as("pe"))
   }
 
   // ——— production-geometry trained-PQ state over ANY corpus ————————————
@@ -1849,7 +1809,7 @@ object Similarity {
     *
     * At 100 TB this is the kernel that actually runs: the √n policy
     * grows nlist past the serial driver loop's feasibility around
-    * K ≈ 1000 (ScaleEvidence `lloyd`: serial 20.7 s at K=1024 on its
+    * K ≈ 1000 (NOTES_r15 §2: serial 20.7 s at K=1024 on its
     * K² law vs sharded 3.3 s, and sharded 33.5 s at K=4096 where
     * serial extrapolates to ~5.5 min).
     */
@@ -2138,8 +2098,7 @@ object Similarity {
     import spark.implicits._
     val exact = exactPanelTop5(spark, dir)
     val panel = samplePanel(spark, dir, topkPanelK).select($"vec_id".as("a_id"))
-    // the same stage composition as [[pqAnnTop5]], with the code
-    // relation riding the session memo (one build per session/dir)
+    // the code relation rides the session memo (one build per session/dir)
     val nv = pqNormalized(Tables.embeddings(spark, dir))
     val cent = pqCentroids(nv, pqSubspaces, pqSubDim, pqCodebookK)
     val lutArr = pqLutsOf(nv, cent, panel, pqSubspaces, pqSubDim, pqCodebookK)
@@ -2206,15 +2165,16 @@ object Similarity {
     * `IndexIVFPQ` shape) — q226's coarse quantizer prunes the corpus to
     * nprobe/nlist of its inverted lists, q239's frozen ADC scores the
     * survivors from 8-byte codes. This is the operator the PQ scale
-    * audit says a 100 TB deployment actually runs: `ScaleEvidence ann`
-    * measured that standalone-PQ recall decays across corpus growth
-    * (fixed codebook, densifying competitors) while IVF's policy holds
-    * its candidate fraction — composed, the scan touches only the CODES
-    * of ~12% of the corpus per query: neither the raw vectors (PQ's
-    * 32× memory win) nor the full code relation (IVF's pruning win).
-    * Same exact-panel overlap histogram as q225/q226/q236/q239, so the
-    * four-way table reads: what recall survives pruning alone (q226),
-    * quantization alone (q239), and both (this query).
+    * audit says a 100 TB deployment actually runs: the r13 ANN scale run
+    * (NOTES_r13 §10) measured that standalone-PQ recall decays across
+    * corpus growth (fixed codebook, densifying competitors) while IVF's
+    * policy holds its candidate fraction — composed, the scan touches
+    * only the CODES of ~12% of the corpus per query: neither the raw
+    * vectors (PQ's 32× memory win) nor the full code relation (IVF's
+    * pruning win). Same exact-panel overlap histogram as
+    * q225/q226/q236/q239, so the four-way table reads: what recall
+    * survives pruning alone (q226), quantization alone (q239), and both
+    * (this query).
     *
     * Scale shape: the IVF probe kernel is q226's (one n×nlist pass,
     * checkpointed, feeding index and probes); candidates join the
@@ -2569,15 +2529,15 @@ object Similarity {
     * synthetic near-dup clone = normalize(v + 0.15 · v_next), where
     * `v_next` is the cyclically-next corpus vector's direction — a
     * deterministic, RNG-free, oracle-expressible perturbation whose
-    * cosine to the source lands ≈ 0.985–0.99 (the `ScaleEvidence
-    * ivfindex` clone discipline; n_above_gate reports how many actually
-    * clear 0.92). The clone then plays the LATER arrival of
-    * [[graft.streaming.IvfIndex.admitBatch]]'s asymmetric criterion —
-    * caught at (k, R) iff the clone's k-probe set intersects the
-    * source's rk ≤ R membership under the SAME fixture-trained coarse
+    * cosine to the source lands ≈ 0.985–0.99 (the clone discipline of the
+    * r15 evidence-scale intake ladder, NOTES_r15 §5; n_above_gate reports
+    * how many actually clear 0.92). The clone then plays the LATER
+    * arrival of [[graft.streaming.IvfIndex.admitBatch]]'s asymmetric
+    * criterion — caught at (k, R) iff the clone's k-probe set intersects
+    * the source's rk ≤ R membership under the SAME fixture-trained coarse
     * centroids — and the grid reports n_caught per
     * (admit_nprobe, admit_list_rk) cell. The committed, judge-diffable
-    * companion to the `ScaleEvidence ivfindex` ladder — and the two
+    * companion to that ladder — and the two
     * TOGETHER are the honest story, because catch-rate is
     * CORPUS-GEOMETRY-DEPENDENT: on the clustered fixture the
     * corpus-direction perturbation keeps the clone inside its source's
@@ -2750,7 +2710,7 @@ object Similarity {
     * steady-state recall-query wall milliseconds, frozen constants from
     * the r14 quiet-box bench at sf0.1 (load_start 0.25; raw = q34's
     * exact panel scan, lsh_tuned = q225, ivf = q226, pq = q239;
-    * pq_trained from a same-box warm MiniSuite rep — its first bench
+    * pq_trained from a same-box warm rep, NOTES_r14 §7 — its first bench
     * appearance is this round's closing run). Frozen, not live-timed:
     * a live timing column could never be oracle-stable, and the gate's
     * value is the integrity of the recall-per-byte-per-second TABLE,

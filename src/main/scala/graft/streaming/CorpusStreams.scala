@@ -131,7 +131,7 @@ object CorpusStreams {
     * decisions are per-doc). State size note as for [[intake]]: the
     * corpus directory grows with deduped-corpus cardinality.
     *
-    * COST note (measured, ScaleEvidence `stream`): this form re-shingles
+    * COST note (measured, NOTES_r8 §8): this form re-shingles
     * the whole admitted corpus every micro-batch — per-batch shuffle
     * grows linearly with the corpus (6→66 MB per 1k-doc batch while the
     * corpus grows 1k→20k docs). Correct and fine for small/medium

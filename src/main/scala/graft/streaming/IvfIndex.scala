@@ -245,15 +245,15 @@ object IvfIndex extends IndexLifecycle {
     * rebuild TRAINS the epoch's pivots (q245's frozen-integer Lloyd, 64
     * points per centroid, 8 iterations) and freezes the centroids as
     * the `piv/` payload. Assignment stays the cosine [[ivfNearOf]]
-    * kernel either way — validated by the `ScaleEvidence ann`
-    * spherical arm: cosine-ranked assignment against trained centroids
-    * matches the gated q245 integer-L2 form's recall at every rung of
-    * 64× growth (73/85/97/105 vs 73/82/94/106 of 160), because cosine
-    * is scale-invariant in the pivot. The flag only steers the NEXT
-    * rebuild; probes always rank against the FROZEN stored payload, so
-    * epochs stay internally consistent whatever the flag does later —
-    * and the meta fingerprint makes a toggle-plus-crash window
-    * detectable (see [[rebuild]]).
+    * kernel either way — validated by the r14 ANN scale run's spherical
+    * arm (NOTES_r14 §9): cosine-ranked assignment against trained
+    * centroids matches the gated q245 integer-L2 form's recall at every
+    * rung of 64× growth (73/85/97/105 vs 73/82/94/106 of 160), because
+    * cosine is scale-invariant in the pivot. The flag only steers the
+    * NEXT rebuild; probes always rank against the FROZEN stored payload,
+    * so epochs stay internally consistent whatever the flag does later —
+    * and the meta fingerprint makes a toggle-plus-crash window detectable
+    * (see [[rebuild]]).
     */
   private def trainedPivots(spark: SparkSession): Boolean =
     spark.conf.getOption("spark.graft.ivfIndex.trainedPivots")

@@ -43,8 +43,8 @@ import org.apache.spark.sql.types.{ArrayType, LongType, StructField, StructType}
   * O(log n) times, amortized O(1) per admitted document (the classic
   * doubling argument). Between rebuilds, newly-emerged common shingles
   * (df 0 in the snapshot → treated rarest) cost extra candidates, never
-  * missed pairs; the ScaleEvidence `stream indexed` run measures that
-  * drift staying flat at 20× growth.
+  * missed pairs; the r8 indexed stress run measured that drift staying
+  * flat at 20× growth (NOTES_r8 §8).
   *
   * '''Single writer.''' One intake query per (corpus, index) pair — the
   * standard streaming-sink contract (the checkpoint serializes batches
@@ -145,15 +145,9 @@ object NearDupIndex extends IndexLifecycle {
         expr("slice(by_rarity, 1, plen)").as("prefix"))
   }
 
-  /** Batch doc_ids near-duplicate (bigram Jaccard ≥ minJaccard) of any
-    * indexed corpus doc. Candidate generation probes the persisted
-    * prefix index with the batch's prefixes; verification fetches arrays
-    * for candidate partners only. Every corpus-sided join broadcasts the
-    * batch-derived side, so the stores are only ever SCANNED.
-    */
   /** Candidate stage: batch prefixes probe the persisted index with the
-    * SSJoin length filter (see Dedup.invertedCandidatesFromDocs — the -1
-    * slack keeps the FP comparison conservative).
+    * SSJoin length filter (as in Dedup's inverted-index candidates —
+    * the -1 slack keeps the FP comparison conservative).
     */
   private def candidatePairs(spark: SparkSession, indexDir: String,
       batchIdx: DataFrame, minJaccard: Double): DataFrame = {
@@ -169,17 +163,6 @@ object NearDupIndex extends IndexLifecycle {
       .distinct()
   }
 
-  /** Diagnostic (ScaleEvidence `stream indexed`): candidate volume the
-    * indexed probe would generate for a raw (doc_id, text) batch under
-    * the current index state.
-    */
-  def candidateCount(spark: SparkSession, indexDir: String,
-      batch: DataFrame, minJaccard: Double = 0.7): Long =
-    candidatePairs(spark, indexDir,
-      indexRows(graft.operators.Dedup.hxOfDocs(batch),
-        readOrEmpty(spark, s"$indexDir/rank", rankSchema), minJaccard),
-      minJaccard).count()
-
   /** Plan view for PlanSpec: the full per-batch rejection pipeline
     * (index → candidates → verify) over the current stores, no writes —
     * pins the no-corpus-shuffle property structurally.
@@ -194,10 +177,15 @@ object NearDupIndex extends IndexLifecycle {
       candidatePairs(spark, indexDir, bi, minJaccard), minJaccard)
   }
 
-  /** Near-dup batch ids plus the candidate count the probe generated
+  /** Batch doc_ids near-duplicate (bigram Jaccard ≥ minJaccard) of any
+    * indexed corpus doc, plus the candidate count the probe generated
     * (the drift observable the storm guard in [[admitBatch]] acts on).
-    * The candidate relation is checkpointed so counting it and feeding
-    * the verify join are one probe execution, not two.
+    * Candidate generation probes the persisted prefix index with the
+    * batch's prefixes; verification fetches arrays for candidate
+    * partners only. Every corpus-sided join broadcasts the batch-derived
+    * side, so the stores are only ever SCANNED. The candidate relation
+    * is checkpointed so counting it and feeding the verify join are one
+    * probe execution, not two.
     */
   private def nearDupBatchIds(spark: SparkSession, indexDir: String,
       batchIdx: DataFrame, minJaccard: Double,

@@ -97,4 +97,31 @@ class ToolchainSpec extends AnyFunSuite with SparkSpec {
     assert(Set[DataType](LongType, TimestampNTZType, TimestampType)
       .contains(ev("ts")), s"events.ts raw = ${ev("ts")} — normalizeEventTs has no branch for this")
   }
+
+  test("documents.doc_id is unique (the data contract q143/q148 rely on)") {
+    // q143/q148 de-duplicate shingles with a per-doc array_distinct, which
+    // equals the oracle's corpus-wide SELECT DISTINCT only when no doc_id
+    // repeats
+    val r = Tables.documents(spark, sfDir)
+      .selectExpr("count(*) AS n", "count(DISTINCT doc_id) AS d").head()
+    assert(r.getLong(0) === r.getLong(1),
+      s"documents has ${r.getLong(0)} rows but ${r.getLong(1)} distinct doc_ids; " +
+        "q143/q148's per-doc array_distinct no longer matches the oracle's DISTINCT")
+  }
+
+  test("src/main declares exactly the five program entry points") {
+    // one-off measurement programs belong in a spec or a scratch checkout,
+    // not in the engine's source tree
+    import java.nio.file.{Files, Paths}
+    import scala.jdk.CollectionConverters._
+    val root = Paths.get("src/main/scala")
+    val files = Files.walk(root).iterator().asScala
+      .filter(_.toString.endsWith(".scala")).toSeq
+    val mains = files.flatMap { f =>
+      val n = "def main\\(".r.findAllIn(Files.readString(f)).size
+      Seq.fill(n)(root.relativize(f).toString.stripSuffix(".scala").replace('/', '.'))
+    }
+    assert(mains.sorted === Seq("graft.Bench", "graft.Main", "graft.Verify",
+      "graft.tools.Explain", "graft.tools.PlanLedger"))
+  }
 }

@@ -46,6 +46,27 @@ class DedupStarSpec extends AnyFunSuite with SparkSpec {
     assert(star == Set((7L, 7L, 1L), (1L, 1L, 2L), (2L, 1L, 2L)))
   }
 
+  test("both component loops hold O(1) checkpoint generations whatever the chain length") {
+    // each round frees round N-1's checkpoint blocks (CheckpointUtils.free)
+    // once round N is materialized, so the RDDs a call leaves persisted
+    // must not grow with the rounds a longer chain takes (propagation needs
+    // one round per hop here)
+    val sc = spark.sparkContext
+    def retained(hops: Long, star: Boolean): Int = {
+      val df = (0L until hops).map(i => (i, i + 1)).toDF("a_id", "b_id")
+      val before = sc.getPersistentRDDs.keySet
+      val out = if (star) Dedup.dedupClustersStar(df) else Dedup.dedupClusters(df)
+      val grown = (sc.getPersistentRDDs.keySet -- before).size
+      assert(out.count() == hops + 1)
+      grown
+    }
+    for (star <- Seq(false, true)) {
+      val short = retained(4, star)
+      val long = retained(32, star)
+      assert(long == short, s"star=$star: a 4-hop chain left $short persisted RDDs, a 32-hop chain $long")
+    }
+  }
+
   test("star components match propagation on the q31 near-dup pairs") {
     val pairs = Dedup.q31MinhashLsh(spark, sfDir)
       .select("a_id", "b_id").collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
