@@ -2454,8 +2454,8 @@ object Similarity {
         min(when($"ra" === 1, $"rb")).as("rb_k1"),
         min(when($"ra" <= 2, $"rb")).as("rb_k2"))
     val need = pairs.join(ov, Seq("a_id", "b_id"), "left")
-    // ONE aggregation pass over the whole 16-cell grid (a broadcast
-    // grid × need left join, the oracle's own shape) — the r16 first
+    // ONE aggregation pass over the whole 16-cell grid (a grid × need
+    // left join, the oracle's own shape) — the r16 first
     // cut ran 16 separate agg jobs over a checkpointed relation and
     // paid ~0.15 s of job overhead per cell
     val grid = (for {
@@ -2465,7 +2465,7 @@ object Similarity {
     } yield (lbl, th, k, r)).toDF("thresh", "tv", "kb", "rb")
     val ra = when($"kb" === 1, $"ra_k1").otherwise($"ra_k2")
     val rbDir = when($"kb" === 1, $"rb_k1").otherwise($"rb_k2")
-    broadcast(grid).join(need, lit(true), "left")
+    grid.join(need, lit(true), "left")
       .groupBy($"thresh", $"kb", $"rb")
       .agg(coalesce(sum(when($"cs" >= $"tv", 1L)), lit(0L)).as("n_pairs"),
         coalesce(sum(when($"cs" >= $"tv" && ra <= $"rb", 1L)), lit(0L))
@@ -2592,7 +2592,7 @@ object Similarity {
     val grid = (for { k <- Seq(1, 2); r <- Seq(1, 2, 4, 8) }
       yield (k, r)).toDF("kb", "rb")
     val rs = when($"kb" === 1, $"rs_k1").otherwise($"rs_k2")
-    broadcast(grid).join(ov, lit(true), "left")
+    grid.join(ov, lit(true), "left")
       .groupBy($"kb", $"rb")
       .agg(count($"vec_id").as("n_clones"),
         coalesce(sum(when($"cs" >= 0.92, 1L)), lit(0L)).as("n_above_gate"),

@@ -1727,7 +1727,7 @@ object TextAnalysis {
     val ov = lex.join(sem, Seq("doc_id"))
       .select(explode(expr("sequence(greatest(r_lex, r_sem), 10)")).as("depth"))
       .groupBy($"depth").agg(count(lit(1)).as("overlap"))
-    val terms = broadcast(weights).join(ov, Seq("depth"), "left")
+    val terms = weights.join(ov, Seq("depth"), "left")
       .withColumn("overlap", coalesce($"overlap", lit(0L)))
       .withColumn("term_scaled", $"w" * $"overlap")
     terms.crossJoin(broadcast(terms.agg(sum($"term_scaled").as("t"))))

@@ -170,14 +170,18 @@ private[streaming] trait IndexLifecycle {
     * emit batch ids with any indexed neighbor at `cosine >= maxCosine`.
     * `cand` is (a_id = corpus side, b_id = batch side); `vecSchema` is
     * the corpus store schema (vec_id, embedding, ...).
+    *
+    * The result is a multiset: a batch id repeats once per rejecting
+    * candidate pair. Its consumers only anti-join on it, which needs no
+    * unique keys, so no shuffle is paid to de-duplicate it.
     */
   protected final def cosineRejectedIds(spark: SparkSession,
       corpusDir: String, vecSchema: StructType, batch: DataFrame,
       cand: DataFrame, maxCosine: Double): DataFrame = {
     val corpus = readOrEmpty(spark, corpusDir, vecSchema)
-    val ca = corpus.join(broadcast(cand.select(col("a_id")).distinct()),
-        corpus("vec_id") === col("a_id"))
-      .select(col("a_id"), col("embedding").as("ea"))
+    val ca = corpus.join(broadcast(cand.select(col("a_id"))),
+        corpus("vec_id") === col("a_id"), "left_semi")
+      .select(col("vec_id").as("a_id"), col("embedding").as("ea"))
     val cb = batch.select(col("vec_id").as("b_id"), col("embedding").as("eb"))
     cand
       .join(broadcast(cb), Seq("b_id"))
@@ -185,6 +189,5 @@ private[streaming] trait IndexLifecycle {
       .withColumn("cs", graft.functions.VectorFunctions.cosineSim(col("ea"), col("eb")))
       .filter(!isnan(col("cs")) && col("cs") >= maxCosine)
       .select(col("b_id").as("vec_id"))
-      .distinct()
   }
 }

@@ -69,21 +69,28 @@ import org.apache.spark.sql.types.{ArrayType, BooleanType, FloatType, IntegerTyp
   * available as `spark.graft.ivfIndex.exactVerify=true`.
   *
   * Per-batch cost = batch + candidates, not a fixed scheduling bill.
-  * Each call ([[admitBatch]], [[topK]], [[rebuild]]) loads its epoch
-  * ONCE onto the driver: one `meta/` read, one collect per bounded store
+  * Each call ([[admitBatch]], [[topK]], [[rebuild]]) holds its epoch
+  * on the driver: one `meta/` read, one collect per bounded store
   * (`piv/` is ⌊√n⌋ rows, `cb/` ≤ 256) carrying a per-row xxhash64 that
-  * is XOR-folded into the consistency fingerprints. Assignment, PQ
+  * is XOR-folded into the consistency fingerprints. The epoch is
+  * loaded ONCE per JVM while its stores are unchanged: the last one
+  * loaded or committed per `indexDir` is kept with the (path, length,
+  * mtime) listing of `meta/`, `piv/` and `cb/`, and a later call whose
+  * listing matches takes it without a job (a rewrite gets fresh
+  * part-file names, so it always misses); the version, committed and
+  * fingerprint checks still run on every call. Assignment, PQ
   * coding and ADC LUTs then run as per-row, map-only [[IvfKernels]]
   * over that epoch — bit-equal to the relational `Similarity` kernels,
   * with no window or group-by shuffle and no partition-count probe.
   * The list store is only ever SCANNED against a broadcast of the
   * batch's probe rows, and raw-vector fetches are gray-band only — no
   * corpus-sized shuffle anywhere (the all-broadcast probe-plan pin).
-  * Spark jobs per call, relational kernels with per-call store reads →
-  * this form, on perfbench's `vector_ingest` episode (1,088 vectors in
-  * batches of 512/128/448, a 64-query topK after each): bootstrap
-  * admission 41 → 24, incremental 52 → 30, re-policy 63 → 37, topK
-  * 20 → 12 — 216 → 127 per episode.
+  * Id filters are semi- and anti-joins on broadcast keys, which need
+  * no unique keys, so no shuffle is paid to de-duplicate them.
+  * Spark jobs per call on perfbench's `vector_ingest` episode (1,088
+  * vectors in batches of 512/128/448, a 64-query topK after each):
+  * bootstrap admission 25, incremental 20, re-policy 26, topK 7 — 92
+  * per episode.
   *
   * Crash story identical to the siblings: corpus parquet is the source
   * of truth, stores append after it, pre-probe divergence heal rebuilds
@@ -179,15 +186,57 @@ object IvfIndex extends IndexLifecycle {
     (rows, rows.foldLeft(0L)((fp, r) => fp ^ r.getLong(cols.length)))
   }
 
-  /** The epoch as stored under `indexDir`: one meta read, one collect
-    * per bounded store.
+  private type Listing = Seq[(String, Long, Long)]
+
+  /** The file identity of the epoch stores (`meta/`, `piv/`, `cb/`):
+    * (path, length, mtime) per file — a metadata-only listing. Spark's
+    * overwrite writes fresh part-file names, so any rewrite of these
+    * stores changes it.
+    */
+  private def epochListing(spark: SparkSession, indexDir: String): Listing =
+    Seq("meta", "piv", "cb").flatMap { d =>
+      val p = new org.apache.hadoop.fs.Path(s"$indexDir/$d")
+      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      if (!fs.exists(p)) Nil
+      else fs.listStatus(p).toSeq
+        .map(s => (s.getPath.toString, s.getLen, s.getModificationTime))
+        .sortBy(_._1)
+    }
+
+  /** The last epoch loaded or committed per `indexDir`, with the listing
+    * it was read from or written under — so a stream's calls in one JVM
+    * load an unchanged epoch once. LRU, a few dirs: the entries are
+    * driver-side copies of bounded stores.
+    */
+  private val snapshots = new java.util.LinkedHashMap[String, (Listing, Epoch)](8, 0.75f, true) {
+    override def removeEldestEntry(e: java.util.Map.Entry[String, (Listing, Epoch)]): Boolean =
+      size() > 4
+  }
+
+  private def remember(spark: SparkSession, indexDir: String, epoch: Epoch): Unit = {
+    val listing = epochListing(spark, indexDir)
+    snapshots.synchronized { snapshots.put(indexDir, (listing, epoch)) }
+  }
+
+  /** The epoch as stored under `indexDir`: the snapshot when the stores'
+    * listing is unchanged since it was taken, else one meta read and one
+    * collect per bounded store — kept only if the stores did not change
+    * under the read.
     */
   private def loadEpoch(spark: SparkSession, indexDir: String): Epoch = {
-    val (piv, pivotFp) = collectHashed(
-      readOrEmpty(spark, s"$indexDir/piv", pivSchema), pivCols)
-    val (cb, cbFp) = collectHashed(
-      readOrEmpty(spark, s"$indexDir/cb", cbSchema), cbCols)
-    Epoch(metaRow(spark, indexDir), IvfKernels(piv, cb), pivotFp, cbFp)
+    val before = epochListing(spark, indexDir)
+    snapshots.synchronized { Option(snapshots.get(indexDir)) }
+      .collect { case (l, e) if l == before => e }
+      .getOrElse {
+        val (piv, pivotFp) = collectHashed(
+          readOrEmpty(spark, s"$indexDir/piv", pivSchema), pivCols)
+        val (cb, cbFp) = collectHashed(
+          readOrEmpty(spark, s"$indexDir/cb", cbSchema), cbCols)
+        val e = Epoch(metaRow(spark, indexDir), IvfKernels(piv, cb), pivotFp, cbFp)
+        if (epochListing(spark, indexDir) == before)
+          snapshots.synchronized { snapshots.put(indexDir, (before, e)) }
+        e
+      }
   }
 
   private def requireVersion(indexDir: String, m: Meta): Unit =
@@ -471,7 +520,9 @@ object IvfIndex extends IndexLifecycle {
     val gray = bands.filter(!$"certain").select($"a_id", $"b_id")
     val grayRejected = cosineRejectedIds(spark, corpusDir, vecSchema,
       batch, gray, maxCosine)
-    certain.union(grayRejected).distinct()
+    // may repeat ids (a batch vector on several certain or gray rows):
+    // the one consumer anti-joins on it
+    certain.union(grayRejected)
   }
 
   /** Diagnostic band census of one batch's admission-shaped ADC
@@ -552,19 +603,20 @@ object IvfIndex extends IndexLifecycle {
     * [[admitBatch]] (never re-stamped with first-touch params).
     */
   def rebuild(spark: SparkSession, corpusDir: String, indexDir: String): Long =
-    rebuildEpoch(spark, corpusDir, indexDir).meta.map(_.n).getOrElse(0L)
+    rebuildEpoch(spark, corpusDir, indexDir, None).meta.map(_.n).getOrElse(0L)
 
-  /** [[rebuild]], returning the epoch it committed — so a healing or
-    * re-policying [[admitBatch]] probes with it instead of re-reading
-    * the stores it just wrote.
+  /** [[rebuild]], returning the epoch it committed — so a healing
+    * [[admitBatch]] probes with it instead of re-reading the stores it
+    * just wrote, and the next call finds it in the snapshot. `rows` is
+    * the corpus row count when the caller already holds it.
     */
   private def rebuildEpoch(spark: SparkSession, corpusDir: String,
-      indexDir: String): Epoch = {
+      indexDir: String, rows: Option[Long]): Epoch = {
     import spark.implicits._
     val sim = graft.operators.Similarity
     val corpus = readOrEmpty(spark, corpusDir, vecSchema)
       .select($"vec_id", $"embedding")
-    val n = corpus.count()
+    val n = rows.getOrElse(corpus.count())
     val nlist = sim.ivfPolicyNlist(n)
     val nprobe = sim.ivfPolicyNprobe(nlist)
     // admission membership depth for THIS epoch (frozen into meta): the
@@ -594,8 +646,10 @@ object IvfIndex extends IndexLifecycle {
       .parquet(s"$indexDir/near")
     writeMeta(spark, indexDir, n, nlist, nprobe, payloadRk, pivotSrc,
       fpPiv, fpCb, committed = true)
-    Epoch(Some(Meta(n, nlist, nprobe, payloadRk, sim.ivfLogicVersion,
+    val epoch = Epoch(Some(Meta(n, nlist, nprobe, payloadRk, sim.ivfLogicVersion,
       fpPiv, fpCb, committed = true)), kernels, fpPiv, fpCb)
+    remember(spark, indexDir, epoch)
+    epoch
   }
 
   /** One micro-batch of IVF-indexed admission: reject batch vectors with
@@ -623,14 +677,23 @@ object IvfIndex extends IndexLifecycle {
     // Pre-probe self-heal ([[IndexLifecycle.healIfNeeded]] — ordering
     // argument in the trait doc), extended with the epoch-consistency
     // check: counts catch orphaned rows, fingerprints + the committed
-    // flag catch mixed-epoch state the counts cannot see.
-    val preIdxCount = readOrEmpty(spark, s"$indexDir/near", nearSchema)
-      .select($"vec_id").distinct().count()
-    val preCorpusCount = readOrEmpty(spark, corpusDir, vecSchema).count()
+    // flag catch mixed-epoch state the counts cannot see. Both counts
+    // come from ONE aggregate over the tagged union of the two stores;
+    // the struct keeps a NULL vec_id a distinct value, as `distinct()`
+    // counted it.
+    val counts = readOrEmpty(spark, s"$indexDir/near", nearSchema)
+      .select(lit(true).as("idx"), $"vec_id")
+      .union(readOrEmpty(spark, corpusDir, vecSchema)
+        .select(lit(false).as("idx"), lit(null).cast(LongType).as("vec_id")))
+      .agg(countDistinct(when($"idx", struct($"vec_id"))),
+        count(when(!$"idx", lit(1))))
+      .head()
+    val preIdxCount = counts.getLong(0)
+    val preCorpusCount = counts.getLong(1)
     var epoch = loaded
     var healed = false
     def doRebuild(): Unit = {
-      epoch = rebuildEpoch(spark, corpusDir, indexDir); healed = true
+      epoch = rebuildEpoch(spark, corpusDir, indexDir, None); healed = true
     }
     loaded.meta match {
       case None =>
@@ -643,6 +706,7 @@ object IvfIndex extends IndexLifecycle {
             if (trainedPivots(spark)) "trained" else "policy", 0L, 0L,
             committed = true)
           epoch = loaded.copy(meta = Some(m0))
+          remember(spark, indexDir, epoch)
         }
       case Some(m) =>
         val epochConsistent = m.committed &&
@@ -662,8 +726,10 @@ object IvfIndex extends IndexLifecycle {
     val payloadRkEpoch = meta.payloadRk
     val storeRkEpoch = math.max(nprobe, payloadRkEpoch)
     val existingIds = readOrEmpty(spark, corpusDir, vecSchema).select($"vec_id")
+    // a semi-join, not a de-duplicated inner join: its only consumer is
+    // the anti-join below, which needs no unique keys
     val idHits = existingIds
-      .join(broadcast(batch.select($"vec_id")), Seq("vec_id")).distinct()
+      .join(broadcast(batch.select($"vec_id")), Seq("vec_id"), "left_semi")
     // in-batch exact-id dedup — same rationale and winner rule as
     // [[AnnIndex.admitBatch]] (a duplicated vec_id in one batch would
     // wedge the row-vs-distinct heal into perpetual rebuilds). The same
@@ -710,19 +776,22 @@ object IvfIndex extends IndexLifecycle {
     // the incremental append is skipped, the rebuild already indexed
     // the admitted rows. corpusTotal is derived (pre-heal count + this
     // batch's admissions — fresh ids are by construction absent from
-    // the corpus), not a second full count.
+    // the corpus), not a second full count; the rebuilds take it as
+    // their corpus size.
     val corpusTotal = preCorpusCount + nAdmitted
     if (corpusTotal >= 2L * math.max(1L, lastN) ||
         (lastN == 0L && corpusTotal > 0L)) {
-      rebuild(spark, corpusDir, indexDir)
+      rebuildEpoch(spark, corpusDir, indexDir, Some(corpusTotal))
     } else {
       // the admitted rows already carry their frozen-epoch assignment
-      // and payload: the append is a projection, no join
-      storeRows(admitted, payloadRkEpoch)
-        .repartition(appendWriters(spark, nAdmitted), $"p_id")
+      // and payload: the append is a projection, no join. One writer
+      // needs no shuffle: clustering by p_id into one file buys nothing.
+      val writers = appendWriters(spark, nAdmitted)
+      val rows = storeRows(admitted, payloadRkEpoch)
+      (if (writers == 1) rows.coalesce(1) else rows.repartition(writers, $"p_id"))
         .write.mode("append").parquet(s"$indexDir/near")
       compactIfOverCap(spark, Seq(s"$indexDir/near")) {
-        rebuild(spark, corpusDir, indexDir)
+        rebuildEpoch(spark, corpusDir, indexDir, Some(corpusTotal))
       }
     }
     } finally ck.freeAll()
@@ -800,9 +869,9 @@ object IvfIndex extends IndexLifecycle {
       val short = adcTop
         .select($"q_id", explode($"top.b_id").as("n_id"))
       val raw = readOrEmpty(spark, corpusDir, vecSchema)
-        .join(broadcast(short.select($"n_id").distinct()),
-          col("vec_id") === col("n_id"))
-        .select($"n_id", $"embedding".as("en"))
+        .join(broadcast(short.select($"n_id")), col("vec_id") === col("n_id"),
+          "left_semi")
+        .select($"vec_id".as("n_id"), $"embedding".as("en"))
       val qe = q.select($"vec_id".as("q_id"), $"embedding".as("eq"))
       val topk = graft.functions.TopKByScore(k)
       short

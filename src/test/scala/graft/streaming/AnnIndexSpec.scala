@@ -80,6 +80,31 @@ class AnnIndexSpec extends AnyFunSuite with SparkSpec {
     assert(plan.contains("BroadcastHashJoin"))
   }
 
+  test("a batch vector with several indexed near-duplicates is rejected once; no id is duplicated") {
+    val (corpus, index) = freshDirs()
+    val rnd = new scala.util.Random(7)
+    def gauss(): Array[Float] = Array.fill(64)(rnd.nextGaussian().toFloat)
+    val base = gauss()
+    def nearCopy(): Array[Float] = base.map(x => x + 0.01f * rnd.nextGaussian().toFloat)
+    // ids 1-3 are near-copies of `base`, all admitted in-batch
+    val corpusRows = (1 to 3).map(i => (i.toLong, nearCopy(), 0)) ++
+      (4 to 40).map(i => (i.toLong, gauss(), 0))
+    AnnIndex.admitBatch(corpusRows.toDF("vec_id", "embedding", "label"), corpus, index)
+    val batch = Seq((101L, base, 0), (102L, gauss(), 0))
+      .toDF("vec_id", "embedding", "label").localCheckpoint()
+    // the rejected relation is a multiset: 101 repeats once per
+    // rejecting near-copy
+    val rejected = AnnIndex.batchProbePlan(spark, index, corpus, batch, 0.92)
+      .as[Long].collect().toSeq
+    assert(rejected.count(_ == 101L) >= 2 && !rejected.contains(102L),
+      s"101 should reject through several corpus rows: $rejected")
+    AnnIndex.admitBatch(batch, corpus, index)
+    val ids = spark.read.schema(AnnIndex.vecSchema).parquet(corpus)
+      .select($"vec_id").as[Long].collect().toSeq
+    assert(ids.size == ids.distinct.size, s"duplicated corpus ids: ${ids.diff(ids.distinct)}")
+    assert(ids.toSet == (1L to 40L).toSet + 102L, s"admitted ${ids.toSet.diff((1L to 40L).toSet)}")
+  }
+
   test("version guard: an index persisted under different LSH parameters refuses probes") {
     val (corpus, index) = freshDirs()
     AnnIndex.admitBatch(fixtureVecs.limit(10), corpus, index)

@@ -630,25 +630,30 @@ class IvfIndexSpec extends AnyFunSuite with SparkSpec {
     assert(meta.getAs[Boolean]("committed") && meta.getAs[Long]("pivot_fp") == pivFp)
   }
 
-  /** Spark jobs started while `body` runs (listener bus drained on both
-    * sides, so no job is missed or borrowed from a neighbour).
+  /** The call site of every Spark job started while `body` runs
+    * (listener bus drained on both sides, so no job is missed or
+    * borrowed from a neighbour).
     */
-  private def jobsOf(body: => Unit): Int = {
+  private def jobSitesOf(body: => Unit): Seq[String] = {
     def drain(): Unit = {
       val sc = spark.sparkContext
       val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
       bus.getClass.getMethod("waitUntilEmpty").invoke(bus)
     }
-    val n = new java.util.concurrent.atomic.AtomicInteger
+    val sites = new java.util.concurrent.ConcurrentLinkedQueue[String]
     val l = new org.apache.spark.scheduler.SparkListener {
       override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        n.incrementAndGet()
+        sites.add(Option(e.properties)
+          .flatMap(p => Option(p.getProperty("callSite.short")))
+          .orElse(e.stageInfos.headOption.map(_.name)).getOrElse(""))
     }
     drain()
     spark.sparkContext.addSparkListener(l)
     try { body; drain() } finally spark.sparkContext.removeSparkListener(l)
-    n.get
+    scala.jdk.CollectionConverters.CollectionHasAsScala(sites).asScala.toSeq
   }
+
+  private def jobsOf(body: => Unit): Int = jobSitesOf(body).size
 
   test("per-call job budget: an incremental admitBatch and a topK stay within their Spark job counts") {
     val (corpus, index) = freshDirs()
@@ -663,8 +668,115 @@ class IvfIndexSpec extends AnyFunSuite with SparkSpec {
     val topkJobs = jobsOf(IvfIndex.topK(spark, index, corpus, queries, k = 5).collect())
     // upper bounds at this fixture's counts: a per-call action added
     // back fails here
-    assert(admitJobs <= 29, s"incremental admitBatch ran $admitJobs jobs")
-    assert(topkJobs <= 12, s"topK ran $topkJobs jobs")
+    assert(admitJobs <= 20, s"incremental admitBatch ran $admitJobs jobs")
+    assert(topkJobs <= 7, s"topK ran $topkJobs jobs")
+  }
+
+  test("a second topK on an unchanged index reads no store: same jobs, no meta or collect job") {
+    val (corpus, index) = freshDirs()
+    IvfIndex.admitBatch(fixtureVecs, corpus, index)
+    val queries = fixtureVecs.filter($"vec_id" % 4 === 0).limit(16)
+      .select($"vec_id", $"embedding").localCheckpoint()
+    def search(): Unit = IvfIndex.topK(spark, index, corpus, queries, k = 5).collect()
+    // a store read is a job started from the index code itself (meta
+    // schema inference and head, the piv/ and cb/ collects); the
+    // query's own jobs start from this spec or Spark's broadcast threads
+    def storeReads(sites: Seq[String]): Seq[String] =
+      sites.filter(s => s.contains("IvfIndex.scala") || s.contains("IndexLifecycle.scala"))
+    val first = jobSitesOf(search())
+    val second = jobSitesOf(search())
+    assert(second.size == first.size, s"first $first, second $second")
+    assert(storeReads(second).isEmpty, s"the second topK read the stores: $second")
+    // the same meta rows re-written: new file identity, so the next call
+    // loads the epoch again — which this detector sees
+    spark.read.parquet(s"$index/meta").localCheckpoint()
+      .coalesce(1).write.mode("overwrite").parquet(s"$index/meta")
+    val reloaded = jobSitesOf(search())
+    assert(storeReads(reloaded).nonEmpty && reloaded.size > second.size,
+      s"a changed listing must reload the epoch: $reloaded")
+  }
+
+  test("snapshot invalidation: meta/ rewritten uncommitted between calls forces a rebuild") {
+    val (corpus, index) = freshDirs()
+    IvfIndex.admitBatch((1 to 40).map(i => (i.toLong, vec(i), 0))
+      .toDF("vec_id", "embedding", "label"), corpus, index)
+    // a second call in this JVM, served from the snapshot
+    IvfIndex.admitBatch(Seq((41L, vec(41), 0)).toDF("vec_id", "embedding", "label"),
+      corpus, index)
+    def nearFiles: Set[String] =
+      new java.io.File(s"$index/near").listFiles().map(_.getName)
+        .filter(_.endsWith(".parquet")).toSet
+    val before = nearFiles
+    // the state a crash between the two meta writes of a rebuild leaves
+    spark.read.parquet(s"$index/meta").withColumn("committed", lit(false))
+      .localCheckpoint().coalesce(1).write.mode("overwrite").parquet(s"$index/meta")
+    // far below the doubling trigger: only the committed check rebuilds
+    IvfIndex.admitBatch(Seq((42L, vec(42), 0)).toDF("vec_id", "embedding", "label"),
+      corpus, index)
+    assert(nearFiles.intersect(before).isEmpty,
+      "an uncommitted meta must rebuild near/, not append to it")
+    assert(spark.read.parquet(s"$index/meta").head().getAs[Boolean]("committed"))
+    val n = spark.read.schema(IvfIndex.vecSchema).parquet(corpus).count()
+    val idxN = spark.read.schema(IvfIndex.nearSchema).parquet(s"$index/near")
+      .select($"vec_id").distinct().count()
+    assert(n == idxN, s"corpus $n and index $idxN must agree")
+  }
+
+  test("snapshot invalidation: piv/ rewritten with other content between calls heals pre-probe") {
+    val (corpus, index) = freshDirs()
+    IvfIndex.admitBatch((1 to 8).map(i => (i.toLong, vec(i), 0))
+      .toDF("vec_id", "embedding", "label"), corpus, index)
+    val queries = Seq((200L, vec(3))).toDF("vec_id", "embedding")
+    // the snapshot is warm: this search reads no store
+    IvfIndex.topK(spark, index, corpus, queries, k = 3).collect()
+    val piv = spark.read.schema(IvfIndex.pivSchema).parquet(s"$index/piv")
+      .as[(Long, Array[Float])].collect()
+    // other content, same row count: every pivot vector rotated by one
+    piv.map { case (p, pe) => (p, pe.tail :+ pe.head) }.toSeq
+      .toDF("p_id", "pe").coalesce(1).write.mode("overwrite").parquet(s"$index/piv")
+    // an exact copy of an indexed vector: the fingerprint heal must
+    // rebuild before the probe, so the copy is rejected in this batch
+    IvfIndex.admitBatch(Seq((101L, vec(1), 0)).toDF("vec_id", "embedding", "label"),
+      corpus, index)
+    val admitted = spark.read.schema(IvfIndex.vecSchema).parquet(corpus)
+      .select($"vec_id").as[Long].collect().toSet
+    assert(admitted == (1L to 8L).toSet, s"the copy must be rejected: $admitted")
+    val meta = spark.read.parquet(s"$index/meta").head()
+    val restored = spark.read.schema(IvfIndex.pivSchema).parquet(s"$index/piv")
+      .select(xxhash64($"p_id", $"pe").as("h")).as[Long].collect()
+      .foldLeft(0L)(_ ^ _)
+    assert(meta.getAs[Boolean]("committed") && meta.getAs[Long]("pivot_fp") == restored,
+      "the heal must leave piv/ and its meta fingerprint agreeing")
+  }
+
+  test("a batch vector with several indexed near-duplicates is rejected once; no id is duplicated") {
+    val (corpus, index) = freshDirs()
+    val rnd = new scala.util.Random(7)
+    def gauss(): Array[Float] = Array.fill(64)(rnd.nextGaussian().toFloat)
+    val base = gauss()
+    def nearCopy(): Array[Float] = base.map(x => x + 0.01f * rnd.nextGaussian().toFloat)
+    // 100 vectors: nlist 10, nprobe 2, so admitNprobe = 2 takes effect;
+    // ids 1-3 are near-copies of `base`, all admitted in-batch
+    val corpusRows = (1 to 3).map(i => (i.toLong, nearCopy(), 0)) ++
+      (4 to 100).map(i => (i.toLong, gauss(), 0))
+    spark.conf.set("spark.graft.ivfIndex.admitNprobe", "2")
+    try {
+      IvfIndex.admitBatch(corpusRows.toDF("vec_id", "embedding", "label"), corpus, index)
+      assert(spark.read.parquet(s"$index/meta").head().getAs[Int]("nprobe") == 2)
+      val batch = Seq((101L, base, 0), (102L, gauss(), 0))
+        .toDF("vec_id", "embedding", "label").localCheckpoint()
+      // the rejected relation is a multiset: 101 sits on one decided
+      // row per near-copy
+      val rejected = IvfIndex.batchProbePlan(spark, index, corpus, batch, 0.92)
+        .as[Long].collect().toSeq
+      assert(rejected.count(_ == 101L) >= 2 && !rejected.contains(102L),
+        s"101 should reject through several corpus rows: $rejected")
+      IvfIndex.admitBatch(batch, corpus, index)
+    } finally spark.conf.unset("spark.graft.ivfIndex.admitNprobe")
+    val ids = spark.read.schema(IvfIndex.vecSchema).parquet(corpus)
+      .select($"vec_id").as[Long].collect().toSeq
+    assert(ids.size == ids.distinct.size, s"duplicated corpus ids: ${ids.diff(ids.distinct)}")
+    assert(ids.toSet == (1L to 100L).toSet + 102L, s"admitted ${ids.toSet.diff((1L to 100L).toSet)}")
   }
 
   test("version guard: an index persisted under different assignment arithmetic refuses probes") {
