@@ -919,10 +919,10 @@ object Analytics {
     *  - each pairwise slope is frozen to exact micro-cents/week with
     *    the q152 sign-split division (slopes go negative);
     *  - the per-segment median is an exact low order statistic by rank
-    *    arithmetic on the per-(segment, bucket) prefix scan, with the
+    *    arithmetic ([[OpUtils.exactCuts]] per segment), with the
     *    magnitude bucket computed as an ARITHMETIC RIGHT-SHIFT
-    *    (`v >> 30`) — truncating `div` would misorder negative slopes
-    *    around zero (the q181 shift trick reused for bucketing).
+    *    (`v >> 30`, the q181 shift trick) so negative slopes get buckets
+    *    as even as positive ones.
     *
     * Oracle computes the same median definition via a direct ordered
     * window over the pair relation — two mechanisms, one gate.
@@ -950,30 +950,8 @@ object Analytics {
                           THEN -((-(y2 - y) * 1000000) div greatest(wk2 - wk, 1))
                           ELSE ((y2 - y) * 1000000) div greatest(wk2 - wk, 1)
                      END AS BIGINT)""").as("v"))
-    // (segment, v) counts are the ONLY consumer of the pair relation:
-    // checkpoint so the pair totals below read this (value-domain-sized)
-    // table instead of re-running the pair join a second time
-    val cnts = slopes.groupBy($"segment", $"v").agg(count(lit(1)).as("c"))
-      .withColumn("bkt", expr("v >> 30"))
-      .localCheckpoint()
-    val offs = cnts.groupBy($"segment", $"bkt").agg(sum($"c").as("bc"))
-      .withColumn("off", coalesce(sum($"bc").over(
-        org.apache.spark.sql.expressions.Window.partitionBy($"segment")
-          .orderBy($"bkt").rowsBetween(
-            org.apache.spark.sql.expressions.Window.unboundedPreceding, -1)),
-        lit(0L)))
-      .select($"segment", $"bkt", $"off")
-    val wIn = org.apache.spark.sql.expressions.Window
-      .partitionBy($"segment", $"bkt").orderBy($"v")
-      .rowsBetween(
-        org.apache.spark.sql.expressions.Window.unboundedPreceding,
-        org.apache.spark.sql.expressions.Window.currentRow)
-    cnts.join(broadcast(offs), Seq("segment", "bkt"))
-      .withColumn("cum", sum($"c").over(wIn) + $"off")
-      .join(broadcast(cnts.groupBy($"segment").agg(sum($"c").as("n"))),
-        "segment")
-      .groupBy($"segment", $"n")
-      .agg(min(when($"cum" * 2 >= $"n", $"v")).as("theilsen_slope_micro"))
+    OpUtils.exactCuts(slopes, Seq("segment"), "v", expr("v >> 30"),
+        ("theilsen_slope_micro", 1L, 2L))
       .select($"segment", $"n".as("n_pairs"), $"theilsen_slope_micro")
       .orderBy($"segment")
   }
@@ -1191,10 +1169,9 @@ object Analytics {
     *  - per-customer metrics in pure integers (recency = max epoch day,
     *    frequency = order count, monetary = Σ cents);
     *  - each axis's four cut points (20/40/60/80%) are EXACT low order
-    *    statistics — min v with cum·5 ≥ n·k — by rank arithmetic on the
-    *    q155/q184 value-bucket prefix scan (per-axis magnitude buckets,
-    *    windows bounded by the bucket, never a global sort and never a
-    *    percentile buffer);
+    *    statistics — min v with cum·5 ≥ n·k — by [[OpUtils.exactCuts]]
+    *    (per-axis magnitude buckets, windows bounded by the bucket,
+    *    never a global sort and never a percentile buffer);
     *  - scores are `1 + Σ [v > cut_k]`: pure integer comparisons, so
     *    heavy ties (frequency takes ~40 distinct values) collapse into
     *    the same score DETERMINISTICALLY in both engines.
@@ -1208,7 +1185,6 @@ object Analytics {
     */
   def q186RfmSegments(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    import org.apache.spark.sql.expressions.Window
     val m = Tables.orders(spark, dir)
       .select($"o_custkey",
         expr("CAST(datediff(CAST(o_orderdate AS DATE), DATE'1970-01-01') AS BIGINT)")
@@ -1218,29 +1194,11 @@ object Analytics {
       .agg(max($"day").as("rec"), count(lit(1)).as("frq"),
         sum($"cents").as("mon"))
       .localCheckpoint() // feeds three cut scans + the scoring pass
-    // exact 20/40/60/80% cut points of one metric column via the
-    // bucketed prefix scan; returns 1 row (c1..c4)
-    def cuts(metric: String, bktDiv: Long): DataFrame = {
-      val cnts = m.select(col(metric).as("v"))
-        .groupBy($"v").agg(count(lit(1)).as("c"))
-        .withColumn("bkt", expr(s"v div $bktDiv"))
-      val offs = cnts.groupBy($"bkt").agg(sum($"c").as("bc"))
-        .withColumn("off", coalesce(sum($"bc").over(
-          Window.orderBy($"bkt").rowsBetween(Window.unboundedPreceding, -1)),
-          lit(0L)))
-        .select($"bkt", $"off")
-      val wIn = Window.partitionBy($"bkt").orderBy($"v")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      cnts.join(broadcast(offs), Seq("bkt"))
-        .withColumn("cum", sum($"c").over(wIn) + $"off")
-        .crossJoin(broadcast(m.agg(count(lit(1)).as("n"))))
-        .groupBy($"n").agg(
-          min(when($"cum" * 5 >= $"n" * 1, $"v")).as(s"${metric}_c1"),
-          min(when($"cum" * 5 >= $"n" * 2, $"v")).as(s"${metric}_c2"),
-          min(when($"cum" * 5 >= $"n" * 3, $"v")).as(s"${metric}_c3"),
-          min(when($"cum" * 5 >= $"n" * 4, $"v")).as(s"${metric}_c4"))
+    // exact 20/40/60/80% cut points of one metric column; 1 row (c1..c4)
+    def cuts(metric: String, bktDiv: Long): DataFrame =
+      OpUtils.exactCuts(m.select(col(metric).as("v")), Nil, "v", expr(s"v div $bktDiv"),
+          (1L to 4L).map(k => (s"${metric}_c$k", k, 5L)): _*)
         .drop("n")
-    }
     def score(v: Column, pfx: String): Column =
       lit(1L) +
         when(v > col(s"${pfx}_c1"), 1L).otherwise(0L) +

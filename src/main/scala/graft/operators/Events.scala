@@ -1101,8 +1101,8 @@ object Events {
     * (which handles the censored non-converters) and q94's single
     * conversion rate both flatten. Skewed delays make means useless
     * here; quartiles are the readout, and they are EXACT low order
-    * statistics by per-(cohort, day-bucket) rank arithmetic on the
-    * q162 prefix-scan machinery — never a sort, never a percentile
+    * statistics by per-(cohort, day-bucket) rank arithmetic
+    * ([[OpUtils.exactCuts]]) — never a sort, never a percentile
     * buffer, windows bounded by (cohort × delay-day) cells.
     *
     * Scale shape: two user_id hash aggregates build the per-user delay
@@ -1123,22 +1123,8 @@ object Events {
       .agg(min($"us" - $"s_us").as("v"), min($"s_us").as("s_us"))
       .select(expr("s_us div 604800000000").as("wk"), $"v")
       .localCheckpoint() // feeds the cut scan and the cohort sizes
-    val cnts = vals.groupBy($"wk", $"v").agg(count(lit(1)).as("c"))
-      .withColumn("bkt", expr("v div 86400000000"))
-    val offs = cnts.groupBy($"wk", $"bkt").agg(sum($"c").as("bc"))
-      .withColumn("off", coalesce(sum($"bc").over(
-        Window.partitionBy($"wk").orderBy($"bkt")
-          .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-      .select($"wk", $"bkt", $"off")
-    val wIn = Window.partitionBy($"wk", $"bkt").orderBy($"v")
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    cnts.join(broadcast(offs), Seq("wk", "bkt"))
-      .withColumn("cum", sum($"c").over(wIn) + $"off")
-      .join(broadcast(vals.groupBy($"wk").agg(count(lit(1)).as("n"))), "wk")
-      .groupBy($"wk", $"n").agg(
-        min(when($"cum" * 4 >= $"n", $"v")).as("q1_us"),
-        min(when($"cum" * 2 >= $"n", $"v")).as("median_us"),
-        min(when($"cum" * 4 >= $"n" * 3, $"v")).as("q3_us"))
+    OpUtils.exactCuts(vals, Seq("wk"), "v", expr("v div 86400000000"),
+        ("q1_us", 1L, 4L), ("median_us", 1L, 2L), ("q3_us", 3L, 4L))
       .select($"wk".as("signup_week"), $"n".as("n_converters"),
         $"q1_us", $"median_us", $"q3_us")
       .orderBy($"signup_week")

@@ -1,6 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
 /** Shared helpers for oracle-parity queries (see Relational doc). */
@@ -14,6 +16,64 @@ object OpUtils {
 
   /** The matching SQL fragment for the oracle side. */
   def decSql(expr: String): String = s"CAST($expr AS DECIMAL(18,4))"
+
+  /** Distributed running sums: `df` plus one column per named weight,
+    * the sum of that weight over all rows up to and including this one
+    * in (`partition`, `bucket`, `order`) order. A rank is the running
+    * sum of `lit(1L)` over a total order.
+    *
+    * Two levels instead of one single-partition window over `df`: rows
+    * are grouped into `bucket`s (kept as column `bkt`), each bucket's
+    * weights are summed, a window over that bucket table gives each
+    * bucket's offset, the offsets are broadcast back, and each bucket
+    * runs its own window with its offset added.
+    *
+    * Bound: the only window without a partition runs over ONE ROW PER
+    * (partition, bucket), so its size is the bucket count, never the
+    * row count. `bucket` must be monotone (non-decreasing) in `order`
+    * within a partition, or the offsets are added in the wrong order.
+    * Truncating `div` is monotone (bucket 0 is merely twice as wide,
+    * spanning zero) and so is an arithmetic `>>`; a string prefix of a
+    * string sort key is too.
+    */
+  def prefixSums(df: DataFrame, partition: Seq[String], bucket: Column,
+      order: Seq[Column], weights: (String, Column)*): DataFrame = {
+    val keys = partition :+ "bkt"
+    val d = df.withColumn("bkt", bucket)
+    val wOff = Window.partitionBy(partition.map(col): _*).orderBy(col("bkt"))
+      .rowsBetween(Window.unboundedPreceding, -1)
+    val totals = weights.map { case (n, w) => sum(w).as(n) }
+    val offs = d.groupBy(keys.map(col): _*).agg(totals.head, totals.tail: _*)
+      .select(keys.map(col) ++ weights.map { case (n, _) =>
+        coalesce(sum(col(n)).over(wOff), lit(0L)).as(s"${n}_off") }: _*)
+    val wIn = Window.partitionBy(keys.map(col): _*).orderBy(order: _*)
+      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    d.join(broadcast(offs), keys)
+      .withColumns(weights.map { case (n, w) =>
+        n -> (sum(w).over(wIn) + col(s"${n}_off")) }.toMap)
+      .drop(weights.map { case (n, _) => s"${n}_off" }: _*)
+  }
+
+  /** Exact cut points per group: for each `(name, num, den)` in `cuts`,
+    * the smallest `v` whose cumulative count `cum` over the group's
+    * values satisfies `cum·den ≥ n·num` (n = the group's row count), so
+    * `(1, 2)` is the low median and `(1, 4)` the first quartile. `vals`
+    * has one row per observation; the scan runs on its distinct
+    * (partition, v) counts through [[prefixSums]], whose bound and
+    * `bucket` rule apply. Returns one row per group: the `partition`
+    * columns, `n`, and one column per cut.
+    */
+  def exactCuts(vals: DataFrame, partition: Seq[String], v: String,
+      bucket: Column, cuts: (String, Long, Long)*): DataFrame = {
+    val keys = partition.map(col)
+    val cnts = vals.groupBy(keys :+ col(v): _*).agg(count(lit(1)).as("c"))
+    val n = broadcast(vals.groupBy(keys: _*).agg(count(lit(1)).as("n")))
+    val cum = prefixSums(cnts, partition, bucket, Seq(col(v)), "cum" -> col("c"))
+    val mins = cuts.map { case (name, num, den) =>
+      min(when(col("cum") * den >= col("n") * num, col(v))).as(name) }
+    (if (partition.isEmpty) cum.crossJoin(n) else cum.join(n, partition))
+      .groupBy(keys :+ col("n"): _*).agg(mins.head, mins.tail: _*)
+  }
 
   /** Overlap INDEPENDENT bounded sub-pipelines on driver threads (r16,
     * guide §2.6 "overlap independent jobs"): Spark happily runs several

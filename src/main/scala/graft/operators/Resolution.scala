@@ -1,7 +1,6 @@
 package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.sources.Tables
 
@@ -63,11 +62,10 @@ object Resolution {
     *
     * Scale shape: the global sort rank is NOT a single-partition window
     * (Spark would collapse an unpartitioned `row_number` to one task) —
-    * it is the q115 distributed prefix scan transplanted to key space:
+    * it is a running count ([[OpUtils.prefixSums]]) in key space:
     * deterministic first-char buckets (prefix of the sort key, so
-    * bucket order IS key order), per-bucket counts offset by a window
-    * over the tiny bucket relation, broadcast back, ranks computed in
-    * parallel per bucket. Neighbor pairs are then an EQUI-join on
+    * bucket order IS key order), ranks computed in parallel per
+    * bucket. Neighbor pairs are then an EQUI-join on
     * `rank + j` (j ∈ 1..w−1, exploded), never a theta join — plan-
     * pinned in ResolutionSpec. At production scale the one-char bucket
     * widens to two/three chars to keep partitions balanced; the
@@ -81,16 +79,8 @@ object Resolution {
     val d = Tables.documents(spark, dir)
       .select($"doc_id", substring($"text", 1, 240).as("sig"),
         substring($"text", 1, 64).as("k"))
-      .withColumn("bkt", substring($"k", 1, 1))
-    val offs = d.groupBy($"bkt").agg(count(lit(1)).as("bn"))
-      .withColumn("off", coalesce(sum($"bn").over(
-        Window.orderBy($"bkt").rowsBetween(Window.unboundedPreceding, -1)),
-        lit(0L)))
-      .select($"bkt", $"off")
-    val ranked = d.join(broadcast(offs), Seq("bkt"))
-      .withColumn("rn",
-        row_number().over(Window.partitionBy($"bkt").orderBy($"k", $"doc_id"))
-          .cast("long") + $"off")
+    val ranked = OpUtils.prefixSums(d, Nil, substring($"k", 1, 1),
+        Seq($"k", $"doc_id"), "rn" -> lit(1L))
       .select($"doc_id", $"sig", $"rn")
       .localCheckpoint() // probe side and join side both read the ranks
     val probes = ranked

@@ -469,30 +469,20 @@ object Selection {
     * W)`, all BIGINT, so the sample is bit-identical cross-engine and
     * Σ n_picks = n exactly.
     *
-    * Scale shape: the global cumulative sum is a DISTRIBUTED prefix
-    * scan, not a single-partition window — per-bucket totals (contiguous
-    * doc_id ranges) are aggregated small, offset by a window over the
-    * tiny totals relation, broadcast back, and each bucket scans in
-    * parallel with its offset added. The only global-order window runs
-    * over ~(corpus/64) one-row-per-bucket records. At 100 TB the
-    * arithmetic widens to DECIMAL(38,0) (cum*n overflows BIGINT around
-    * W ≈ 9e16 with n=100); the fixture stays in BIGINT range.
+    * Scale shape: the global cumulative sum is the distributed prefix
+    * scan [[OpUtils.prefixSums]] over contiguous doc_id ranges, so the
+    * only global-order window runs over ~(corpus/64) one-row-per-bucket
+    * records. At 100 TB the arithmetic widens to DECIMAL(38,0) (cum*n
+    * overflows BIGINT around W ≈ 9e16 with n=100); the fixture stays in
+    * BIGINT range.
     */
   def q115PpsSample(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val n = 100
     val d = Tables.documents(spark, dir)
       .select($"doc_id", $"n_chars".as("w"))
-      .withColumn("bkt", expr("doc_id div 64"))
-    val totals = d.groupBy($"bkt").agg(sum($"w").as("bw"))
-    val offs = totals.withColumn("off",
-      coalesce(sum($"bw").over(
-        Window.orderBy($"bkt").rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-      .select($"bkt", $"off")
-    val wIn = Window.partitionBy($"bkt").orderBy($"doc_id")
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val cum = d.join(broadcast(offs), Seq("bkt"))
-      .withColumn("cum", sum($"w").over(wIn) + $"off")
+    val cum = OpUtils.prefixSums(d, Nil, expr("doc_id div 64"), Seq($"doc_id"),
+      "cum" -> $"w")
     val tot = d.agg(sum($"w").as("wtot"))
     cum.crossJoin(broadcast(tot))
       .withColumn("hi", expr(s"(cum * $n) div wtot"))
@@ -566,13 +556,11 @@ object Selection {
     * inequality audit — the same statistic a corpus steward runs on
     * source/domain token shares to see how concentrated the mix is):
     * G = (2·Σᵢ i·xᵢ − (n+1)·Σx) / (n·Σx) over the ASCENDING-sorted
-    * values, emitted in exact basis points. The global value rank is
-    * the q136 distributed prefix scan on VALUE space: deterministic
-    * magnitude buckets (`cents div 10⁷` — bucket order IS value
-    * order), per-bucket counts offset by a window over the tiny bucket
-    * relation, ranks in parallel per bucket — no single-partition
-    * window over the customer relation. Σ i·x is accumulated in
-    * DECIMAL(38,0) (i·x reaches ~3e16 at sf0.1 and the ×10⁴ headroom
+    * values, emitted in exact basis points. The global value rank is a
+    * running count ([[OpUtils.prefixSums]]) over the total order
+    * (x, k), bucketed by magnitude (`cents div 10⁷` — bucket order IS
+    * value order) — no single-partition window over the customer
+    * relation. Σ i·x is accumulated in DECIMAL(38,0) (i·x reaches ~3e16 at sf0.1 and the ×10⁴ headroom
     * overflows BIGINT — the q84/q95 widen discipline); the final
     * division is integral on non-negative terms (Lorenz sums are
     * monotone, the numerator is provably ≥ 0), so truncate == floor in
@@ -583,17 +571,9 @@ object Selection {
     val cr = Tables.orders(spark, dir)
       .groupBy($"o_custkey".as("k"))
       .agg(sum(round($"o_totalprice" * 100).cast("long")).as("x"))
-      .withColumn("bkt", expr("x div 10000000"))
-    val offs = cr.groupBy($"bkt").agg(count(lit(1)).as("bn"))
-      .withColumn("off", coalesce(sum($"bn").over(
-        Window.orderBy($"bkt").rowsBetween(Window.unboundedPreceding, -1)),
-        lit(0L)))
-      .select($"bkt", $"off")
-    val ranked = cr.join(broadcast(offs), Seq("bkt"))
-      .withColumn("i",
-        row_number().over(Window.partitionBy($"bkt").orderBy($"x", $"k"))
-          .cast("long") + $"off")
-    ranked.agg(count(lit(1)).as("n"), sum($"x").as("sx"),
+    OpUtils.prefixSums(cr, Nil, expr("x div 10000000"), Seq($"x", $"k"),
+        "i" -> lit(1L))
+      .agg(count(lit(1)).as("n"), sum($"x").as("sx"),
         sum($"i".cast(DecimalType(38, 0)) * $"x").as("six"))
       .select($"n", $"sx",
         expr("CAST(((2 * six - (CAST(n AS DECIMAL(38,0)) + 1) * sx) * 10000) div (CAST(n AS DECIMAL(38,0)) * sx) AS BIGINT)")
@@ -618,10 +598,10 @@ object Selection {
     * median found on the weight-cumulative line — the curation
     * statistic a plain median misses entirely when lengths are skewed
     * (most docs short, most mass long). EXACT and distributed: value-
-    * space buckets (`v div 64` — deterministic, value-ordered) + the
-    * q115 broadcast-offset prefix scan give the global cumulative
-    * weight with no single-partition window; the answer is the first
-    * row with `2·cum ≥ total` (lower-median convention, stated
+    * space buckets (`v div 64` — deterministic, value-ordered) +
+    * [[OpUtils.prefixSums]] give the global cumulative weight with no
+    * single-partition window; the answer is the first row with
+    * `2·cum ≥ total` (lower-median convention, stated
     * explicitly — both engines evaluate the same inequality on exact
     * BIGINTs). Complements q40 (exact quantiles, memory-bound) and
     * q99 (sketch quantiles, unweighted): this is the exact WEIGHTED
@@ -631,16 +611,8 @@ object Selection {
     import spark.implicits._
     val d = Tables.documents(spark, dir)
       .select($"doc_id", $"n_chars".as("v"), $"n_chars".as("w"))
-      .withColumn("bkt", expr("v div 64"))
-    val offs = d.groupBy($"bkt").agg(sum($"w").as("bw"))
-      .withColumn("off", coalesce(sum($"bw").over(
-        Window.orderBy($"bkt").rowsBetween(Window.unboundedPreceding, -1)),
-        lit(0L)))
-      .select($"bkt", $"off")
-    val wIn = Window.partitionBy($"bkt").orderBy($"v", $"doc_id")
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val cum = d.join(broadcast(offs), Seq("bkt"))
-      .withColumn("cum", sum($"w").over(wIn) + $"off")
+    val cum = OpUtils.prefixSums(d, Nil, expr("v div 64"), Seq($"v", $"doc_id"),
+      "cum" -> $"w")
     cum.crossJoin(broadcast(d.agg(sum($"w").as("tot"))))
       .filter($"cum" * 2 >= $"tot")
       .orderBy($"cum")
@@ -739,7 +711,7 @@ object Selection {
   /** q161 — exact median absolute deviation (MAD) of order totals:
     * the robust dispersion statistic (outlier fences that a handful of
     * mega-orders can't drag, unlike stddev). Two order statistics, each
-    * computed EXACTLY by the q155 machinery — rank arithmetic on the
+    * computed EXACTLY by [[OpUtils.exactCuts]] — rank arithmetic on the
     * value-bucket prefix scan, never a global sort and never the
     * whole-group buffering of exact `percentile`: the low median is the
     * smallest v with 2·cum ≥ n over deterministic magnitude buckets
@@ -752,39 +724,18 @@ object Selection {
     */
   def q161MadDispersion(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    // Exact low median over a value relation (`v` BIGINT, one row per
-    // observation): distinct-value counts, per-bucket windows +
-    // broadcast bucket offsets (the q115/q155 distributed prefix scan),
-    // then min v whose cumulative count covers half of n.
-    def lowMedian(vals: DataFrame): DataFrame = {
-      import vals.sparkSession.implicits._
-      val cnts = vals.groupBy($"v").agg(count(lit(1)).as("c"))
-        .withColumn("bkt", expr("v div 1000000"))
-      val offs = cnts.groupBy($"bkt").agg(sum($"c").as("bc"))
-        .withColumn("off", coalesce(sum($"bc").over(
-          Window.orderBy($"bkt").rowsBetween(Window.unboundedPreceding, -1)),
-          lit(0L)))
-        .select($"bkt", $"off")
-      val wIn = Window.partitionBy($"bkt").orderBy($"v")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      cnts.join(broadcast(offs), Seq("bkt"))
-        .withColumn("cum", sum($"c").over(wIn) + $"off")
-        .crossJoin(broadcast(vals.agg(count(lit(1)).as("n"))))
-        .filter($"cum" * 2 >= $"n")
-        .orderBy($"cum")
-        .limit(1)
-        .select($"v")
-    }
+    def lowMedian(vals: DataFrame, name: String): DataFrame =
+      OpUtils.exactCuts(vals, Nil, "v", expr("v div 1000000"), (name, 1L, 2L))
     val cents = Tables.orders(spark, dir)
       .select(round($"o_totalprice" * 100).cast("long").as("v"))
       .localCheckpoint() // each lowMedian pass re-reads its input twice
-    val med = lowMedian(cents).select($"v".as("median_cents"))
+    // one row (n, median_cents), read by both passes below
+    val med = lowMedian(cents, "median_cents").localCheckpoint()
     val devs = cents.crossJoin(broadcast(med))
       .select(abs($"v" - $"median_cents").as("v"))
       .localCheckpoint()
-    lowMedian(devs).select($"v".as("mad_cents"))
+    lowMedian(devs, "mad_cents").drop("n")
       .crossJoin(broadcast(med))
-      .crossJoin(broadcast(cents.agg(count(lit(1)).as("n"))))
       .select($"median_cents", $"mad_cents", $"n")
   }
 
@@ -811,9 +762,9 @@ object Selection {
     * all. The robust dual of stddev outliers — a handful of mega-lines
     * can't drag the fences.
     *
-    * Scale shape: quartiles ride the q155/q161 machinery generalized
-    * per group — distinct (flag, value) counts, per-(flag, bucket)
-    * windows + broadcast per-flag bucket offsets, so no per-flag
+    * Scale shape: quartiles are [[OpUtils.exactCuts]] per flag —
+    * distinct (flag, value) counts, per-(flag, bucket) windows +
+    * broadcast per-flag bucket offsets, so no per-flag
     * single-partition sort and no whole-group percentile buffer; the
     * outlier count is one more pass with the 3-row fence relation
     * broadcast. Oracle computes the same rank definition via direct
@@ -824,28 +775,12 @@ object Selection {
     val vals = Tables.lineitem(spark, dir)
       .select($"l_returnflag".as("flag"),
         round($"l_extendedprice" * 100).cast("long").as("v"))
-    // the distinct-value counts feed three branches (bucket offsets, the
-    // cum scan, the per-flag totals) — checkpoint so the fact is scanned
-    // once for them, not once per branch
-    val cnts = vals.groupBy($"flag", $"v").agg(count(lit(1)).as("c"))
-      .withColumn("bkt", expr("v div 1000000"))
-      .localCheckpoint()
-    val offs = cnts.groupBy($"flag", $"bkt").agg(sum($"c").as("bc"))
-      .withColumn("off", coalesce(sum($"bc").over(
-        Window.partitionBy($"flag").orderBy($"bkt")
-          .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-      .select($"flag", $"bkt", $"off")
-    val wIn = Window.partitionBy($"flag", $"bkt").orderBy($"v")
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     // both quartiles in ONE aggregation over the cum relation (min of v
     // where the rank predicate holds) — the r10 bench showed the
     // two-filter form re-executing the whole cum pipeline per quartile
-    val fences = cnts.join(broadcast(offs), Seq("flag", "bkt"))
-      .withColumn("cum", sum($"c").over(wIn) + $"off")
-      .join(broadcast(cnts.groupBy($"flag").agg(sum($"c").as("n"))), "flag")
-      .groupBy($"flag").agg(
-        min(when($"cum" * 4 >= $"n", $"v")).as("q1_cents"),
-        min(when($"cum" * 4 >= $"n" * 3, $"v")).as("q3_cents"))
+    val fences = OpUtils.exactCuts(vals, Seq("flag"), "v", expr("v div 1000000"),
+        ("q1_cents", 1L, 4L), ("q3_cents", 3L, 4L))
+      .drop("n")
     vals.join(broadcast(fences), "flag")
       .groupBy($"flag", $"q1_cents", $"q3_cents")
       .agg(count(lit(1)).as("n"),
@@ -883,7 +818,7 @@ object Selection {
     * customers whose revenue reaches 80% of the total, with the 80%
     * threshold held as the cross-multiplied integer comparison
     * `5·cum ≥ 4·tot` (no float share ever exists). Descending value
-    * order rides the q151 bucket prefix scan after the monotone flip
+    * order rides [[OpUtils.prefixSums]] after the monotone flip
     * `v' = 10¹⁵ − cents` (cents are non-negative, so v' stays positive
     * and `div` bucketing never sees a negative operand — the
     * q152-class divergence is avoided by construction; the 10¹⁵ cap =
@@ -905,21 +840,8 @@ object Selection {
       .agg(sum(round($"o_totalprice" * 100).cast("long")).as("cents"))
     val vals = rev.select((lit(1000000000000000L) - $"cents").as("vp"), $"cents")
       .groupBy($"vp", $"cents").agg(count(lit(1)).as("cnt"))
-      .withColumn("bkt", expr("vp div 100000000"))
-    val offs = vals.groupBy($"bkt")
-      .agg(sum($"cnt").as("bc"), sum($"cnt" * $"cents").as("bv"))
-      .withColumn("offc", coalesce(sum($"bc").over(
-        Window.orderBy($"bkt").rowsBetween(Window.unboundedPreceding, -1)),
-        lit(0L)))
-      .withColumn("offv", coalesce(sum($"bv").over(
-        Window.orderBy($"bkt").rowsBetween(Window.unboundedPreceding, -1)),
-        lit(0L)))
-      .select($"bkt", $"offc", $"offv")
-    val wIn = Window.partitionBy($"bkt").orderBy($"vp")
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val cum = vals.join(broadcast(offs), Seq("bkt"))
-      .withColumn("cumc", sum($"cnt").over(wIn) + $"offc")
-      .withColumn("cumv", sum($"cnt" * $"cents").over(wIn) + $"offv")
+    val cum = OpUtils.prefixSums(vals, Nil, expr("vp div 100000000"), Seq($"vp"),
+      "cumc" -> $"cnt", "cumv" -> $"cnt" * $"cents")
     val tot = rev.agg(count(lit(1)).as("n_customers"), sum($"cents").as("tot"))
     cum.crossJoin(broadcast(tot))
       .filter($"cumv" * 5 >= $"tot" * 4)
@@ -1020,8 +942,8 @@ object Selection {
     * location statistics (cap / drop the extreme 5% per tail) that
     * complete the robust family next to q161 (MAD) and q162 (IQR
     * fences). The p05/p95 cut points are EXACT low order statistics —
-    * k-th smallest with k = ⌈q·n⌉, found by rank arithmetic on the
-    * q155/q161 value-bucket prefix scan (never a global sort, never
+    * k-th smallest with k = ⌈q·n⌉, found by [[OpUtils.exactCuts]]
+    * on the value-bucket prefix scan (never a global sort, never
     * exact-percentile's whole-group buffer); the second pass clamps
     * (winsorize) or filters (trim) against the broadcast 1-row cut
     * relation and sums exact cents. Means are emitted in milli-cents
@@ -1036,23 +958,10 @@ object Selection {
     val vals = Tables.orders(spark, dir)
       .select(round($"o_totalprice" * 100).cast("long").as("v"))
       .localCheckpoint() // feeds the cut-point scan and the clamp pass
-    val cnts = vals.groupBy($"v").agg(count(lit(1)).as("c"))
-      .withColumn("bkt", expr("v div 1000000"))
-    val offs = cnts.groupBy($"bkt").agg(sum($"c").as("bc"))
-      .withColumn("off", coalesce(sum($"bc").over(
-        Window.orderBy($"bkt").rowsBetween(Window.unboundedPreceding, -1)),
-        lit(0L)))
-      .select($"bkt", $"off")
-    val wIn = Window.partitionBy($"bkt").orderBy($"v")
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     // both cut points from ONE aggregation over the cum relation (the
     // q162 lesson: a filter per cut re-executes the whole scan)
-    val cuts = cnts.join(broadcast(offs), Seq("bkt"))
-      .withColumn("cum", sum($"c").over(wIn) + $"off")
-      .crossJoin(broadcast(vals.agg(count(lit(1)).as("n"))))
-      .groupBy($"n").agg(
-        min(when($"cum" * 100 >= $"n" * 5, $"v")).as("p05_cents"),
-        min(when($"cum" * 100 >= $"n" * 95, $"v")).as("p95_cents"))
+    val cuts = OpUtils.exactCuts(vals, Nil, "v", expr("v div 1000000"),
+      ("p05_cents", 5L, 100L), ("p95_cents", 95L, 100L))
     vals.crossJoin(broadcast(cuts))
       .groupBy($"n", $"p05_cents", $"p95_cents")
       .agg(
@@ -1108,11 +1017,11 @@ object Selection {
     * DECIMAL(38,0) widen-point for the 100 TB run.
     *
     * Scale shape: the exclusive negative-prefix over distinct scores
-    * is the q155/q161 DISTRIBUTED prefix scan (deterministic magnitude
-    * buckets — bucket order IS value order — per-bucket windows +
-    * broadcast bucket offsets), never a single-partition global
-    * window; the oracle computes the same rank algebra via DuckDB's
-    * direct ordered window — the q117 two-mechanisms discipline.
+    * is [[OpUtils.prefixSums]] minus the row's own count (deterministic
+    * magnitude buckets — bucket order IS value order), never a
+    * single-partition global window; the oracle computes the same rank
+    * algebra via DuckDB's direct ordered window — the q117
+    * two-mechanisms discipline.
     */
   def q201ExactAuc(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
@@ -1121,16 +1030,9 @@ object Selection {
       when($"o_orderpriority" === "1-URGENT", 1L).otherwise(0L).as("p"))
     val c = s.groupBy($"v")
       .agg(sum($"p").as("np"), (count(lit(1)) - sum($"p")).as("nn"))
-      .withColumn("bkt", expr("v div 1000000"))
-    val offs = c.groupBy($"bkt").agg(sum($"nn").as("bn"))
-      .withColumn("off", coalesce(sum($"bn").over(
-        Window.orderBy($"bkt").rowsBetween(Window.unboundedPreceding, -1)),
-        lit(0L)))
-      .select($"bkt", $"off")
-    val wIn = Window.partitionBy($"bkt").orderBy($"v")
-      .rowsBetween(Window.unboundedPreceding, -1)
-    c.join(broadcast(offs), Seq("bkt"))
-      .withColumn("cl", coalesce(sum($"nn").over(wIn), lit(0L)) + $"off")
+    // cl = negatives strictly below v: the inclusive running sum minus v's own
+    OpUtils.prefixSums(c, Nil, expr("v div 1000000"), Seq($"v"), "cum" -> $"nn")
+      .withColumn("cl", $"cum" - $"nn")
       .agg(sum($"np").as("n_pos"), sum($"nn").as("n_neg"),
         sum($"np" * $"cl" * 2 + $"np" * $"nn").as("num2"))
       .select($"n_pos", $"n_neg", $"num2",

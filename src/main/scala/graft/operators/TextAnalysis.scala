@@ -1498,6 +1498,14 @@ object TextAnalysis {
       .select(struct($"doc_id", $"rel_bp",
         coalesce($"sims", expr("cast(map() as map<bigint,bigint>)")).as("sims")).as("c"))
       .agg(collect_list($"c").as("pool"))
+      // the fold's max-sim reads `element_at(c.sims, p.doc_id)`, and
+      // `greatest` skips a NULL: a missing or NULL sim would silently
+      // drop its penalty, so coverage fails the query in-plan instead
+      .select(coalesce(expr("""assert_true(forall(pool, c ->
+        |  size(c.sims) = size(pool) - 1 AND
+        |  forall(pool, o -> o.doc_id = c.doc_id OR c.sims[o.doc_id] IS NOT NULL)),
+        |  'q149: a pool candidate lacks a non-NULL sim to another member')""".stripMargin),
+        $"pool").as("pool"))
     // the 5-round greedy as one fold: round r filters out already-picked
     // candidates, scores each as rel_bp − max sim to the picked set
     // (round 1: rel_bp itself), appends the (mmr desc, doc_id) argmax —
@@ -1581,10 +1589,10 @@ object TextAnalysis {
     * Exactness: the quality score is frozen to integer micro-units
     * (the shared IEEE-deterministic [[qualityScoreCol]], then one
     * round); the nine decile cut points are exact order statistics by
-    * rank arithmetic on the q155/q186 value-bucket prefix scan (never
-    * a sort, never a percentile buffer); per-decile means are integer
-    * `div` of exact sums (mean quality in micro-units, per-token NLL
-    * in micro-nats = Σ nll_micro div Σ tokens).
+    * [[OpUtils.exactCuts]] (never a sort, never a percentile buffer);
+    * per-decile means are integer `div` of exact sums (mean quality in
+    * micro-units, per-token NLL in micro-nats = Σ nll_micro div
+    * Σ tokens).
     *
     * Scale shape: one doc-key join of the two per-doc relations, one
     * distinct-value prefix scan (bounded by the ~10⁶-point score
@@ -1593,30 +1601,14 @@ object TextAnalysis {
     */
   def q195QualityCalibration(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    import org.apache.spark.sql.expressions.Window
     val q = docs(spark, dir).select($"doc_id",
       round(qualityScoreCol($"text", toks) * 1e6).cast("long").as("qs"))
     val m = q.join(
         q76UnigramNll(spark, dir).select($"doc_id", $"n_tokens", $"nll_micro"),
         Seq("doc_id"))
       .localCheckpoint() // feeds the cut scan and the decile rollup
-    val cnts = m.groupBy($"qs").agg(count(lit(1)).as("c"))
-      .withColumn("bkt", expr("qs div 50000"))
-    val offs = cnts.groupBy($"bkt").agg(sum($"c").as("bc"))
-      .withColumn("off", coalesce(sum($"bc").over(
-        Window.orderBy($"bkt").rowsBetween(Window.unboundedPreceding, -1)),
-        lit(0L)))
-      .select($"bkt", $"off")
-    val wIn = Window.partitionBy($"bkt").orderBy($"qs")
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val cuts = cnts.join(broadcast(offs), Seq("bkt"))
-      .withColumn("cum", sum($"c").over(wIn) + $"off")
-      .crossJoin(broadcast(m.agg(count(lit(1)).as("n"))))
-      .groupBy($"n")
-      .agg(
-        min(when($"cum" * 10 >= $"n" * 1, $"qs")).as("c1"),
-        (2 to 9).map(k =>
-          min(when($"cum" * 10 >= $"n" * k, $"qs")).as(s"c$k")): _*)
+    val cuts = OpUtils.exactCuts(m, Nil, "qs", expr("qs div 50000"),
+        (1L to 9L).map(k => (s"c$k", k, 10L)): _*)
       .drop("n")
     val dEx = (1 to 9).map(k => s"(CASE WHEN qs > c$k THEN 1 ELSE 0 END)")
       .mkString("1 + ", " + ", "")
@@ -1798,8 +1790,8 @@ object TextAnalysis {
     * units, n-conservation per source.
     *
     * Everything is integer-exact: scores ride the shared micro-frozen
-    * [[qualityScoreCol]]; within-source and global ranks come from the
-    * q155/q195 value-bucket prefix scan (cumulative counts over the
+    * [[qualityScoreCol]]; within-source and global ranks come from
+    * [[OpUtils.prefixSums]] (cumulative counts over the
     * DISTINCT-value relation, bounded by the ≤10⁶-point score domain —
     * never a data-sized sort); the grid edge for rank r of n is
     * `k = ceil(1000·r / n)` in integer arithmetic; and the grid itself
@@ -1810,32 +1802,23 @@ object TextAnalysis {
     * mechanisms, one gate.
     *
     * Scale shape: two hash aggs to distinct-value relations (domain-
-    * bounded), two-level prefix scans (the q195 bucket/offset idiom —
-    * no global window over data), a broadcast grid join, and one
+    * bounded), two [[OpUtils.prefixSums]] scans (no global window over
+    * data), a broadcast grid join, and one
     * (source, qs) equi-join back to docs. At 100 TB nothing here scales
     * with N except the two initial aggregations.
     */
   def q218QuantileNormalize(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    import org.apache.spark.sql.expressions.Window
     val q = docs(spark, dir).select($"doc_id", $"source",
         round(qualityScoreCol($"text", toks) * 1e6).cast("long").as("qs"))
       .localCheckpoint() // feeds both rank scans and the final join
-    // global distinct-value cumulative counts (two-level scan)
+    // global distinct-value cumulative counts
     val gcnts = q.groupBy($"qs").agg(count(lit(1)).as("c"))
-      .withColumn("bkt", expr("qs div 50000"))
-    val goffs = gcnts.groupBy($"bkt").agg(sum($"c").as("bc"))
-      .withColumn("off", coalesce(sum($"bc").over(
-        Window.orderBy($"bkt").rowsBetween(Window.unboundedPreceding, -1)),
-        lit(0L)))
-      .select($"bkt", $"off")
-    val wG = Window.partitionBy($"bkt").orderBy($"qs")
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val nRow = q.agg(count(lit(1)).as("n"))
     // per-mille grid: each distinct global value covers the k-interval
     // (1000·cum_prev/n, 1000·cum/n] — explode it; exactly 1000 rows out
-    val edges = gcnts.join(broadcast(goffs), Seq("bkt"))
-      .withColumn("cum", sum($"c").over(wG) + $"off")
+    val edges = OpUtils.prefixSums(gcnts, Nil, expr("qs div 50000"), Seq($"qs"),
+        "cum" -> $"c")
       .crossJoin(broadcast(nRow))
       .withColumn("lo", expr("((cum - c) * 1000) div n + 1"))
       .withColumn("hi", expr("(cum * 1000) div n"))
@@ -1843,17 +1826,9 @@ object TextAnalysis {
       .select(explode(expr("sequence(lo, hi)")).as("k"), $"qs".as("norm_qs"))
     // within-source cumulative counts (same scan, source-partitioned)
     val scnts = q.groupBy($"source", $"qs").agg(count(lit(1)).as("c"))
-      .withColumn("bkt", expr("qs div 50000"))
-    val soffs = scnts.groupBy($"source", $"bkt").agg(sum($"c").as("bc"))
-      .withColumn("off", coalesce(sum($"bc").over(
-        Window.partitionBy($"source").orderBy($"bkt")
-          .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-      .select($"source", $"bkt", $"off")
-    val wS = Window.partitionBy($"source", $"bkt").orderBy($"qs")
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val ns = q.groupBy($"source").agg(count(lit(1)).as("n_s"))
-    val mapped = scnts.join(broadcast(soffs), Seq("source", "bkt"))
-      .withColumn("cum_s", sum($"c").over(wS) + $"off")
+    val mapped = OpUtils.prefixSums(scnts, Seq("source"), expr("qs div 50000"),
+        Seq($"qs"), "cum_s" -> $"c")
       .join(broadcast(ns), Seq("source"))
       .withColumn("k", expr("(cum_s * 1000 + n_s - 1) div n_s"))
       .join(broadcast(edges), Seq("k"))

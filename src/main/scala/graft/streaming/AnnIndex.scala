@@ -130,9 +130,9 @@ object AnnIndex extends IndexLifecycle {
     val cand = candidatePairs(spark, indexDir,
       graft.operators.Similarity.multiBucketsOf(q)) // (a_id corpus, b_id query)
     val corpusSlice = readOrEmpty(spark, corpusDir, vecSchema)
-      .join(broadcast(cand.select($"a_id").distinct()),
-        col("vec_id") === col("a_id"))
-      .select($"a_id", $"embedding".as("ea"))
+      .join(broadcast(cand.select($"a_id")), col("vec_id") === col("a_id"),
+        "left_semi")
+      .select($"vec_id".as("a_id"), $"embedding".as("ea"))
     val qe = q.select($"vec_id".as("b_id"), $"embedding".as("eb"))
     val topk = graft.functions.TopKByScore(k)
     cand
@@ -195,8 +195,10 @@ object AnnIndex extends IndexLifecycle {
     // exact replay gate: ids already in the corpus drop out (id list is
     // corpus-sided but the probe side broadcasts — store only scanned)
     val existingIds = readOrEmpty(spark, corpusDir, vecSchema).select($"vec_id")
+    // a semi-join, not a de-duplicated inner join: its only consumer is
+    // the anti-join below, which needs no unique keys
     val idHits = existingIds
-      .join(broadcast(batch.select($"vec_id")), Seq("vec_id")).distinct()
+      .join(broadcast(batch.select($"vec_id")), Seq("vec_id"), "left_semi")
     // in-batch exact-id dedup (review finding): a vec_id delivered
     // twice in ONE micro-batch passes the corpus anti-join whole, and
     // the duplicated corpus row would diverge the row-vs-distinct heal

@@ -126,8 +126,18 @@ object FingerprintIndex extends IndexLifecycle {
     */
   private[graft] def batchProbePlan(spark: SparkSession, indexDir: String,
       batch: DataFrame, hasher: BandedHasher, maxHam: Long): DataFrame =
-    candidatePairs(spark, indexDir, hasher.hash(batch))
+    rejectedIds(spark, indexDir, hasher.hash(batch), maxHam)
+
+  /** Batch doc ids with an indexed signature at Hamming ≤ maxHam. The
+    * result is a multiset: an id repeats once per such indexed
+    * signature. Its one consumer anti-joins on it, which needs no unique
+    * keys, so no shuffle is paid to de-duplicate it.
+    */
+  private def rejectedIds(spark: SparkSession, indexDir: String,
+      batchFp: DataFrame, maxHam: Long): DataFrame =
+    candidatePairs(spark, indexDir, batchFp)
       .filter(col("ham") <= maxHam)
+      .select(col("b_id").as("doc_id"))
 
   /** Full store (re)derivation from the media corpus — bootstrap over an
     * existing corpus, compaction, crash recovery. One O(corpus) DECODE
@@ -179,16 +189,16 @@ object FingerprintIndex extends IndexLifecycle {
       rebuild(spark, corpusDir, indexDir, hasher)
     }
     val existingIds = readOrEmpty(spark, corpusDir, blobSchema).select($"doc_id")
+    // a semi-join, not a de-duplicated inner join: its only consumer is
+    // the anti-join below, which needs no unique keys
     val idHits = existingIds
-      .join(broadcast(batch.select($"doc_id")), Seq("doc_id")).distinct()
+      .join(broadcast(batch.select($"doc_id")), Seq("doc_id"), "left_semi")
     val fresh = ck(batch.join(broadcast(idHits), Seq("doc_id"), "left_anti")
       .select($"doc_id", $"blob"))
     // decode ONCE per batch; every downstream consumer reads the
     // checkpointed signatures, never the codec stage
     val batchFp = ck(hasher.hash(fresh))
-    val rejected = candidatePairs(spark, indexDir, batchFp)
-      .filter($"ham" <= maxHam)
-      .select($"b_id".as("doc_id")).distinct()
+    val rejected = rejectedIds(spark, indexDir, batchFp, maxHam)
     val admitted = ck(fresh.join(broadcast(rejected), Seq("doc_id"), "left_anti"))
     admitted.write.mode("append").parquet(corpusDir)
     val admittedFp = ck(batchFp

@@ -195,15 +195,18 @@ object NearDupIndex extends IndexLifecycle {
   }
 
   /** Verify stage: fetch arrays for candidate partners only, exact
-    * merge-intersection Jaccard, emit rejected batch ids.
+    * merge-intersection Jaccard, emit rejected batch ids. The result is
+    * a multiset: an id repeats once per verified indexed partner. Its
+    * one consumer anti-joins on it, which needs no unique keys, so no
+    * shuffle is paid to de-duplicate it.
     */
   private def verifyStage(spark: SparkSession, indexDir: String,
       batchIdx: DataFrame, cand: DataFrame, minJaccard: Double): DataFrame = {
     import spark.implicits._
     val docsStore = readOrEmpty(spark, s"$indexDir/docs", docsSchema)
-    val ca = docsStore.join(broadcast(cand.select($"a_id").distinct()),
-        docsStore("doc_id") === $"a_id")
-      .select($"a_id", $"harr".as("ha"), $"n".as("na"))
+    val ca = docsStore.join(broadcast(cand.select($"a_id")),
+        docsStore("doc_id") === $"a_id", "left_semi")
+      .select($"doc_id".as("a_id"), $"harr".as("ha"), $"n".as("na"))
     val cb = batchIdx
       .select($"doc_id".as("b_id"), $"harr".as("hb"), $"n".as("nb"))
     cand
@@ -213,7 +216,6 @@ object NearDupIndex extends IndexLifecycle {
       .withColumn("jaccard", $"i".cast("double") / ($"na" + $"nb" - $"i"))
       .filter($"jaccard" >= minJaccard)
       .select($"b_id".as("doc_id"))
-      .distinct()
   }
 
   /** Full index (re)derivation from the admitted corpus — initial

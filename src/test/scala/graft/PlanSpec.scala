@@ -477,22 +477,30 @@ class PlanSpec extends AnyFunSuite with SparkSpec {
         p.linesIterator.filter(_.contains("Join")).mkString("\n"))
   }
 
-  test("q186: quintile cuts never sort the customer relation globally") {
+  test("prefix-scan callers never sort a data-sized relation globally") {
     import org.apache.spark.sql.catalyst.plans.logical.{Window => LWindow}
-    // The three cut-point scans window per magnitude bucket; the only
-    // partition-less windows allowed are the bucket-offset prefix sums
-    // over the per-bucket aggregate (value-domain-sized, not data-sized).
-    val df = SparkEntry.queries("q186_rfm_segments")(spark, sfDir)
-    val offenders = df.queryExecution.analyzed.collect {
-      case w: LWindow if w.partitionSpec.isEmpty &&
-        !w.child.exists {
-          case a: org.apache.spark.sql.catalyst.plans.logical.Aggregate =>
-            a.groupingExpressions.exists(_.references.exists(_.name == "bkt"))
-          case _ => false
-        } => w
+    // Every OpUtils.prefixSums / exactCuts caller windows per bucket; the
+    // only partition-less windows allowed are the bucket-offset prefix
+    // sums over the per-bucket aggregate (bucket-count-sized, not
+    // data-sized).
+    val callers = Seq("q115_pps_sample", "q136_sorted_neighborhood",
+      "q151_gini_concentration", "q155_weighted_median", "q161_mad_dispersion",
+      "q162_iqr_outliers", "q174_pareto_cut", "q184_robust_means",
+      "q186_rfm_segments", "q195_quality_calibration", "q196_convert_quartiles",
+      "q198_theil_sen", "q201_exact_auc", "q218_quantile_normalize")
+    for (name <- callers) {
+      val df = SparkEntry.queries(name)(spark, sfDir)
+      val offenders = df.queryExecution.analyzed.collect {
+        case w: LWindow if w.partitionSpec.isEmpty &&
+          !w.child.exists {
+            case a: org.apache.spark.sql.catalyst.plans.logical.Aggregate =>
+              a.groupingExpressions.exists(_.references.exists(_.name == "bkt"))
+            case _ => false
+          } => w
+      }
+      assert(offenders.isEmpty,
+        s"$name: a data-sized relation funnels through one window:\n$offenders")
     }
-    assert(offenders.isEmpty,
-      s"customer-sized relation funnels through one window:\n$offenders")
     val p = plan("q186_rfm_segments")
     assert(!p.contains("Percentile"),
       "cuts must come from rank arithmetic, never a percentile buffer")

@@ -287,6 +287,28 @@ class CorpusStreamsSpec extends AnyFunSuite with SparkSpec {
       .collect().map(_.getLong(0)).toSet == Set(1L, 2L, 11L))
   }
 
+  test("indexed near-dup: a batch doc with several indexed near-copies is rejected; no id is duplicated") {
+    val base = java.nio.file.Files.createTempDirectory("graft_ndidx_multiset")
+    val corpus = base.resolve("corpus").toString
+    val indexDir = base.resolve("index").toString
+    def toks(p: String, n: Int) = (1 to n).map(i => s"$p$i").mkString(" ")
+    // 1 and 2 are near-copies of each other, both admitted in-batch
+    NearDupIndex.admitBatch(docsDf(1L -> toks("a", 40), 2L -> (toks("a", 39) + " zz"),
+      3L -> toks("b", 40)), corpus, indexDir)
+    val batch = docsDf(101L -> (toks("a", 39) + " yy"), 102L -> toks("c", 40))
+      .localCheckpoint()
+    // the rejected relation is a multiset: 101 repeats once per verified
+    // indexed partner
+    val rejected = NearDupIndex.batchProbePlan(spark, indexDir, batch)
+      .as[Long].collect().toSeq
+    assert(rejected.count(_ == 101L) >= 2 && !rejected.contains(102L),
+      s"101 should reject through several indexed docs: $rejected")
+    NearDupIndex.admitBatch(batch, corpus, indexDir)
+    val ids = spark.read.parquet(corpus).select($"doc_id").as[Long].collect().toSeq
+    assert(ids.size == ids.distinct.size, s"duplicated corpus ids: ${ids.diff(ids.distinct)}")
+    assert(ids.toSet == Set(1L, 2L, 3L, 102L), s"admitted ${ids.toSet}")
+  }
+
   test("index refuses a probe at a different threshold than it was built for") {
     // prefix lengths derive from the build threshold: probing a t=0.8
     // index at t=0.7 would silently lose recall, so it must fail fast

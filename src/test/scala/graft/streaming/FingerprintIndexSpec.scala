@@ -119,6 +119,33 @@ class FingerprintIndexSpec extends AnyFunSuite with SparkSpec {
       s"re-mastered copy must be rejected, reversed admitted: $admitted")
   }
 
+  test("a batch payload with several indexed near-copies is rejected; no id is duplicated") {
+    val (corpus, index) = freshDirs()
+    // 1 and 2 are near-copies of each other (the retouch is Hamming <= 7),
+    // both admitted in-batch
+    FingerprintIndex.admitBatch(Seq((1L, gradientPng(patch = false)),
+        (2L, gradientPng(patch = true)),
+        (3L, gradientPng(patch = false, invert = true))).toDF("doc_id", "blob"),
+      corpus, index, FingerprintIndex.imageHasher)
+    val batch = Seq((101L, gradientPng(patch = false)),
+      (102L, "just some text payload".getBytes("UTF-8"))).toDF("doc_id", "blob")
+      .localCheckpoint()
+    // the rejected relation is a multiset: 101 repeats once per
+    // rejecting indexed signature
+    val rejected = FingerprintIndex.batchProbePlan(spark, index, batch,
+        FingerprintIndex.imageHasher, maxHam = 7L)
+      .as[Long].collect().toSeq
+    assert(rejected.count(_ == 101L) >= 2 && !rejected.contains(102L),
+      s"101 should reject through several indexed signatures: $rejected")
+    FingerprintIndex.admitBatch(batch, corpus, index, FingerprintIndex.imageHasher)
+    val ids = spark.read.schema(FingerprintIndex.blobSchema).parquet(corpus)
+      .select($"doc_id").as[Long].collect().toSeq
+    assert(ids.size == ids.distinct.size, s"duplicated corpus ids: ${ids.diff(ids.distinct)}")
+    assert(ids.toSet == Set(1L, 2L, 3L, 102L), s"admitted ${ids.toSet}")
+    assert(spark.read.schema(FingerprintIndex.fpSchema).parquet(s"$index/fp").count() == 4L,
+      "store and corpus agree")
+  }
+
   test("hasher guard: a store built by the image hasher refuses audio probes") {
     val (corpus, index) = freshDirs()
     FingerprintIndex.admitBatch(
