@@ -254,23 +254,7 @@ object Similarity {
     */
   def q193MutualNn(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val bk = lshMultiBuckets(spark, dir)
-    val emb = Tables.embeddings(spark, dir)
-    val cand = bk.as("x").join(bk.as("y"),
-        $"x.tbl" === $"y.tbl" && $"x.bucket" === $"y.bucket" &&
-          $"x.vec_id" =!= $"y.vec_id")
-      .select($"x.vec_id".as("a_id"), $"y.vec_id".as("b_id"))
-      .distinct() // multi-table co-occurrences score once
-    val va = emb.select($"vec_id".as("a_id"), $"embedding".as("ea"))
-    val vb = emb.select($"vec_id".as("b_id"), $"embedding".as("eb"))
-    val nn = cand
-      .join(va, Seq("a_id"))
-      .join(vb, Seq("b_id"))
-      .withColumn("cs", VectorFunctions.cosineSim($"ea", $"eb"))
-      .filter(!isnan($"cs"))
-      .groupBy($"a_id")
-      .agg(min(struct((-$"cs").as("nc"), $"b_id".as("b"))).as("t"))
-      .select($"a_id", $"t.b".as("b_id"), (-$"t.nc").as("cs"))
+    val nn = q193NearestNeighbours(spark, dir)
       .localCheckpoint() // both sides of the mutuality join
     nn.join(nn.select($"b_id".as("a_id"), $"a_id".as("b_id")),
         Seq("a_id", "b_id"))
@@ -279,12 +263,12 @@ object Similarity {
       .orderBy($"a_id")
   }
 
-  /** Un-checkpointed q193 pipeline for plan-shape pinning (the q31/q48
-    * precedent: the declared query checkpoints its NN relation, so its
-    * explained plan is just the mutuality join over a leaf — the
-    * candidate-join shape lives here).
+  /** q193's candidate and verify stage: each vector's in-index cosine
+    * argmax (a_id, b_id, cs). The declared query checkpoints it, so its
+    * explained plan is just the mutuality join over a leaf; PlanSpec pins
+    * the candidate-join shape on this un-checkpointed view.
     */
-  private[graft] def q193Pipeline(spark: SparkSession, dir: String): DataFrame = {
+  private[graft] def q193NearestNeighbours(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val bk = lshMultiBuckets(spark, dir)
     val emb = Tables.embeddings(spark, dir)
@@ -292,7 +276,7 @@ object Similarity {
         $"x.tbl" === $"y.tbl" && $"x.bucket" === $"y.bucket" &&
           $"x.vec_id" =!= $"y.vec_id")
       .select($"x.vec_id".as("a_id"), $"y.vec_id".as("b_id"))
-      .distinct()
+      .distinct() // multi-table co-occurrences score once
     val va = emb.select($"vec_id".as("a_id"), $"embedding".as("ea"))
     val vb = emb.select($"vec_id".as("b_id"), $"embedding".as("eb"))
     cand
@@ -3129,8 +3113,7 @@ object Similarity {
       // (r16): q48 keeps the ≥ 0.45 band, q230 mines the < 0.45 band of
       // the SAME relation, so the candidate join + cosine verification
       // is paid once per (session, dir) — nested-memo accounting keeps
-      // the two ledger line items additive. Values identical to the
-      // unmemoized q48Pipeline (one filter over one kernel).
+      // the two ledger line items additive.
       ivfCandScoredMemo(spark, dir)
         .filter($"cs" >= 0.45)
         .orderBy($"a_id", $"b_id")
@@ -3177,47 +3160,13 @@ object Similarity {
     val va = emb.select($"vec_id".as("a_id"), $"embedding".as("ea"))
     val vb = emb.select($"vec_id".as("b_id"), $"embedding".as("eb"))
     cand
-      .join(va, Seq("a_id"))
-      .join(vb, Seq("b_id"))
-      .withColumn("cs", VectorFunctions.cosineSim($"ea", $"eb"))
-      .select($"a_id", $"b_id", $"cs")
-  }
-
-  /** Unmemoized pipeline (plan-shape tests pin this view — the memoized
-    * head presents as a checkpoint leaf after first touch).
-    */
-  private[graft] def q48Pipeline(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    // assignment and both verification sides branch from the embeddings
-    val emb = Tables.embeddings(spark, dir)
-      .select($"vec_id", $"embedding")
-      .spreadAcrossCores
-      .localCheckpoint()
-    val pivots = emb.orderBy($"vec_id").limit(ivfPivots)
-      .select($"vec_id".as("p_id"), $"embedding".as("pe"))
-    val w = Window.partitionBy($"vec_id").orderBy($"cs_p".desc, $"p_id")
-    val assign = emb
-      .crossJoin(broadcast(pivots))
-      .withColumn("cs_p", VectorFunctions.cosineSim($"embedding", $"pe"))
-      .withColumn("rk", row_number().over(w))
-      .filter($"rk" <= ivfProbe)
-      .select($"vec_id", $"p_id")
-    val cand = assign.as("x").join(assign.as("y"),
-        $"x.p_id" === $"y.p_id" && $"x.vec_id" < $"y.vec_id")
-      .select($"x.vec_id".as("a_id"), $"y.vec_id".as("b_id"))
-      .distinct()
-    val va = emb.select($"vec_id".as("a_id"), $"embedding".as("ea"))
-    val vb = emb.select($"vec_id".as("b_id"), $"embedding".as("eb"))
-    cand
       // verification joins UNHINTED: va/vb are corpus-sized embedding
       // tables — AQE broadcasts at fixture SF, vec_id shuffle join at
       // scale (a forced hint would pin the OOM form)
       .join(va, Seq("a_id"))
       .join(vb, Seq("b_id"))
       .withColumn("cs", VectorFunctions.cosineSim($"ea", $"eb"))
-      .filter($"cs" >= 0.45)
       .select($"a_id", $"b_id", $"cs")
-      .orderBy($"a_id", $"b_id")
   }
 
   /** q48's candidate+verify chain ending in `pairs` (a_id, b_id, cs) —

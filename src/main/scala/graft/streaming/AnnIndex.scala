@@ -1,8 +1,8 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{ArrayType, FloatType, IntegerType, LongType, StructField, StructType}
+import org.apache.spark.sql.types.{ArrayType, FloatType, IntegerType, LongType, StringType, StructField, StructType}
 
 /** Incrementally-maintained ANN index — the [[NearDupIndex]] discipline
   * applied to the tuned multi-table LSH index (r12 verdict item 3).
@@ -35,14 +35,11 @@ import org.apache.spark.sql.types.{ArrayType, FloatType, IntegerType, LongType, 
   * pins on the probe plan.
   *
   * Crash story: derived state, corpus parquet is the source of truth.
-  * Stores append after the corpus append; divergence (count mismatch,
-  * both parquet-footer metadata reads) triggers an in-line [[rebuild]],
-  * which also auto-bootstraps an intake pointed at a pre-existing
-  * corpus.
+  * Stores append after the corpus append; divergence (corpus rows vs
+  * indexed ids, one aggregate) triggers an in-line [[rebuild]], which
+  * also auto-bootstraps an intake pointed at a pre-existing corpus.
   */
 object AnnIndex extends IndexLifecycle {
-
-  protected def confScope: String = "annIndex"
 
   // tbl is LONG: multiBucketsOf derives it via `p DIV 8` (IntegralDivide)
   val bkSchema: StructType = StructType(Seq(
@@ -56,26 +53,24 @@ object AnnIndex extends IndexLifecycle {
     StructField("embedding", ArrayType(FloatType)),
     StructField("label", IntegerType)))
 
-  private def metaRow(spark: SparkSession, indexDir: String): Option[(Long, String)] =
-    metaRowRaw(spark, indexDir).map(r => (r.getLong(0), r.getString(1)))
+  /** (n_vecs at the last rebuild, logic_version). */
+  private val meta = new MetaStore(StructType(Seq(
+    StructField("n_vecs", LongType),
+    StructField("logic_version", StringType))))
 
-  private def writeMeta(spark: SparkSession, indexDir: String, n: Long): Unit = {
-    import spark.implicits._
-    Seq((n, graft.operators.Similarity.lshMultiLogicVersion))
-      .toDF("n_vecs", "logic_version").coalesce(1)
-      .write.mode("overwrite").parquet(s"$indexDir/meta")
-  }
-
-  /** An index persisted under a different tables/bits/seeding version
-    * must refuse probes: buckets would be incomparable garbage, not
-    * degraded recall.
+  /** The stored meta, read once per call. An index persisted under a
+    * different tables/bits/seeding version must refuse probes: buckets
+    * would be incomparable garbage, not degraded recall.
     */
-  private def checkVersion(spark: SparkSession, indexDir: String): Unit =
-    metaRow(spark, indexDir).foreach { case (_, v) =>
-      require(v == graft.operators.Similarity.lshMultiLogicVersion,
-        s"index at $indexDir was built with LSH version $v, this code is " +
+  private def checkedMeta(spark: SparkSession, indexDir: String): Option[Row] = {
+    val m = meta.read(spark, indexDir)
+    m.foreach { r =>
+      require(r.getString(1) == graft.operators.Similarity.lshMultiLogicVersion,
+        s"index at $indexDir was built with LSH version ${r.getString(1)}, this code is " +
           s"${graft.operators.Similarity.lshMultiLogicVersion} — rebuild() required")
     }
+    m
+  }
 
   /** Candidate (batch, corpus) pairs from probing the persisted bucket
     * store with a batch's bucket rows: equi-join on (tbl, bucket) with
@@ -125,7 +120,7 @@ object AnnIndex extends IndexLifecycle {
   def topK(spark: SparkSession, indexDir: String, corpusDir: String,
       queries: DataFrame, k: Int): DataFrame = {
     import spark.implicits._
-    checkVersion(spark, indexDir)
+    checkedMeta(spark, indexDir)
     val q = queries.select($"vec_id", $"embedding")
     val cand = candidatePairs(spark, indexDir,
       graft.operators.Similarity.multiBucketsOf(q)) // (a_id corpus, b_id query)
@@ -162,7 +157,7 @@ object AnnIndex extends IndexLifecycle {
       val bk = ck(graft.operators.Similarity.multiBucketsOf(corpus))
       val n = bk.select($"vec_id").distinct().count()
       bk.coalesce(compactFiles(spark, n)).write.mode("overwrite").parquet(s"$indexDir/bk")
-      writeMeta(spark, indexDir, n)
+      meta.write(spark, indexDir, n, graft.operators.Similarity.lshMultiLogicVersion)
       n
     } finally ck.freeAll()
   }
@@ -172,9 +167,9 @@ object AnnIndex extends IndexLifecycle {
     * append survivors to the corpus store AND their bucket rows to the
     * index. In-batch near-dups are both admitted (the
     * [[CorpusStreams.admitNearDupBatch]] policy — in-batch clustering is
-    * a separate step). Replay-safe the same way: a re-delivered batch's
-    * ids are already indexed, so the exact id anti-join drops them
-    * before any append.
+    * a separate step). Replay-safe through the exact id gate
+    * ([[IndexLifecycle.replayGate]]): a re-delivered batch's ids are
+    * already in the corpus, so they drop out before any append.
     */
   def admitBatch(batch: DataFrame, corpusDir: String, indexDir: String,
       maxCosine: Double = 0.92): Unit = {
@@ -182,67 +177,32 @@ object AnnIndex extends IndexLifecycle {
     import spark.implicits._
     val ck = new CkptScope
     try {
-    checkVersion(spark, indexDir)
-    if (metaRow(spark, indexDir).isEmpty) writeMeta(spark, indexDir, 0L)
+    if (checkedMeta(spark, indexDir).isEmpty)
+      meta.write(spark, indexDir, 0L, graft.operators.Similarity.lshMultiLogicVersion)
     // Pre-probe self-heal ([[IndexLifecycle.healIfNeeded]] — ordering
-    // argument in the trait doc). Both probes are metadata reads.
-    val preIdxCount = readOrEmpty(spark, s"$indexDir/bk", bkSchema)
-      .select($"vec_id").distinct().count()
-    val preCorpusCount = readOrEmpty(spark, corpusDir, vecSchema).count()
+    // argument in the trait doc).
+    val (preCorpusCount, preIdxCount) = healCounts(
+      readOrEmpty(spark, corpusDir, vecSchema),
+      readOrEmpty(spark, s"$indexDir/bk", bkSchema), "vec_id")
     healIfNeeded(spark, preCorpusCount, preIdxCount, Seq(s"$indexDir/bk")) {
       rebuild(spark, corpusDir, indexDir)
     }
-    // exact replay gate: ids already in the corpus drop out (id list is
-    // corpus-sided but the probe side broadcasts — store only scanned)
-    val existingIds = readOrEmpty(spark, corpusDir, vecSchema).select($"vec_id")
-    // a semi-join, not a de-duplicated inner join: its only consumer is
-    // the anti-join below, which needs no unique keys
-    val idHits = existingIds
-      .join(broadcast(batch.select($"vec_id")), Seq("vec_id"), "left_semi")
-    // in-batch exact-id dedup (review finding): a vec_id delivered
-    // twice in ONE micro-batch passes the corpus anti-join whole, and
-    // the duplicated corpus row would diverge the row-vs-distinct heal
-    // counts FOREVER (a full rebuild per batch from then on).
-    // Deterministic winner: lowest embedding hash.
-    val fresh = ck(batch.join(broadcast(idHits), Seq("vec_id"), "left_anti")
-      .withColumn("rk", row_number().over(
-        org.apache.spark.sql.expressions.Window.partitionBy($"vec_id")
-          .orderBy(xxhash64($"embedding"), $"label")))
-      .filter($"rk" === 1)
+    // exact replay gate; an in-batch duplicate id keeps the lowest
+    // embedding hash
+    val fresh = ck(replayGate(batch, readOrEmpty(spark, corpusDir, vecSchema),
+        "vec_id", xxhash64($"embedding"), $"label")
       .select($"vec_id", $"embedding", $"label"))
     val batchBk = ck(graft.operators.Similarity.multiBucketsOf(fresh))
     val rejected = cosineRejectedIds(spark, corpusDir, vecSchema, fresh,
       ck(candidatePairs(spark, indexDir, batchBk)), maxCosine)
     val admitted = ck(fresh.join(broadcast(rejected), Seq("vec_id"), "left_anti"))
     admitted.write.mode("append").parquet(corpusDir)
-    val admittedBk = ck(batchBk
-      .join(broadcast(admitted.select($"vec_id")), Seq("vec_id")))
-    val nAdmitted = admittedBk.select($"vec_id").distinct().count()
-    admittedBk.repartition(appendWriters(spark, nAdmitted), $"bucket")
-      .write.mode("append").parquet(s"$indexDir/bk")
+    appendStore(spark,
+      batchBk.join(broadcast(admitted.select($"vec_id")), Seq("vec_id")),
+      admitted.count(), s"$indexDir/bk", $"bucket")
     compactIfOverCap(spark, Seq(s"$indexDir/bk")) {
       rebuild(spark, corpusDir, indexDir)
     }
     } finally ck.freeAll()
   }
-
-  /** The indexed ANN admission policy as a continuous query — the
-    * [[NearDupIndex.nearDupIntakeIndexed]] sibling for vector corpora:
-    * embedding files land in `srcDir`, each micro-batch admits vectors
-    * with no indexed near-duplicate neighbor, per-batch cost = batch +
-    * candidates.
-    */
-  def annIntakeIndexed(spark: SparkSession, srcDir: String,
-      corpusDir: String, indexDir: String, checkpointDir: String,
-      maxCosine: Double = 0.92,
-      glob: String = "embeddings.parquet"): org.apache.spark.sql.streaming.StreamingQuery =
-    spark.readStream.schema(vecSchema)
-      .option("pathGlobFilter", glob)
-      .parquet(srcDir)
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        admitBatch(batch, corpusDir, indexDir, maxCosine)
-      }
-      .start()
 }

@@ -1,8 +1,8 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{ArrayType, BinaryType, IntegerType, LongType, StructField, StructType}
+import org.apache.spark.sql.types.{ArrayType, BinaryType, IntegerType, LongType, StringType, StructField, StructType}
 
 /** A banded perceptual hasher: derives the 8-band signature relation
   * (doc_id, bands: Array[Int]) from a (doc_id, blob) relation. `name` +
@@ -43,8 +43,6 @@ final case class BandedHasher(name: String, version: String,
   */
 object FingerprintIndex extends IndexLifecycle {
 
-  protected def confScope: String = "fpIndex"
-
   val fpSchema: StructType = StructType(Seq(
     StructField("doc_id", LongType),
     StructField("bands", ArrayType(IntegerType))))
@@ -70,29 +68,27 @@ object FingerprintIndex extends IndexLifecycle {
     df => graft.operators.Multimodal.audioFpAll(df).toDF()
       .select(col("doc_id"), col("sbands").as("bands")))
 
-  private def metaRow(spark: SparkSession,
-      indexDir: String): Option[(Long, String, String)] =
-    metaRowRaw(spark, indexDir)
-      .map(r => (r.getLong(0), r.getString(1), r.getString(2)))
+  /** (n_docs at the last rebuild, hasher, logic_version). */
+  private val meta = new MetaStore(StructType(Seq(
+    StructField("n_docs", LongType),
+    StructField("hasher", StringType),
+    StructField("logic_version", StringType))))
 
-  private def writeMeta(spark: SparkSession, indexDir: String, n: Long,
-      hasher: BandedHasher): Unit = {
-    import spark.implicits._
-    Seq((n, hasher.name, hasher.version))
-      .toDF("n_docs", "hasher", "logic_version").coalesce(1)
-      .write.mode("overwrite").parquet(s"$indexDir/meta")
-  }
-
-  /** A store persisted under a different hasher or arithmetic version
-    * must refuse probes: band keys would be incomparable garbage.
+  /** The stored meta, read once per call. A store persisted under a
+    * different hasher or arithmetic version must refuse probes: band
+    * keys would be incomparable garbage.
     */
-  private def checkVersion(spark: SparkSession, indexDir: String,
-      hasher: BandedHasher): Unit =
-    metaRow(spark, indexDir).foreach { case (_, h, v) =>
+  private def checkedMeta(spark: SparkSession, indexDir: String,
+      hasher: BandedHasher): Option[Row] = {
+    val m = meta.read(spark, indexDir)
+    m.foreach { r =>
+      val (h, v) = (r.getString(1), r.getString(2))
       require(h == hasher.name && v == hasher.version,
         s"fingerprint store at $indexDir was built by $h/$v, this intake is " +
           s"${hasher.name}/${hasher.version} — rebuild() required")
     }
+    m
+  }
 
   /** Candidate (store, batch) pairs with their full banded Hamming
     * distance: equi-join on (band_id, band_key) with the batch side
@@ -155,7 +151,7 @@ object FingerprintIndex extends IndexLifecycle {
       val fp = ck(hasher.hash(corpus))
       val n = fp.select($"doc_id").distinct().count()
       fp.coalesce(compactFiles(spark, n)).write.mode("overwrite").parquet(s"$indexDir/fp")
-      writeMeta(spark, indexDir, n, hasher)
+      meta.write(spark, indexDir, n, hasher.name, hasher.version)
       n
     } finally ck.freeAll()
   }
@@ -164,9 +160,10 @@ object FingerprintIndex extends IndexLifecycle {
     * with an indexed signature at Hamming ≤ maxHam (perceptual near-dup),
     * append survivors' payloads to the corpus store and their signatures
     * to the index. In-batch near-dups are both admitted (the
-    * [[CorpusStreams.admitNearDupBatch]] policy). Replay-safe: a
-    * re-delivered batch's ids are already in the corpus, so the exact id
-    * anti-join drops them before any append.
+    * [[CorpusStreams.admitNearDupBatch]] policy). Replay-safe through
+    * the exact id gate ([[IndexLifecycle.replayGate]]): a re-delivered
+    * batch's ids are already in the corpus, so they drop out before any
+    * append, and a doc_id delivered twice in one batch is admitted once.
     */
   def admitBatch(batch: DataFrame, corpusDir: String, indexDir: String,
       hasher: BandedHasher, maxHam: Long = 7L): Unit = {
@@ -179,61 +176,32 @@ object FingerprintIndex extends IndexLifecycle {
     import spark.implicits._
     val ck = new CkptScope
     try {
-    checkVersion(spark, indexDir, hasher)
-    if (metaRow(spark, indexDir).isEmpty) writeMeta(spark, indexDir, 0L, hasher)
+    if (checkedMeta(spark, indexDir, hasher).isEmpty)
+      meta.write(spark, indexDir, 0L, hasher.name, hasher.version)
     // Pre-probe self-heal ([[IndexLifecycle.healIfNeeded]] — ordering
-    // argument in the trait doc). Both probes are metadata reads.
-    val preIdxCount = readOrEmpty(spark, s"$indexDir/fp", fpSchema).count()
-    val preCorpusCount = readOrEmpty(spark, corpusDir, blobSchema).count()
+    // argument in the trait doc).
+    val (preCorpusCount, preIdxCount) = healCounts(
+      readOrEmpty(spark, corpusDir, blobSchema),
+      readOrEmpty(spark, s"$indexDir/fp", fpSchema), "doc_id")
     healIfNeeded(spark, preCorpusCount, preIdxCount, Seq(s"$indexDir/fp")) {
       rebuild(spark, corpusDir, indexDir, hasher)
     }
-    val existingIds = readOrEmpty(spark, corpusDir, blobSchema).select($"doc_id")
-    // a semi-join, not a de-duplicated inner join: its only consumer is
-    // the anti-join below, which needs no unique keys
-    val idHits = existingIds
-      .join(broadcast(batch.select($"doc_id")), Seq("doc_id"), "left_semi")
-    val fresh = ck(batch.join(broadcast(idHits), Seq("doc_id"), "left_anti")
-      .select($"doc_id", $"blob"))
+    // exact replay gate; an in-batch duplicate id keeps the lowest
+    // payload hash
+    val fresh = ck(replayGate(batch.select($"doc_id", $"blob"),
+      readOrEmpty(spark, corpusDir, blobSchema), "doc_id", xxhash64($"blob")))
     // decode ONCE per batch; every downstream consumer reads the
     // checkpointed signatures, never the codec stage
     val batchFp = ck(hasher.hash(fresh))
     val rejected = rejectedIds(spark, indexDir, batchFp, maxHam)
     val admitted = ck(fresh.join(broadcast(rejected), Seq("doc_id"), "left_anti"))
     admitted.write.mode("append").parquet(corpusDir)
-    val admittedFp = ck(batchFp
-      .join(broadcast(admitted.select($"doc_id")), Seq("doc_id")))
-    val nAdmitted = admittedFp.count()
-    admittedFp.coalesce(appendWriters(spark, nAdmitted))
-      .write.mode("append").parquet(s"$indexDir/fp")
+    appendStore(spark,
+      batchFp.join(broadcast(admitted.select($"doc_id")), Seq("doc_id")),
+      admitted.count(), s"$indexDir/fp", $"doc_id")
     compactIfOverCap(spark, Seq(s"$indexDir/fp")) {
       rebuild(spark, corpusDir, indexDir, hasher)
     }
     } finally ck.freeAll()
-  }
-
-  /** The fingerprint-indexed admission policy as a continuous query —
-    * media blob files land in `srcDir`, each micro-batch admits payloads
-    * with no indexed perceptual near-duplicate; per-batch cost = batch
-    * decode + candidates. Pass [[imageHasher]] or [[audioHasher]].
-    */
-  def mediaIntakeIndexed(spark: SparkSession, srcDir: String,
-      corpusDir: String, indexDir: String, checkpointDir: String,
-      hasher: BandedHasher, maxHam: Long = 7L,
-      glob: String = "*.parquet"): org.apache.spark.sql.streaming.StreamingQuery = {
-    // fail at CONSTRUCTION, not on the first micro-batch hours later
-    // (admitBatch re-checks, but a misconfigured stream should never
-    // start) — the 8-band pigeonhole bound, see admitBatch
-    require(maxHam <= 7L,
-      s"maxHam=$maxHam exceeds the 8-band pigeonhole bound (lossless only for <= 7)")
-    spark.readStream.schema(blobSchema)
-      .option("pathGlobFilter", glob)
-      .parquet(srcDir)
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        admitBatch(batch, corpusDir, indexDir, hasher, maxHam)
-      }
-      .start()
   }
 }

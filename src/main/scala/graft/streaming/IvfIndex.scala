@@ -101,8 +101,6 @@ import org.apache.spark.sql.types.{ArrayType, BooleanType, FloatType, IntegerTyp
   */
 object IvfIndex extends IndexLifecycle {
 
-  protected def confScope: String = "ivfIndex"
-
   // rk is INT: row_number's type, preserved by the shared kernel;
   // code/resid are null on rk > payload_rk rows (the payload lives on
   // the membership slice, duplicated per assignment — FAISS
@@ -186,58 +184,23 @@ object IvfIndex extends IndexLifecycle {
     (rows, rows.foldLeft(0L)((fp, r) => fp ^ r.getLong(cols.length)))
   }
 
-  private type Listing = Seq[(String, Long, Long)]
-
-  /** The file identity of the epoch stores (`meta/`, `piv/`, `cb/`):
-    * (path, length, mtime) per file — a metadata-only listing. Spark's
-    * overwrite writes fresh part-file names, so any rewrite of these
-    * stores changes it.
+  /** The last epoch loaded or committed per `indexDir`, keyed by the
+    * listing of its stores: `meta/`, `piv/` and `cb/`.
     */
-  private def epochListing(spark: SparkSession, indexDir: String): Listing =
-    Seq("meta", "piv", "cb").flatMap { d =>
-      val p = new org.apache.hadoop.fs.Path(s"$indexDir/$d")
-      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (!fs.exists(p)) Nil
-      else fs.listStatus(p).toSeq
-        .map(s => (s.getPath.toString, s.getLen, s.getModificationTime))
-        .sortBy(_._1)
-    }
-
-  /** The last epoch loaded or committed per `indexDir`, with the listing
-    * it was read from or written under — so a stream's calls in one JVM
-    * load an unchanged epoch once. LRU, a few dirs: the entries are
-    * driver-side copies of bounded stores.
-    */
-  private val snapshots = new java.util.LinkedHashMap[String, (Listing, Epoch)](8, 0.75f, true) {
-    override def removeEldestEntry(e: java.util.Map.Entry[String, (Listing, Epoch)]): Boolean =
-      size() > 4
-  }
-
-  private def remember(spark: SparkSession, indexDir: String, epoch: Epoch): Unit = {
-    val listing = epochListing(spark, indexDir)
-    snapshots.synchronized { snapshots.put(indexDir, (listing, epoch)) }
-  }
+  private val epochs = new Snapshots[Epoch]("meta", "piv", "cb")
 
   /** The epoch as stored under `indexDir`: the snapshot when the stores'
     * listing is unchanged since it was taken, else one meta read and one
-    * collect per bounded store — kept only if the stores did not change
-    * under the read.
+    * collect per bounded store.
     */
-  private def loadEpoch(spark: SparkSession, indexDir: String): Epoch = {
-    val before = epochListing(spark, indexDir)
-    snapshots.synchronized { Option(snapshots.get(indexDir)) }
-      .collect { case (l, e) if l == before => e }
-      .getOrElse {
-        val (piv, pivotFp) = collectHashed(
-          readOrEmpty(spark, s"$indexDir/piv", pivSchema), pivCols)
-        val (cb, cbFp) = collectHashed(
-          readOrEmpty(spark, s"$indexDir/cb", cbSchema), cbCols)
-        val e = Epoch(metaRow(spark, indexDir), IvfKernels(piv, cb), pivotFp, cbFp)
-        if (epochListing(spark, indexDir) == before)
-          snapshots.synchronized { snapshots.put(indexDir, (before, e)) }
-        e
-      }
-  }
+  private def loadEpoch(spark: SparkSession, indexDir: String): Epoch =
+    epochs.load(spark, indexDir) {
+      val (piv, pivotFp) = collectHashed(
+        readOrEmpty(spark, s"$indexDir/piv", pivSchema), pivCols)
+      val (cb, cbFp) = collectHashed(
+        readOrEmpty(spark, s"$indexDir/cb", cbSchema), cbCols)
+      Epoch(metaRow(spark, indexDir), IvfKernels(piv, cb), pivotFp, cbFp)
+    }
 
   private def requireVersion(indexDir: String, m: Meta): Unit =
     require(m.version == graft.operators.Similarity.ivfLogicVersion,
@@ -281,12 +244,11 @@ object IvfIndex extends IndexLifecycle {
       nlist: Int, nprobe: Int, payloadRk: Int, pivotSrc: String,
       pivotFp: Long, cbFp: Long, committed: Boolean): Unit = {
     import spark.implicits._
-    Seq((n, nlist, nprobe, payloadRk,
+    writeMetaDf(indexDir, Seq((n, nlist, nprobe, payloadRk,
         graft.operators.Similarity.ivfLogicVersion,
         pivotSrc, pivotFp, cbFp, committed))
       .toDF("n_vecs", "nlist", "nprobe", "payload_rk", "logic_version",
-        "pivot_src", "pivot_fp", "cb_fp", "committed")
-      .coalesce(1).write.mode("overwrite").parquet(s"$indexDir/meta")
+        "pivot_src", "pivot_fp", "cb_fp", "committed"))
   }
 
   /** Pivot source for rebuilds: `spark.graft.ivfIndex.trainedPivots`
@@ -648,7 +610,7 @@ object IvfIndex extends IndexLifecycle {
       fpPiv, fpCb, committed = true)
     val epoch = Epoch(Some(Meta(n, nlist, nprobe, payloadRk, sim.ivfLogicVersion,
       fpPiv, fpCb, committed = true)), kernels, fpPiv, fpCb)
-    remember(spark, indexDir, epoch)
+    epochs.remember(spark, indexDir, epoch)
     epoch
   }
 
@@ -677,45 +639,32 @@ object IvfIndex extends IndexLifecycle {
     // Pre-probe self-heal ([[IndexLifecycle.healIfNeeded]] — ordering
     // argument in the trait doc), extended with the epoch-consistency
     // check: counts catch orphaned rows, fingerprints + the committed
-    // flag catch mixed-epoch state the counts cannot see. Both counts
-    // come from ONE aggregate over the tagged union of the two stores;
-    // the struct keeps a NULL vec_id a distinct value, as `distinct()`
-    // counted it.
-    val counts = readOrEmpty(spark, s"$indexDir/near", nearSchema)
-      .select(lit(true).as("idx"), $"vec_id")
-      .union(readOrEmpty(spark, corpusDir, vecSchema)
-        .select(lit(false).as("idx"), lit(null).cast(LongType).as("vec_id")))
-      .agg(countDistinct(when($"idx", struct($"vec_id"))),
-        count(when(!$"idx", lit(1))))
-      .head()
-    val preIdxCount = counts.getLong(0)
-    val preCorpusCount = counts.getLong(1)
-    var epoch = loaded
-    var healed = false
-    def doRebuild(): Unit = {
-      epoch = rebuildEpoch(spark, corpusDir, indexDir, None); healed = true
-    }
-    loaded.meta match {
-      case None =>
-        if (preIdxCount > 0 || preCorpusCount > 0) doRebuild() // lost meta under data: re-derive, never re-stamp
-        else {
+    // flag catch mixed-epoch state the counts cannot see.
+    val (preCorpusCount, preIdxCount) = healCounts(
+      readOrEmpty(spark, corpusDir, vecSchema),
+      readOrEmpty(spark, s"$indexDir/near", nearSchema), "vec_id")
+    def rebuilt(): Epoch = rebuildEpoch(spark, corpusDir, indexDir, None)
+    val epoch = loaded.meta match {
+      // lost meta under data: re-derive, never re-stamp
+      case None if preIdxCount > 0 || preCorpusCount > 0 => rebuilt()
+      // mixed-epoch state: uncommitted, or piv/cb unlike their fingerprints
+      case Some(m) if !(m.committed &&
+          m.pivotFp == loaded.pivotFp && m.cbFp == loaded.cbFp) => rebuilt()
+      case stored =>
+        val stamped = if (stored.nonEmpty) loaded else {
           val nlist0 = sim.ivfPolicyNlist(0L)
           val m0 = Meta(0L, nlist0, sim.ivfPolicyNprobe(nlist0), 1,
             sim.ivfLogicVersion, 0L, 0L, committed = true)
           writeMeta(spark, indexDir, m0.n, m0.nlist, m0.nprobe, m0.payloadRk,
             if (trainedPivots(spark)) "trained" else "policy", 0L, 0L,
             committed = true)
-          epoch = loaded.copy(meta = Some(m0))
-          remember(spark, indexDir, epoch)
+          val e = loaded.copy(meta = Some(m0))
+          epochs.remember(spark, indexDir, e)
+          e
         }
-      case Some(m) =>
-        val epochConsistent = m.committed &&
-          m.pivotFp == loaded.pivotFp && m.cbFp == loaded.cbFp
-        if (!epochConsistent) doRebuild()
+        healIfNeeded(spark, preCorpusCount, preIdxCount,
+          Seq(s"$indexDir/near"))(rebuilt()).getOrElse(stamped)
     }
-    if (!healed)
-      healIfNeeded(spark, preCorpusCount, preIdxCount,
-        Seq(s"$indexDir/near")) { doRebuild() }
     // every branch above leaves a parsed, rebuilt or first-touch meta
     val meta = epoch.meta.get
     val lastN = meta.n
@@ -725,22 +674,13 @@ object IvfIndex extends IndexLifecycle {
     // store==batch-path pin (and the heal's count invariant) drift
     val payloadRkEpoch = meta.payloadRk
     val storeRkEpoch = math.max(nprobe, payloadRkEpoch)
-    val existingIds = readOrEmpty(spark, corpusDir, vecSchema).select($"vec_id")
-    // a semi-join, not a de-duplicated inner join: its only consumer is
-    // the anti-join below, which needs no unique keys
-    val idHits = existingIds
-      .join(broadcast(batch.select($"vec_id")), Seq("vec_id"), "left_semi")
-    // in-batch exact-id dedup — same rationale and winner rule as
-    // [[AnnIndex.admitBatch]] (a duplicated vec_id in one batch would
-    // wedge the row-vs-distinct heal into perpetual rebuilds). The same
-    // checkpoint carries each fresh vector's epoch kernels: its
-    // full-slice assignment, its (code, resid) and its LUT.
+    // the exact replay gate (lowest embedding hash wins an in-batch
+    // duplicate id); the same checkpoint carries each fresh vector's
+    // epoch kernels: its full-slice assignment, its (code, resid) and
+    // its LUT.
     val fresh = ck(withKernels(
-      batch.join(broadcast(idHits), Seq("vec_id"), "left_anti")
-        .withColumn("rk", row_number().over(
-          org.apache.spark.sql.expressions.Window.partitionBy($"vec_id")
-            .orderBy(xxhash64($"embedding"), $"label")))
-        .filter($"rk" === 1)
+      replayGate(batch, readOrEmpty(spark, corpusDir, vecSchema), "vec_id",
+        xxhash64($"embedding"), $"label")
         .select($"vec_id", $"embedding", $"label"),
       epoch.kernels, storeRkEpoch))
     // DELIBERATELY NOT checkpointed: the candidate relation is
@@ -784,12 +724,9 @@ object IvfIndex extends IndexLifecycle {
       rebuildEpoch(spark, corpusDir, indexDir, Some(corpusTotal))
     } else {
       // the admitted rows already carry their frozen-epoch assignment
-      // and payload: the append is a projection, no join. One writer
-      // needs no shuffle: clustering by p_id into one file buys nothing.
-      val writers = appendWriters(spark, nAdmitted)
-      val rows = storeRows(admitted, payloadRkEpoch)
-      (if (writers == 1) rows.coalesce(1) else rows.repartition(writers, $"p_id"))
-        .write.mode("append").parquet(s"$indexDir/near")
+      // and payload: the append is a projection, no join
+      appendStore(spark, storeRows(admitted, payloadRkEpoch), nAdmitted,
+        s"$indexDir/near", $"p_id")
       compactIfOverCap(spark, Seq(s"$indexDir/near")) {
         rebuildEpoch(spark, corpusDir, indexDir, Some(corpusTotal))
       }
@@ -887,21 +824,4 @@ object IvfIndex extends IndexLifecycle {
           $"t.b_id".as("b_id"), $"t.cs".as("score"))
     }
   }
-
-  /** The IVF-indexed admission policy as a continuous query — the
-    * [[AnnIndex.annIntakeIndexed]] sibling for the inverted-list family.
-    */
-  def ivfIntakeIndexed(spark: SparkSession, srcDir: String,
-      corpusDir: String, indexDir: String, checkpointDir: String,
-      maxCosine: Double = 0.92,
-      glob: String = "embeddings.parquet"): org.apache.spark.sql.streaming.StreamingQuery =
-    spark.readStream.schema(vecSchema)
-      .option("pathGlobFilter", glob)
-      .parquet(srcDir)
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        admitBatch(batch, corpusDir, indexDir, maxCosine)
-      }
-      .start()
 }

@@ -1,9 +1,9 @@
 package graft.streaming
 
 import graft.operators.OpUtils.SpreadOps
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{ArrayType, LongType, StructField, StructType}
+import org.apache.spark.sql.types.{ArrayType, DoubleType, LongType, StructField, StructType}
 
 /** Incrementally-maintained near-dup admission index — the scale form of
   * [[CorpusStreams.admitNearDupBatch]].
@@ -55,15 +55,13 @@ import org.apache.spark.sql.types.{ArrayType, LongType, StructField, StructType}
   * parquet remains the single source of truth. The three stores are
   * appended after the corpus append; a crash between the two leaves the
   * index missing at most one batch's rows, which the NEXT batch detects
-  * (corpus row count ≠ index row count — both parquet-footer metadata
-  * reads) and self-heals with an in-line [[rebuild]]; the same check
+  * (corpus row count ≠ indexed doc count — one aggregate) and
+  * self-heals with an in-line [[rebuild]]; the same check
   * auto-bootstraps an intake pointed at a pre-existing (naive-path)
   * corpus. Exactly-once admission itself rides the streaming
   * checkpoint, as in the naive path.
   */
 object NearDupIndex extends IndexLifecycle {
-
-  protected def confScope: String = "nearDupIndex"
 
   val docsSchema: StructType = StructType(Seq(
     StructField("doc_id", LongType),
@@ -79,30 +77,26 @@ object NearDupIndex extends IndexLifecycle {
     StructField("h", LongType),
     StructField("df", LongType)))
 
-  private def metaRow(spark: SparkSession, indexDir: String): Option[(Long, Double)] =
-    metaRowRaw(spark, indexDir).map(r => (r.getLong(0), r.getDouble(1)))
+  /** (n_docs at the last rebuild, min_jaccard). */
+  private val meta = new MetaStore(StructType(Seq(
+    StructField("n_docs", LongType),
+    StructField("min_jaccard", DoubleType))))
 
-  private def metaCount(spark: SparkSession, indexDir: String): Long =
-    metaRow(spark, indexDir).map(_._1).getOrElse(0L)
-
-  /** Prefix lengths in `px/`/`docs/` are derived FROM the build-time
-    * threshold: probing an index built at t=0.8 with t=0.7 would
-    * silently lose recall (prefixes too short for the looser bound).
-    * The threshold is recorded in meta and enforced on every batch.
+  /** The stored meta, read once per call. Prefix lengths in
+    * `px/`/`docs/` are derived FROM the build-time threshold: probing an
+    * index built at t=0.8 with t=0.7 would silently lose recall
+    * (prefixes too short for the looser bound). The threshold is
+    * recorded in meta and enforced on every batch.
     */
-  private def checkThreshold(spark: SparkSession, indexDir: String,
-      minJaccard: Double): Unit =
-    metaRow(spark, indexDir).foreach { case (_, t) =>
-      require(t == minJaccard,
-        s"index at $indexDir was built for minJaccard=$t, probed with " +
+  private def checkedMeta(spark: SparkSession, indexDir: String,
+      minJaccard: Double): Option[Row] = {
+    val m = meta.read(spark, indexDir)
+    m.foreach { r =>
+      require(r.getDouble(1) == minJaccard,
+        s"index at $indexDir was built for minJaccard=${r.getDouble(1)}, probed with " +
           s"$minJaccard — prefix lengths would be wrong; rebuild() at the new threshold")
     }
-
-  private def writeMeta(spark: SparkSession, indexDir: String, n: Long,
-      minJaccard: Double): Unit = {
-    import spark.implicits._
-    Seq((n, minJaccard)).toDF("n_docs", "min_jaccard").coalesce(1)
-      .write.mode("overwrite").parquet(s"$indexDir/meta")
+    m
   }
 
   /** Per-doc index rows of a batch under a frozen rank snapshot:
@@ -246,7 +240,7 @@ object NearDupIndex extends IndexLifecycle {
       .coalesce(nf).write.mode("overwrite").parquet(s"$indexDir/docs")
     idx.select(explode($"prefix").as("ph"), $"doc_id", $"n")
       .coalesce(nf).write.mode("overwrite").parquet(s"$indexDir/px")
-    writeMeta(spark, indexDir, nIdx, minJaccard)
+    meta.write(spark, indexDir, nIdx, minJaccard)
     nIdx
     } finally ck.freeAll()
     n
@@ -270,10 +264,12 @@ object NearDupIndex extends IndexLifecycle {
     import spark.implicits._
     val ck = new CkptScope
     try {
-    checkThreshold(spark, indexDir, minJaccard)
     // stamp the threshold from the FIRST touch (rebuild refreshes the
     // count later; a young index must already refuse mismatched probes)
-    if (metaRow(spark, indexDir).isEmpty) writeMeta(spark, indexDir, 0L, minJaccard)
+    val metaN = checkedMeta(spark, indexDir, minJaccard) match {
+      case Some(r) => r.getLong(0)
+      case None => meta.write(spark, indexDir, 0L, minJaccard); 0L
+    }
     // Pre-probe self-heal ([[IndexLifecycle.healIfNeeded]]): a corpus
     // doc orphaned by a crash between the corpus append and the index
     // append (the replayed batch is exact-dup-gated out, so the appends
@@ -281,43 +277,23 @@ object NearDupIndex extends IndexLifecycle {
     // corpus without a bootstrap rebuild(), must be re-indexed BEFORE
     // this batch probes — or its near-dups would be admitted past a
     // store that cannot see it (the r13 AnnIndex/FingerprintIndex
-    // review finding; the same window existed here). Both counts are
-    // parquet-footer metadata reads.
-    healIfNeeded(spark,
-      corpusCount = {
-        val p = new org.apache.hadoop.fs.Path(corpusDir)
-        val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        if (fs.exists(p))
-          spark.read.schema(CorpusStreams.corpusStoreSchema).parquet(corpusDir).count()
-        else 0L
-      },
-      indexCount = indexedDocCount(spark, indexDir),
-      storeDirs = Seq(s"$indexDir/px")) {
+    // review finding; the same window existed here).
+    val corpus = readOrEmpty(spark, corpusDir, CorpusStreams.corpusStoreSchema)
+    val (corpusCount, preIdxCount) = healCounts(corpus,
+      readOrEmpty(spark, s"$indexDir/docs", docsSchema), "doc_id")
+    val healedN = healIfNeeded(spark, corpusCount, preIdxCount, Seq(s"$indexDir/px")) {
       rebuild(spark, corpusDir, indexDir, minJaccard)
     }
-    val corpusPath = new org.apache.hadoop.fs.Path(corpusDir)
-    val fs = corpusPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val existingFp: DataFrame =
-      if (fs.exists(corpusPath))
-        spark.read.schema(CorpusStreams.corpusStoreSchema).parquet(corpusDir)
-          .select($"fp")
-      else spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        StructType(Seq(StructField("fp", org.apache.spark.sql.types.StringType))))
-    val fingered = ck(batch
-      .withColumn("fp", md5(lower(trim(regexp_replace(col("text"), "\\s+", " ")))))
-      .withColumn("n_tokens", size(split(trim(col("text")), " ")).cast("long"))
-      .filter(col("n_tokens") >= minTokens)
-      .withColumn("rk", row_number().over(
-        org.apache.spark.sql.expressions.Window.partitionBy($"fp").orderBy($"doc_id")))
-      .filter($"rk" === 1).drop("rk")
-      .select($"doc_id", $"source", $"fp", $"n_tokens", $"text"))
-    // exact-dup gate with the corpus side only SCANNED: matched corpus
-    // fps come from an inner join against the broadcast batch, then the
-    // batch anti-joins that (batch-sized) hit list
-    val fpHits = existingFp.join(broadcast(fingered.select($"fp")), Seq("fp"))
-      .distinct()
-    val gated = ck(fingered.join(broadcast(fpHits), Seq("fp"), "left_anti"))
+    // indexed docs now, and the corpus size of the last rebuild
+    val (indexed, lastN) = healedN.fold((preIdxCount, metaN))(n => (n, n))
+    // the exact-dup gate, keyed by the normalized-text fingerprint (the
+    // naive path's rule: an in-batch duplicate keeps the lowest doc_id)
+    val gated = ck(replayGate(batch
+        .withColumn("fp", md5(lower(trim(regexp_replace(col("text"), "\\s+", " ")))))
+        .withColumn("n_tokens", size(split(trim(col("text")), " ")).cast("long"))
+        .filter(col("n_tokens") >= minTokens)
+        .select($"doc_id", $"source", $"fp", $"n_tokens", $"text"),
+      corpus, "fp", $"doc_id"))
 
     val batchIdx = ck(indexRows(
       graft.operators.Dedup.hxOfDocs(gated),
@@ -329,25 +305,20 @@ object NearDupIndex extends IndexLifecycle {
       .write.mode("append").parquet(corpusDir)
     val admittedIdx = ck(batchIdx
       .join(broadcast(admitted.select($"doc_id")), Seq("doc_id")))
-    // Hash-bucketed parallel batch appends: writer count scales with the
-    // batch (ceil(rows / rowsPerAppendFile), capped at core count) so a
-    // fixture-sized batch still writes one file while a production batch
-    // spreads across tasks — the previous coalesce(1) serialized the
-    // whole batch's index write through one task. File count per store
-    // stays ≤ writers × batches since the last rebuild; the small-files
-    // guard below still bounds it and rebuild still compacts.
+    // writer count scales with the batch; file count per store stays ≤
+    // writers × batches since the last rebuild, which the cap bounds
     val nAdmitted = admittedIdx.count()
-    val nw = appendWriters(spark, nAdmitted)
-    admittedIdx.select($"doc_id", $"harr", $"n")
-      .repartition(nw, $"doc_id").write.mode("append").parquet(s"$indexDir/docs")
-    admittedIdx.select(explode($"prefix").as("ph"), $"doc_id", $"n")
-      .repartition(nw, $"ph").write.mode("append").parquet(s"$indexDir/px")
+    appendStore(spark, admittedIdx.select($"doc_id", $"harr", $"n"),
+      nAdmitted, s"$indexDir/docs", $"doc_id")
+    appendStore(spark, admittedIdx.select(explode($"prefix").as("ph"), $"doc_id", $"n"),
+      nAdmitted, s"$indexDir/px", $"ph")
 
     // Post-append SNAPSHOT-REFRESH triggers (divergence and the file
     // cap moved to the pre-probe heal — the correctness ordering):
     //  - doubling: the docs store count (now INCLUDING this batch's
-    //    append) reached 2x the last-snapshot size — refresh the frozen
-    //    rarity order (amortized O(1)/doc);
+    //    append: the pre-append count plus the appended rows) reached 2x
+    //    the last-snapshot size — refresh the frozen rarity order
+    //    (amortized O(1)/doc);
     //  - storm: candidate volume way out of proportion to the batch
     //    (measured: a fresh site-wide boilerplate header post-snapshot
     //    has df 0 = "rarest", floods every prefix, and candidates jump
@@ -359,9 +330,9 @@ object NearDupIndex extends IndexLifecycle {
     //    doubling, so append-mode stores would otherwise accumulate one
     //    file per batch forever; re-checking after the append means the
     //    final batch of a stream cannot strand the store over the cap).
-    val total = indexedDocCount(spark, indexDir)
+    val total = indexed + nAdmitted
     val batchRows = batchIdx.count()
-    if (total >= 2 * math.max(1L, metaCount(spark, indexDir)) ||
+    if (total >= 2 * math.max(1L, lastN) ||
         nCand > stormFactor(spark) * math.max(1L, batchRows))
       rebuild(spark, corpusDir, indexDir, minJaccard)
     else compactIfOverCap(spark, Seq(s"$indexDir/px")) {
@@ -379,13 +350,6 @@ object NearDupIndex extends IndexLifecycle {
   private def stormFactor(spark: SparkSession): Long =
     spark.conf.getOption("spark.graft.nearDupIndex.stormCandidateFactor")
       .map(_.toLong).getOrElse(32L)
-
-  private def indexedDocCount(spark: SparkSession, indexDir: String): Long = {
-    val p = new org.apache.hadoop.fs.Path(s"$indexDir/docs")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) 0L
-    else spark.read.schema(docsSchema).parquet(s"$indexDir/docs").count()
-  }
 
   /** The indexed admission policy as a continuous query — drop-in
     * sibling of [[CorpusStreams.nearDupIntake]] with per-batch cost

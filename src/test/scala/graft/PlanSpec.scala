@@ -304,7 +304,9 @@ class PlanSpec extends AnyFunSuite with SparkSpec {
 
   test("q48: IVF candidates from pivot equi-join; only the verify stage uses the kernel") {
     // memoized head presents as a checkpoint leaf — pin the pipeline view
-    val p = graft.operators.Similarity.q48Pipeline(spark, sfDir)
+    // of the scored candidates it reads, with q48's cut
+    val p = graft.operators.Similarity.ivfCandScoredPipeline(spark, sfDir)
+      .filter(org.apache.spark.sql.functions.col("cs") >= 0.45)
       .queryExecution.explainString(FormattedMode)
     assert(!p.contains("CartesianProduct"))
     // the n x C assignment cross join IS expected (C is a constant); the
@@ -676,7 +678,7 @@ class PlanSpec extends AnyFunSuite with SparkSpec {
     // the declared query checkpoints its NN relation, so the candidate
     // shape is pinned on the un-checkpointed pipeline view (q31/q48
     // precedent)
-    val p = graft.operators.Similarity.q193Pipeline(spark, sfDir)
+    val p = graft.operators.Similarity.q193NearestNeighbours(spark, sfDir)
       .queryExecution.explainString(FormattedMode)
     assert(!p.contains("CartesianProduct"), "no cartesian candidate join")
     assert(!p.contains("BroadcastNestedLoopJoin"),

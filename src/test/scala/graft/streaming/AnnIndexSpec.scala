@@ -225,4 +225,50 @@ class AnnIndexSpec extends AnyFunSuite with SparkSpec {
       .as[(Long, Long)].collect().toSet
     assert(before == after, "rebuild must not change candidates (data-independent hashes)")
   }
+
+  private def bkFiles(index: String): Set[String] =
+    new java.io.File(s"$index/bk").listFiles().map(_.getName)
+      .filter(_.endsWith(".parquet")).toSet
+
+  test("per-call job budget: an incremental admitBatch and a topK stay within their Spark job counts") {
+    val (corpus, index) = freshDirs()
+    AnnIndex.admitBatch(fixtureVecs.filter($"vec_id" % 4 =!= 3), corpus, index)
+    val batch = fixtureVecs.filter($"vec_id" % 4 === 3).localCheckpoint()
+    val queries = fixtureVecs.filter($"vec_id" % 4 === 0).limit(16)
+      .select($"vec_id", $"embedding").localCheckpoint()
+    val before = bkFiles(index)
+    val admitJobs = jobsOf(AnnIndex.admitBatch(batch, corpus, index))
+    assert(before.subsetOf(bkFiles(index)),
+      "the measured batch must be incremental (no heal rebuild)")
+    val topkJobs = jobsOf(AnnIndex.topK(spark, index, corpus, queries, k = 5).collect())
+    info(s"AnnIndex jobs: admit $admitJobs, topK $topkJobs")
+    // upper bounds at this fixture's counts: a per-call action added
+    // back fails here
+    assert(admitJobs <= 25, s"incremental admitBatch ran $admitJobs jobs")
+    assert(topkJobs <= 9, s"topK ran $topkJobs jobs")
+  }
+
+  test("a second topK on an unchanged index reads no meta/; a rewritten meta/ is read again") {
+    val (corpus, index) = freshDirs()
+    AnnIndex.admitBatch(fixtureVecs, corpus, index)
+    val queries = fixtureVecs.filter($"vec_id" % 4 === 0).limit(16)
+      .select($"vec_id", $"embedding").localCheckpoint()
+    def search(): Unit = AnnIndex.topK(spark, index, corpus, queries, k = 5).collect()
+    // the meta read (schema inference and head) is the only job topK
+    // starts from the lifecycle code; the query's own jobs start from
+    // this spec or Spark's broadcast threads
+    def metaReads(sites: Seq[String]): Seq[String] =
+      sites.filter(_.contains("IndexLifecycle.scala"))
+    val first = jobSitesOf(search())
+    val second = jobSitesOf(search())
+    assert(second.size == first.size, s"first $first, second $second")
+    assert(metaReads(second).isEmpty, s"the second topK read meta/: $second")
+    // the same meta row re-written: new file identity, so the next call
+    // reads meta/ again
+    spark.read.parquet(s"$index/meta").localCheckpoint()
+      .coalesce(1).write.mode("overwrite").parquet(s"$index/meta")
+    val reloaded = jobSitesOf(search())
+    assert(metaReads(reloaded).nonEmpty && reloaded.size > second.size,
+      s"a changed listing must read meta/ again: $reloaded")
+  }
 }

@@ -5,16 +5,21 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.SparkSpec
 
+/** A `MemoryStream` document row. Top-level, so the generated encoder
+  * code can construct it (a case class nested in the spec cannot be
+  * built without its outer instance, and codegen falls back to the
+  * interpreter with a compile error in the log).
+  */
+case class Doc(doc_id: Long, text: String, lang: String, source: String, n_chars: Long)
+
 /** Streaming corpus intake: cross-batch exact dedup + token gating agree
   * with the batch admission semantics over the same data.
   */
 class CorpusStreamsSpec extends AnyFunSuite with SparkSpec {
   import spark.implicits._
 
-  private case class Doc(doc_id: Long, text: String, lang: String, source: String, n_chars: Long)
   private def doc(id: Long, text: String) = Doc(id, text, "en", "src0", text.length.toLong)
-  // toDF-safe form (inner case classes can't be re-instantiated by the
-  // encoder outside their defining scope; MemoryStream is fine, toDF isn't)
+  // the same rows as a batch DataFrame, for the batch admission APIs
   private def docsDf(ds: (Long, String)*) =
     ds.map { case (id, t) => (id, t, "en", "src0", t.length.toLong) }
       .toDF("doc_id", "text", "lang", "source", "n_chars")
@@ -151,6 +156,27 @@ class CorpusStreamsSpec extends AnyFunSuite with SparkSpec {
     assert(admitted < 120, "some planted dups must have been rejected")
   }
 
+  test("NearDupIndex per-call job budget: an incremental admitBatch stays within its Spark job count") {
+    val base = java.nio.file.Files.createTempDirectory("graft_ndidx_jobs")
+    val corpus = base.resolve("corpus").toString
+    val indexDir = base.resolve("index").toString
+    NearDupIndex.admitBatch(waveDocs(0).union(waveDocs(1)).union(waveDocs(2)),
+      corpus, indexDir)
+    // 20 docs onto ~60: below the doubling trigger
+    val batch = waveDocs(3).localCheckpoint()
+    def docsFiles: Set[String] =
+      new java.io.File(s"$indexDir/docs").listFiles().map(_.getName)
+        .filter(_.endsWith(".parquet")).toSet
+    val before = docsFiles
+    val jobs = jobsOf(NearDupIndex.admitBatch(batch, corpus, indexDir))
+    assert(before.subsetOf(docsFiles),
+      "the measured batch must be incremental (no rebuild)")
+    info(s"NearDupIndex jobs: admit $jobs")
+    // an upper bound at this fixture's count: a per-call action added
+    // back fails here
+    assert(jobs <= 34, s"incremental admitBatch ran $jobs jobs")
+  }
+
   test("multi-writer batch appends: >1 file per store, admission equivalence intact") {
     // The store append must parallelize with batch size (the old
     // coalesce(1) serialized every batch's index write through one
@@ -169,7 +195,7 @@ class CorpusStreamsSpec extends AnyFunSuite with SparkSpec {
       else d.listFiles.filter(f => f.isFile && f.getName.endsWith(".parquet"))
         .map(_.getName).toSet
     }
-    spark.conf.set("spark.graft.nearDupIndex.rowsPerAppendFile", "5")
+    spark.conf.set("spark.graft.index.rowsPerAppendFile", "5")
     try {
       var sawMultiWriterAppend = false
       (0 until 6).foreach { w =>
@@ -191,7 +217,7 @@ class CorpusStreamsSpec extends AnyFunSuite with SparkSpec {
       }
       assert(sawMultiWriterAppend,
         "no batch append wrote >1 file per store — writes still single-task")
-    } finally spark.conf.unset("spark.graft.nearDupIndex.rowsPerAppendFile")
+    } finally spark.conf.unset("spark.graft.index.rowsPerAppendFile")
   }
 
   test("indexed intake streaming query: evolving-corpus admission semantics") {
@@ -392,7 +418,7 @@ class CorpusStreamsSpec extends AnyFunSuite with SparkSpec {
     def toks(p: String, n: Int) = (1 to n).map(i => s"$p$i").mkString(" ")
     def pxFiles = new java.io.File(s"$indexDir/px").listFiles()
       .count(f => f.getName.endsWith(".parquet"))
-    spark.conf.set("spark.graft.nearDupIndex.maxStoreFiles", "3")
+    spark.conf.set("spark.graft.index.maxStoreFiles", "3")
     try {
       // 20-doc bootstrap: the doubling rebuild compacts px to one file,
       // and 20 -> 2x=40 is far enough that single-doc batches never double
@@ -408,7 +434,7 @@ class CorpusStreamsSpec extends AnyFunSuite with SparkSpec {
         docsDf(99L -> (toks("p21", 39) + " qq")), corpus, indexDir)
       assert(spark.read.parquet(corpus).count() == 28L,
         "near-dup of an indexed doc must be rejected after compaction")
-    } finally spark.conf.unset("spark.graft.nearDupIndex.maxStoreFiles")
+    } finally spark.conf.unset("spark.graft.index.maxStoreFiles")
   }
 
   test("file-stream intake over harness documents matches batch admission") {

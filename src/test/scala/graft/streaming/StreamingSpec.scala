@@ -6,6 +6,11 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.SparkSpec
 
+/** A `MemoryStream` event row. Top-level, so the generated encoder code
+  * can construct it (see [[Doc]]).
+  */
+case class Ev(ts: Timestamp, event_type: String, value: Double, event_id: Long, user_id: Long)
+
 /** Structured Streaming semantics: windowed aggregations over a
   * MemoryStream agree with the batch equivalents, watermark drops late
   * data, stateful dedup removes watermark-bounded duplicates.
@@ -13,7 +18,6 @@ import graft.SparkSpec
 class StreamingSpec extends AnyFunSuite with SparkSpec {
   import spark.implicits._
 
-  private case class Ev(ts: Timestamp, event_type: String, value: Double, event_id: Long, user_id: Long)
   private def t(minutes: Long) = new Timestamp(1700000000000L + minutes * 60000L)
 
   test("tumbling hourly counts match batch over same data") {
