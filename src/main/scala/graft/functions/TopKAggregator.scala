@@ -72,7 +72,27 @@ final class TopKByScore(k: Int)
 }
 
 object TopKByScore {
-  /** Column-API form: `topK(5)($"cs", $"b_id")`. */
+  import org.apache.spark.sql.DataFrame
+  import org.apache.spark.sql.functions.{col, posexplode, udaf}
+
+  /** Column-API form: `topK(5)($"cs", $"b_id")`, yielding the buffer as
+    * an array of (cs, b_id) structs. Engine code goes through [[ranked]].
+    */
   def apply(k: Int): org.apache.spark.sql.expressions.UserDefinedFunction =
-    org.apache.spark.sql.functions.udaf(new TopKByScore(k), Encoders.product[ScoredNeighbor])
+    udaf(new TopKByScore(k), Encoders.product[ScoredNeighbor])
+
+  /** The one top-k tail: per `group` of a scored relation, the k best
+    * rows by (`score` DESC, `id` ASC) through the bounded-state
+    * aggregator, one output row per kept neighbour —
+    * (`group`, `rk`, `id`, `score`), `rk` 1-based INT best-first. Column
+    * names are the caller's, so no caller sees the aggregator's buffer
+    * layout. `score` must be DOUBLE and `id` BIGINT.
+    */
+  def ranked(scored: DataFrame, group: String, score: String, id: String,
+      k: Int): DataFrame =
+    scored.groupBy(col(group))
+      .agg(TopKByScore(k)(col(score), col(id)).as("top"))
+      .select(col(group), posexplode(col("top")).as(Seq("pos", "t")))
+      .select(col(group), (col("pos") + 1).as("rk"),
+        col("t.b_id").as(id), col("t.cs").as(score))
 }

@@ -293,11 +293,18 @@ object VectorFunctions {
   def dotProduct(a: Column, b: Column): Column =
     ColumnBridge.column(DotProduct(ColumnBridge.expression(a), ColumnBridge.expression(b)))
 
-  /** int_sq_dist(a, b) over array<bigint> columns (frozen-vector L2). */
+  /** int_sq_dist(a, b) over array<bigint> columns (frozen-vector L2):
+    * exact, order-free Long arithmetic — at frozen coords ≤ 1e6 a per-dim
+    * term is ≤ 4e12, so any cross-subspace sum stays far inside BIGINT.
+    */
   def intSqDist(a: Column, b: Column): Column =
     ColumnBridge.column(IntSqDist(ColumnBridge.expression(a), ColumnBridge.expression(b)))
 
-  /** adc_lookup_sum(codes, lut, k): Σ lut[m·k + codes[m]], 1-based. */
+  /** adc_lookup_sum(codes, lut, k): Σ lut[m·k + codes[m]], 1-based —
+    * the integer ADC distance of a packed code array against a packed LUT
+    * (element_at's out-of-range → NULL), the per-candidate inner loop of
+    * every ADC scan. `k` is the codebook's effective per-subspace size.
+    */
   def adcLookupSum(codes: Column, lut: Column, kCent: Int): Column =
     ColumnBridge.column(AdcLookupSum(ColumnBridge.expression(codes),
       ColumnBridge.expression(lut), kCent))

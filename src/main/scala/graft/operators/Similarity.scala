@@ -5,7 +5,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.sources.Tables
-import graft.functions.VectorFunctions
+import graft.functions.{TopKByScore, VectorFunctions}
 
 /** Similarity search over the `embeddings` table (64-dim float vectors):
   *
@@ -73,18 +73,14 @@ object Similarity {
       // so the O(|panel|·n·dim) kernel parallelizes
       .spreadAcrossCores
       .select($"vec_id".as("b_id"), $"embedding".as("eb"))
-    val top5 = graft.functions.TopKByScore(5)
-    corpus.join(broadcast(panel), $"a_id" =!= $"b_id")
+    val scored = corpus.join(broadcast(panel), $"a_id" =!= $"b_id")
       .withColumn("cs", VectorFunctions.cosineSim($"ea", $"eb"))
       // a zero-norm embedding's cosine is NaN — garbage, not a neighbor;
       // drop it BEFORE ranking so Spark (aggregator ranks NaN last) and
       // the SQL oracle (window ranks NaN first in DESC) can't diverge
       .filter(!isnan($"cs"))
-      .groupBy($"a_id")
-      .agg(top5($"cs", $"b_id").as("top"))
-      .select($"a_id", posexplode($"top").as(Seq("pos", "t")))
-      .select($"a_id", ($"pos" + 1).cast("long").as("rk"),
-        $"t.b_id".as("b_id"), $"t.cs".as("cs"))
+    TopKByScore.ranked(scored, "a_id", "cs", "b_id", 5)
+      .select($"a_id", $"rk".cast("long").as("rk"), $"b_id", $"cs")
       .orderBy($"a_id", $"rk")
   }
 
@@ -331,25 +327,13 @@ object Similarity {
     * index configuration = rerun with different plane count — the
     * histogram IS the tuning artifact.
     */
-  def q217AnnRecall(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    val exact = exactPanelTop5(spark, dir)
-    val withVec = lshVectors(spark, dir)
-    val panel = samplePanel(spark, dir, topkPanelK).select($"vec_id".as("a_id"))
-    val a = withVec.join(broadcast(panel), withVec("vec_id") === panel("a_id"))
-      .select($"a_id", $"bucket", $"embedding".as("ea"))
-    val b = withVec.select($"vec_id".as("b_id"), $"bucket", $"embedding".as("eb"))
-    val top5 = graft.functions.TopKByScore(5)
-    val ann = a.join(b, Seq("bucket"))
-      .filter($"a_id" =!= $"b_id")
-      .withColumn("cs", VectorFunctions.cosineSim($"ea", $"eb"))
-      .filter(!isnan($"cs"))
-      .groupBy($"a_id")
-      .agg(top5($"cs", $"b_id").as("top"))
-      .select($"a_id", explode($"top").as("t"))
-      .select($"a_id", $"t.b_id".as("b_id"))
-    recallHistogram(exact, ann, panel).orderBy($"hits")
-  }
+  def q217AnnRecall(spark: SparkSession, dir: String): DataFrame =
+    panelRecall(spark, dir) { panel =>
+      import spark.implicits._
+      val withVec = lshVectors(spark, dir)
+      bucketTop5(withVec, withVec.join(broadcast(panel), withVec("vec_id") === panel("a_id"))
+        .select($"a_id", $"bucket", $"embedding".as("ea")))
+    }
 
   val q217Sql: String =
     s"""WITH $lshCtes,
@@ -399,28 +383,14 @@ object Similarity {
     * integers per panel query joined on the same bucket equi key —
     * the index layout is untouched, only the query side fans out.
     */
-  def q221MultiProbeRecall(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    val exact = exactPanelTop5(spark, dir)
-    val withVec = lshVectors(spark, dir)
-    val panel = samplePanel(spark, dir, topkPanelK).select($"vec_id".as("a_id"))
-    val probeList = "bucket" +: (0 until 8).map(h => s"bucket ^ ${1L << h}L")
-    val a = withVec.join(broadcast(panel), withVec("vec_id") === panel("a_id"))
-      .select($"a_id", $"bucket", $"embedding".as("ea"))
-      .select($"a_id", $"ea",
-        explode(expr(probeList.mkString("array(", ", ", ")"))).as("bucket"))
-    val b = withVec.select($"vec_id".as("b_id"), $"bucket", $"embedding".as("eb"))
-    val top5 = graft.functions.TopKByScore(5)
-    val ann = a.join(b, Seq("bucket"))
-      .filter($"a_id" =!= $"b_id")
-      .withColumn("cs", VectorFunctions.cosineSim($"ea", $"eb"))
-      .filter(!isnan($"cs"))
-      .groupBy($"a_id")
-      .agg(top5($"cs", $"b_id").as("top"))
-      .select($"a_id", explode($"top").as("t"))
-      .select($"a_id", $"t.b_id".as("b_id"))
-    recallHistogram(exact, ann, panel).orderBy($"hits")
-  }
+  def q221MultiProbeRecall(spark: SparkSession, dir: String): DataFrame =
+    panelRecall(spark, dir) { panel =>
+      import spark.implicits._
+      val withVec = lshVectors(spark, dir)
+      bucketTop5(withVec, withVec.join(broadcast(panel), withVec("vec_id") === panel("a_id"))
+        .select($"a_id", $"bucket", $"embedding".as("ea"))
+        .select($"a_id", $"ea", hamming1Probes.as("bucket")))
+    }
 
   val q221Sql: String = {
     val probeSql = ("p.bucket" +: (0 until 8).map(h =>
@@ -472,6 +442,108 @@ object Similarity {
       q34CosineTopk(spark, dir).select(col("a_id"), col("b_id"))
         .localCheckpoint()
     }
+
+  /** The recall family's one pipeline (q217, q221, q225, q226, q236,
+    * q239, q242, q244, q245, q246, q247). It owns the shared frame: the
+    * q34 a_id panel, the [[exactPanelTop5]] ground truth, and the
+    * exact-overlap histogram — per-panel-query hit counts, zero-filled
+    * over the whole panel, as (hits, n_queries, a_checksum) ordered by
+    * hits. A query supplies only `ann`, its candidate and score stage:
+    * panel (a_id) → the top-5 (a_id, b_id) its index returns. `lead`
+    * columns (q236's derived parameters) go in front of the histogram.
+    */
+  private def panelRecall(spark: SparkSession, dir: String, lead: Column*)(
+      ann: DataFrame => DataFrame): DataFrame = {
+    import spark.implicits._
+    val exact = exactPanelTop5(spark, dir)
+    val panel = samplePanel(spark, dir, topkPanelK).select($"vec_id".as("a_id"))
+    val hits = exact.join(ann(panel), Seq("a_id", "b_id"))
+      .groupBy($"a_id").agg(count(lit(1)).as("hits"))
+    panel.join(hits, Seq("a_id"), "left")
+      .withColumn("hits", coalesce($"hits", lit(0L)))
+      .groupBy($"hits")
+      .agg(count(lit(1)).as("n_queries"), sum($"a_id").as("a_checksum"))
+      .select(lead :+ $"hits" :+ $"n_queries" :+ $"a_checksum": _*)
+      .orderBy($"hits")
+  }
+
+  /** The recall family's score tail: per panel query, the top-5 b_ids of
+    * a scored (a_id, b_id, `score`) candidate relation.
+    */
+  private def top5Of(scored: DataFrame, score: String): DataFrame =
+    TopKByScore.ranked(scored, "a_id", score, "b_id", 5).select(col("a_id"), col("b_id"))
+
+  /** The exact-cosine verify stage: every unique (a_id, b_id) candidate
+    * pays one cosine between the raw vectors (panel side broadcast), a
+    * NaN cosine is no neighbor, top-5 per panel query.
+    */
+  private def cosineTop5(spark: SparkSession, dir: String, panel: DataFrame,
+      cand: DataFrame): DataFrame = {
+    import spark.implicits._
+    val emb = Tables.embeddings(spark, dir).select($"vec_id", $"embedding")
+    val pe = emb.join(broadcast(panel), emb("vec_id") === panel("a_id"))
+      .select($"a_id", $"embedding".as("ea"))
+    top5Of(cand
+      .join(broadcast(pe), Seq("a_id"))
+      .join(emb.select($"vec_id".as("b_id"), $"embedding".as("eb")), Seq("b_id"))
+      .withColumn("cs", VectorFunctions.cosineSim($"ea", $"eb"))
+      .filter(!isnan($"cs")), "cs")
+  }
+
+  /** The ADC score stage: top-5 per panel query by negated frozen ADC
+    * distance over (a_id, b_id, codes, lut) pairs at the adopted
+    * [[pqCodebookK]].
+    */
+  private def adcTop5(pairs: DataFrame): DataFrame =
+    top5Of(pairs.withColumn("negd",
+      -VectorFunctions.adcLookupSum(col("codes"), col("lut"), pqCodebookK).cast("double")),
+      "negd")
+
+  /** Single-table LSH search (q217/q221): each (a_id, bucket, ea) probe
+    * row scores the index vectors of its bucket by exact cosine, top-5.
+    */
+  private def bucketTop5(withVec: DataFrame, probes: DataFrame): DataFrame = {
+    val spark = withVec.sparkSession
+    import spark.implicits._
+    top5Of(probes
+      .join(withVec.select($"vec_id".as("b_id"), $"bucket", $"embedding".as("eb")), Seq("bucket"))
+      .filter($"a_id" =!= $"b_id")
+      .withColumn("cs", VectorFunctions.cosineSim($"ea", $"eb"))
+      .filter(!isnan($"cs")), "cs")
+  }
+
+  /** A probe row's home bucket plus its 8 Hamming-1 neighbours (one
+    * plane's sign flipped) — q221/q225's multi-probe fan-out.
+    */
+  private def hamming1Probes: Column =
+    explode(expr(("bucket" +: (0 until 8).map(h => s"bucket ^ ${1L << h}L"))
+      .mkString("array(", ", ", ")")))
+
+  /** Fixed-pivot IVF candidates (q226/q236/q242): the panel's probe rows
+    * of an rk ≤ nprobe assignment relation ([[ivfNearOf]]) joined to its
+    * rk = 1 inverted lists. The pairs are unique by construction: m = 1
+    * puts each vector in one list, and a query's probes are distinct.
+    */
+  private def ivfCandidates(near: DataFrame, panel: DataFrame): DataFrame = {
+    val spark = near.sparkSession
+    import spark.implicits._
+    val idx = near.filter($"rk" === 1).select($"vec_id".as("b_id"), $"p_id")
+    near.join(broadcast(panel), near("vec_id") === panel("a_id"))
+      .select($"a_id", $"p_id")
+      .join(idx, Seq("p_id"))
+      .filter($"a_id" =!= $"b_id")
+      .select($"a_id", $"b_id")
+  }
+
+  /** Trained-coarse IVF candidates (q245/q246/q247/q248): the panel's
+    * nprobe nearest trained pivots ([[trainedCoarseProbes]]) joined to
+    * the m = 1 trained `lists` (b_id, c_id).
+    */
+  private def trainedIvfCandidates(nv: DataFrame, cent: DataFrame,
+      lists: DataFrame, panel: DataFrame, nprobe: Int): DataFrame =
+    trainedCoarseProbes(nv, cent, panel, nprobe).join(lists, Seq("c_id"))
+      .filter(col("a_id") =!= col("b_id"))
+      .select(col("a_id"), col("b_id"))
 
   /** The tuned multi-table LSH index: 4 independent tables × 8 planes
     * (plane p = tbl·8 + h, weight seeded md5(s"{p}_{d}") — table 0 IS
@@ -547,34 +619,18 @@ object Similarity {
     * top-k slots). No all-pairs anywhere: candidate cost per query is
     * 36 probes · n/2⁸ regardless of corpus size.
     */
-  def q225LshTunedRecall(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    val exact = exactPanelTop5(spark, dir)
-    val bk = lshMultiBuckets(spark, dir)
-    val panel = samplePanel(spark, dir, topkPanelK).select($"vec_id".as("a_id"))
-    val probeList = "bucket" +: (0 until 8).map(h => s"bucket ^ ${1L << h}L")
-    val probes = bk.join(broadcast(panel), bk("vec_id") === panel("a_id"))
-      .select($"a_id", $"tbl",
-        explode(expr(probeList.mkString("array(", ", ", ")"))).as("bucket"))
-    val cand = probes
-      .join(bk.select($"vec_id".as("b_id"), $"tbl", $"bucket"), Seq("tbl", "bucket"))
-      .filter($"a_id" =!= $"b_id")
-      .select($"a_id", $"b_id").distinct()
-    val emb = Tables.embeddings(spark, dir)
-    val pe = emb.join(broadcast(panel), emb("vec_id") === panel("a_id"))
-      .select($"a_id", $"embedding".as("ea"))
-    val top5 = graft.functions.TopKByScore(5)
-    val ann = cand
-      .join(broadcast(pe), Seq("a_id"))
-      .join(emb.select($"vec_id".as("b_id"), $"embedding".as("eb")), Seq("b_id"))
-      .withColumn("cs", VectorFunctions.cosineSim($"ea", $"eb"))
-      .filter(!isnan($"cs"))
-      .groupBy($"a_id")
-      .agg(top5($"cs", $"b_id").as("top"))
-      .select($"a_id", explode($"top").as("t"))
-      .select($"a_id", $"t.b_id".as("b_id"))
-    recallHistogram(exact, ann, panel).orderBy($"hits")
-  }
+  def q225LshTunedRecall(spark: SparkSession, dir: String): DataFrame =
+    panelRecall(spark, dir) { panel =>
+      import spark.implicits._
+      val bk = lshMultiBuckets(spark, dir)
+      val probes = bk.join(broadcast(panel), bk("vec_id") === panel("a_id"))
+        .select($"a_id", $"tbl", hamming1Probes.as("bucket"))
+      val cand = probes
+        .join(bk.select($"vec_id".as("b_id"), $"tbl", $"bucket"), Seq("tbl", "bucket"))
+        .filter($"a_id" =!= $"b_id")
+        .select($"a_id", $"b_id").distinct()
+      cosineTop5(spark, dir, panel, cand)
+    }
 
   val q225Sql: String = {
     val probeSql = ("b.bucket" +: (0 until 8).map(h =>
@@ -665,35 +721,13 @@ object Similarity {
     * vector in exactly one list and the probe set is `nprobe` DISTINCT
     * pivots, so (a, b) pairs are unique by construction.
     */
-  def q226IvfRecall(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    val exact = exactPanelTop5(spark, dir)
-    val emb = Tables.embeddings(spark, dir).select($"vec_id", $"embedding")
-    // the n×nlist assignment kernel runs ONCE per (session, dir): the
-    // memoized rk ≤ nprobe slice (8n narrow rows) feeds the m=1 index
-    // (rk = 1 ⊂ rk ≤ 8), the query probes, and q242's composed pipeline
-    val near = ivfNearMemo(spark, dir)
-    val idx = near.filter($"rk" === 1).select($"vec_id".as("b_id"), $"p_id")
-    val panel = samplePanel(spark, dir, topkPanelK).select($"vec_id".as("a_id"))
-    val pq = near.join(broadcast(panel), near("vec_id") === panel("a_id"))
-      .select($"a_id", $"p_id")
-    val cand = pq.join(idx, Seq("p_id"))
-      .filter($"a_id" =!= $"b_id")
-      .select($"a_id", $"b_id")
-    val pe2 = emb.join(broadcast(panel), emb("vec_id") === panel("a_id"))
-      .select($"a_id", $"embedding".as("ea"))
-    val top5 = graft.functions.TopKByScore(5)
-    val ann = cand
-      .join(broadcast(pe2), Seq("a_id"))
-      .join(emb.select($"vec_id".as("b_id"), $"embedding".as("eb")), Seq("b_id"))
-      .withColumn("cs", VectorFunctions.cosineSim($"ea", $"eb"))
-      .filter(!isnan($"cs"))
-      .groupBy($"a_id")
-      .agg(top5($"cs", $"b_id").as("top"))
-      .select($"a_id", explode($"top").as("t"))
-      .select($"a_id", $"t.b_id".as("b_id"))
-    recallHistogram(exact, ann, panel).orderBy($"hits")
-  }
+  def q226IvfRecall(spark: SparkSession, dir: String): DataFrame =
+    panelRecall(spark, dir) { panel =>
+      // the n×nlist assignment kernel runs ONCE per (session, dir): the
+      // memoized rk ≤ nprobe slice (8n narrow rows) feeds the m=1 index
+      // (rk = 1 ⊂ rk ≤ 8), the query probes, and q242's composed pipeline
+      cosineTop5(spark, dir, panel, ivfCandidates(ivfNearMemo(spark, dir), panel))
+    }
 
   val q226Sql: String =
     s"""WITH piv AS (SELECT vec_id AS p_id, embedding AS pe
@@ -749,45 +783,16 @@ object Similarity {
     */
   def q236IvfPolicyRecall(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val exact = exactPanelTop5(spark, dir)
     val emb = Tables.embeddings(spark, dir).select($"vec_id", $"embedding")
     val nCorpus = emb.count() // bounded meta read: the policy's one input
     val nlist = ivfPolicyNlist(nCorpus)
     val nprobe = ivfPolicyNprobe(nlist)
-    val pivots = emb.orderBy($"vec_id").limit(nlist)
-      .select($"vec_id".as("p_id"), $"embedding".as("pe"))
-    val w = Window.partitionBy($"vec_id").orderBy($"cs_p".desc, $"p_id")
-    val near = emb
-      .spreadAcrossCores
-      .crossJoin(broadcast(pivots))
-      .withColumn("cs_p", VectorFunctions.cosineSim($"embedding", $"pe"))
-      .withColumn("rk", row_number().over(w))
-      .filter($"rk" <= nprobe)
-      .select($"vec_id", $"p_id", $"rk")
-      .localCheckpoint() // feeds the m=1 index AND the query probes
-    val idx = near.filter($"rk" === 1).select($"vec_id".as("b_id"), $"p_id")
-    val panel = samplePanel(spark, dir, topkPanelK).select($"vec_id".as("a_id"))
-    val pq = near.join(broadcast(panel), near("vec_id") === panel("a_id"))
-      .select($"a_id", $"p_id")
-    val cand = pq.join(idx, Seq("p_id"))
-      .filter($"a_id" =!= $"b_id")
-      .select($"a_id", $"b_id")
-    val pe2 = emb.join(broadcast(panel), emb("vec_id") === panel("a_id"))
-      .select($"a_id", $"embedding".as("ea"))
-    val top5 = graft.functions.TopKByScore(5)
-    val ann = cand
-      .join(broadcast(pe2), Seq("a_id"))
-      .join(emb.select($"vec_id".as("b_id"), $"embedding".as("eb")), Seq("b_id"))
-      .withColumn("cs", VectorFunctions.cosineSim($"ea", $"eb"))
-      .filter(!isnan($"cs"))
-      .groupBy($"a_id")
-      .agg(top5($"cs", $"b_id").as("top"))
-      .select($"a_id", explode($"top").as("t"))
-      .select($"a_id", $"t.b_id".as("b_id"))
-    recallHistogram(exact, ann, panel)
-      .select(lit(nlist.toLong).as("nlist"), lit(nprobe.toLong).as("nprobe"),
-        $"hits", $"n_queries", $"a_checksum")
-      .orderBy($"hits")
+    panelRecall(spark, dir, lit(nlist.toLong).as("nlist"),
+        lit(nprobe.toLong).as("nprobe")) { panel =>
+      val near = ivfNearOf(emb, ivfPivotsOf(emb, nlist), nprobe)
+        .localCheckpoint() // feeds the m=1 index AND the query probes
+      cosineTop5(spark, dir, panel, ivfCandidates(near, panel))
+    }
   }
 
   val q236Sql: String =
@@ -853,7 +858,7 @@ object Similarity {
   // q230 val-initialization-order lesson applies here too).
   private[graft] val pqSubspaces = 16
   private[graft] val pqSubDim = 4
-  private val pqCodebookK = 16
+  private[graft] val pqCodebookK = 16
 
   /** Squared L2 between two equal-length DOUBLE vectors, accumulated
     * left-to-right (exact-products-then-sequential-sum — the same order
@@ -933,51 +938,6 @@ object Similarity {
         s => s.getField("lf")).as("lut"))
   }
 
-  /** The integer ADC distance of a packed code array against a packed
-    * LUT array: mSub lookups summed — one whole-stage-codegen
-    * expression, order-free (BIGINT terms).
-    */
-  // r16: codegen'd kernel (graft.functions.AdcLookupSum) — bit-identical
-  // to the previous aggregate(transform(codes, element_at(lut, m·k+c)))
-  // form including element_at's 1-based OOB→NULL semantics, but fused
-  // into whole-stage codegen; this is the per-candidate inner loop of
-  // every ADC scan (q239/q242/q244/q246/q248 + the incremental index).
-  private def adcDist(codes: Column, lut: Column, kCent: Int): Column =
-    graft.functions.VectorFunctions.adcLookupSum(codes, lut, kCent)
-
-  /** ADC full-code scan + bounded top-5: packed codes against broadcast
-    * LUTs — q239's retrieval tail.
-    */
-  private def pqAdcTop5(codes: DataFrame, lutArr: DataFrame, kCent: Int): DataFrame = {
-    val spark = codes.sparkSession
-    import spark.implicits._
-    val top5 = graft.functions.TopKByScore(5)
-    codes.crossJoin(broadcast(lutArr))
-      .filter($"a_id" =!= $"b_id")
-      .withColumn("negd", -adcDist($"codes", $"lut", kCent).cast("double"))
-      .groupBy($"a_id")
-      .agg(top5($"negd", $"b_id").as("top"))
-      .select($"a_id", explode($"top").as("t"))
-      .select($"a_id", $"t.b_id".as("b_id"))
-  }
-
-  /** The shared exact-overlap recall rollup (unordered — callers append
-    * their projection/orderBy): per-panel-query hit counts vs the exact
-    * ground truth, zero-filled over the whole panel, grouped into the
-    * (hits, n_queries, a_checksum) histogram every recall query gates on.
-    */
-  private def recallHistogram(exact: DataFrame, ann: DataFrame,
-      panel: DataFrame): DataFrame = {
-    val spark = exact.sparkSession
-    import spark.implicits._
-    val hits = exact.join(ann, Seq("a_id", "b_id"))
-      .groupBy($"a_id").agg(count(lit(1)).as("hits"))
-    panel.join(hits, Seq("a_id"), "left")
-      .withColumn("hits", coalesce($"hits", lit(0L)))
-      .groupBy($"hits")
-      .agg(count(lit(1)).as("n_queries"), sum($"a_id").as("a_checksum"))
-  }
-
   /** Version token for anything persisting PQ codes of the adopted
     * geometry — bump on any re-tune of subspaces/centroids/freezing.
     */
@@ -1028,19 +988,6 @@ object Similarity {
     * any re-tune of sample size, iterations, freeze scale or geometry.
     */
   private[graft] val pqTrainedLogicVersion = "m16x4.k16.s1024.t8.f1e6.v1"
-
-  /** Integer squared L2 between two equal-length BIGINT vectors —
-    * order-free exact arithmetic (the trained-PQ analog of [[pqSqDist]];
-    * frozen coords ≤ 1e6, so per-dim terms ≤ 4e12 and any cross-subspace
-    * sum stays far inside BIGINT).
-    */
-  // r16: codegen'd kernel (graft.functions.IntSqDist) — bit-identical to
-  // the previous aggregate(zip_with(...)) form (exact Long arithmetic)
-  // but fused into whole-stage codegen instead of per-element interpreted
-  // lambdas + an intermediate array per row; this is the inner loop of
-  // every assignment/probe/Lloyd-scoring stage in the trained-PQ family.
-  private def isqDist(a: Column, b: Column): Column =
-    graft.functions.VectorFunctions.intSqDist(a, b)
 
   private def freezeSub(sv: Column): Column =
     transform(sv, x => floor(x * lit(pqFreezeScale)).cast("long"))
@@ -1276,7 +1223,7 @@ object Similarity {
       .select($"vec_id".as("b_id"), posexplode(array(pqSubSlices(mSub, subDim): _*)).as(Seq("m", "sv")))
       .select($"b_id", $"m", freezeSub($"sv").as("fs"))
       .join(broadcast(cent), Seq("m"))
-      .withColumn("d", isqDist($"fs", $"fc"))
+      .withColumn("d", VectorFunctions.intSqDist($"fs", $"fc"))
       .groupBy($"b_id", $"m")
       .agg(min(struct($"d", $"c_id")).as("mn"))
       .groupBy($"b_id")
@@ -1298,7 +1245,7 @@ object Similarity {
       .select($"a_id", $"m", freezeSub($"sv").as("fs"))
       .join(broadcast(cent), Seq("m"))
       .select($"a_id", ($"m" * kCent + $"c_id").as("i"),
-        isqDist($"fs", $"fc").as("lf"))
+        VectorFunctions.intSqDist($"fs", $"fc").as("lf"))
       .groupBy($"a_id")
       .agg(transform(array_sort(collect_list(struct($"i", $"lf"))),
         s => s.getField("lf")).as("lut"))
@@ -1350,20 +1297,17 @@ object Similarity {
     * function of (corpus, logicVersion), so a rebuilt index can be
     * byte-verified against its predecessor.
     */
-  def q244TrainedPqRecall(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    val exact = exactPanelTop5(spark, dir)
-    val panel = samplePanel(spark, dir, topkPanelK).select($"vec_id".as("a_id"))
-    val nv = pqNormalized(Tables.embeddings(spark, dir))
-    val cent = pqTrainedCentMemo(spark, dir)
-    val ann = pqAdcTop5(pqTrainedCodesMemo(spark, dir),
-      pqTrainedLutsOf(nv, cent, panel, pqSubspaces, pqSubDim, pqCodebookK),
-      pqCodebookK)
-    recallHistogram(exact, ann, panel).orderBy($"hits")
-  }
+  def q244TrainedPqRecall(spark: SparkSession, dir: String): DataFrame =
+    panelRecall(spark, dir) { panel =>
+      val nv = pqNormalized(Tables.embeddings(spark, dir))
+      val cent = pqTrainedCentMemo(spark, dir)
+      adcTop5(pqTrainedCodesMemo(spark, dir)
+        .crossJoin(broadcast(pqTrainedLutsOf(nv, cent, panel, pqSubspaces, pqSubDim, pqCodebookK)))
+        .filter(col("a_id") =!= col("b_id")))
+    }
 
   /** Integer squared-L2 between two BIGINT lists, as DuckDB SQL — the
-    * oracle mirror of [[isqDist]].
+    * oracle mirror of [[VectorFunctions.intSqDist]].
     */
   private val isqSqlFmt =
     "list_sum(list_transform(list_zip(%s, %s), z -> (z[1]-z[2])*(z[1]-z[2])))"
@@ -1514,7 +1458,7 @@ object Similarity {
       .select($"a_id", posexplode(array(pqSubSlices(1, dim): _*)).as(Seq("m", "sv")))
       .select($"a_id", $"m", freezeSub($"sv").as("fs"))
       .join(broadcast(cent), Seq("m"))
-      .withColumn("d", isqDist($"fs", $"fc"))
+      .withColumn("d", VectorFunctions.intSqDist($"fs", $"fc"))
       .withColumn("rk", row_number().over(
         Window.partitionBy($"a_id").orderBy($"d", $"c_id")))
       .filter($"rk" <= nprobe)
@@ -1571,7 +1515,7 @@ object Similarity {
       .select($"vec_id", posexplode(array(pqSubSlices(pqSubspaces, pqSubDim): _*)).as(Seq("m", "sv")))
       .select($"vec_id", $"m", freezeSub($"sv").as("fs"))
       .join(broadcast(cent), Seq("m"))
-      .withColumn("d", isqDist($"fs", $"fc"))
+      .withColumn("d", VectorFunctions.intSqDist($"fs", $"fc"))
       .groupBy($"vec_id", $"m")
       .agg(min(struct($"d", $"c_id")).as("mn"))
       .groupBy($"vec_id")
@@ -1587,7 +1531,8 @@ object Similarity {
     * `kEff` is the codebook's EFFECTIVE per-subspace size — min(16,
     * epoch corpus) when the epoch trained on fewer vectors than K
     * (the LUT pack is positional: both the pack stride and
-    * [[adcDistOf]]'s lookup stride must be the actual entry count).
+    * [[VectorFunctions.adcLookupSum]]'s lookup stride must be the
+    * actual entry count).
     */
   private[graft] def trainedPqLutsFor(emb: DataFrame, cent: DataFrame,
       kEff: Int): DataFrame = {
@@ -1596,14 +1541,6 @@ object Similarity {
     pqTrainedLutsOf(pqNormalized(emb), cent,
       emb.select($"vec_id".as("a_id")), pqSubspaces, pqSubDim, kEff)
   }
-
-  /** [[adcDist]] at the caller's effective K — the one scoring
-    * arithmetic shared by q244/q246 (kEff = 16 at the query constants)
-    * and the incremental index's ADC admission (kEff from the epoch
-    * codebook).
-    */
-  private[graft] def adcDistOf(codes: Column, lut: Column, kEff: Int): Column =
-    adcDist(codes, lut, kEff)
 
   /** ADC-sandwich constants — ONE definition for the incremental
     * index's admission bands AND q248's gated calibration of them (the
@@ -1676,32 +1613,12 @@ object Similarity {
     * assignment kernel to this query's frozen-L2 — left as the next
     * measured step, not silently conflated.
     */
-  def q245IvfTrainedRecall(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    val exact = exactPanelTop5(spark, dir)
-    val panel = samplePanel(spark, dir, topkPanelK).select($"vec_id".as("a_id"))
-    val emb = Tables.embeddings(spark, dir).select($"vec_id", $"embedding")
-    val nv = pqNormalized(emb)
-    val cent = ivfTrainedCentMemo(spark, dir)
-    val lists = ivfTrainedListsMemo(spark, dir)
-    val probes = trainedCoarseProbes(nv, cent, panel, ivfRecallNprobe)
-    val cand = probes.join(lists, Seq("c_id"))
-      .filter($"a_id" =!= $"b_id")
-      .select($"a_id", $"b_id")
-    val pe2 = emb.join(broadcast(panel), emb("vec_id") === panel("a_id"))
-      .select($"a_id", $"embedding".as("ea"))
-    val top5 = graft.functions.TopKByScore(5)
-    val ann = cand
-      .join(broadcast(pe2), Seq("a_id"))
-      .join(emb.select($"vec_id".as("b_id"), $"embedding".as("eb")), Seq("b_id"))
-      .withColumn("cs", VectorFunctions.cosineSim($"ea", $"eb"))
-      .filter(!isnan($"cs"))
-      .groupBy($"a_id")
-      .agg(top5($"cs", $"b_id").as("top"))
-      .select($"a_id", explode($"top").as("t"))
-      .select($"a_id", $"t.b_id".as("b_id"))
-    recallHistogram(exact, ann, panel).orderBy($"hits")
-  }
+  def q245IvfTrainedRecall(spark: SparkSession, dir: String): DataFrame =
+    panelRecall(spark, dir) { panel =>
+      val nv = pqNormalized(Tables.embeddings(spark, dir))
+      cosineTop5(spark, dir, panel, trainedIvfCandidates(nv, ivfTrainedCentMemo(spark, dir),
+        ivfTrainedListsMemo(spark, dir), panel, ivfRecallNprobe))
+    }
 
   val q245Sql: String = {
     val dim = pqSubspaces * pqSubDim
@@ -1797,32 +1714,12 @@ object Similarity {
     * K² law vs sharded 3.3 s, and sharded 33.5 s at K=4096 where
     * serial extrapolates to ~5.5 min).
     */
-  def q247ShardedIvfRecall(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    val exact = exactPanelTop5(spark, dir)
-    val panel = samplePanel(spark, dir, topkPanelK).select($"vec_id".as("a_id"))
-    val emb = Tables.embeddings(spark, dir).select($"vec_id", $"embedding")
-    val nv = pqNormalized(emb)
-    val cent = shardedCentMemo(spark, dir)
-    val lists = shardedListsMemo(spark, dir)
-    val probes = trainedCoarseProbes(nv, cent, panel, shardedNprobe)
-    val cand = probes.join(lists, Seq("c_id"))
-      .filter($"a_id" =!= $"b_id")
-      .select($"a_id", $"b_id")
-    val pe2 = emb.join(broadcast(panel), emb("vec_id") === panel("a_id"))
-      .select($"a_id", $"embedding".as("ea"))
-    val top5 = graft.functions.TopKByScore(5)
-    val ann = cand
-      .join(broadcast(pe2), Seq("a_id"))
-      .join(emb.select($"vec_id".as("b_id"), $"embedding".as("eb")), Seq("b_id"))
-      .withColumn("cs", VectorFunctions.cosineSim($"ea", $"eb"))
-      .filter(!isnan($"cs"))
-      .groupBy($"a_id")
-      .agg(top5($"cs", $"b_id").as("top"))
-      .select($"a_id", explode($"top").as("t"))
-      .select($"a_id", $"t.b_id".as("b_id"))
-    recallHistogram(exact, ann, panel).orderBy($"hits")
-  }
+  def q247ShardedIvfRecall(spark: SparkSession, dir: String): DataFrame =
+    panelRecall(spark, dir) { panel =>
+      val nv = pqNormalized(Tables.embeddings(spark, dir))
+      cosineTop5(spark, dir, panel, trainedIvfCandidates(nv, shardedCentMemo(spark, dir),
+        shardedListsMemo(spark, dir), panel, shardedNprobe))
+    }
 
   val q247Sql: String = {
     val dim = pqSubspaces * pqSubDim
@@ -1893,35 +1790,18 @@ object Similarity {
     * probes + LUTs + the candidate-sized ADC join — the q242 cost shape
     * with trained state.
     */
-  def q246TrainedIvfPqRecall(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    val exact = exactPanelTop5(spark, dir)
-    val panel = samplePanel(spark, dir, topkPanelK).select($"vec_id".as("a_id"))
-    val emb = Tables.embeddings(spark, dir).select($"vec_id", $"embedding")
-    val nv = pqNormalized(emb)
-    // trained coarse prune (q245's kernels + memos)
-    val coarseCent = ivfTrainedCentMemo(spark, dir)
-    val lists = ivfTrainedListsMemo(spark, dir)
-    val probes = trainedCoarseProbes(nv, coarseCent, panel, ivfRecallNprobe)
-    val cand = probes.join(lists, Seq("c_id"))
-      .filter($"a_id" =!= $"b_id")
-      .select($"a_id", $"b_id")
-    // trained-codebook ADC over the candidates (q244's kernels + memos)
-    val pqCent = pqTrainedCentMemo(spark, dir)
-    val codes = pqTrainedCodesMemo(spark, dir)
-    val lutArr = pqTrainedLutsOf(nv, pqCent, panel,
-      pqSubspaces, pqSubDim, pqCodebookK)
-    val top5 = graft.functions.TopKByScore(5)
-    val ann = cand
-      .join(codes, Seq("b_id"))
-      .join(broadcast(lutArr), Seq("a_id"))
-      .withColumn("negd", -adcDist($"codes", $"lut", pqCodebookK).cast("double"))
-      .groupBy($"a_id")
-      .agg(top5($"negd", $"b_id").as("top"))
-      .select($"a_id", explode($"top").as("t"))
-      .select($"a_id", $"t.b_id".as("b_id"))
-    recallHistogram(exact, ann, panel).orderBy($"hits")
-  }
+  def q246TrainedIvfPqRecall(spark: SparkSession, dir: String): DataFrame =
+    panelRecall(spark, dir) { panel =>
+      val nv = pqNormalized(Tables.embeddings(spark, dir))
+      // trained coarse prune (q245's kernels + memos)
+      val cand = trainedIvfCandidates(nv, ivfTrainedCentMemo(spark, dir),
+        ivfTrainedListsMemo(spark, dir), panel, ivfRecallNprobe)
+      // trained-codebook ADC over the candidates (q244's kernels + memos)
+      val pqCent = pqTrainedCentMemo(spark, dir)
+      val codes = pqTrainedCodesMemo(spark, dir)
+      val lutArr = pqTrainedLutsOf(nv, pqCent, panel, pqSubspaces, pqSubDim, pqCodebookK)
+      adcTop5(cand.join(codes, Seq("b_id")).join(broadcast(lutArr), Seq("a_id")))
+    }
 
   val q246Sql: String = {
     val dim = pqSubspaces * pqSubDim
@@ -1988,11 +1868,6 @@ object Similarity {
       |GROUP BY 1 ORDER BY 1""".stripMargin
   }
 
-  /** The q226-shape IVF probe relation (rk ≤ nprobe pivot assignments at
-    * the frozen fixture-scale point nlist=64/nprobe=8) as a session memo
-    * — shared by q226 and q242 (and q227 through both). q236 derives its
-    * own policy parameters and stays standalone.
-    */
   /** Version token for anything persisting IVF assignments — bump on any
     * change to the assignment arithmetic (cosine ranking, tie order) or
     * the √n policy derivation.
@@ -2030,6 +1905,10 @@ object Similarity {
       .select($"vec_id", $"p_id", $"rk")
   }
 
+  /** The q226-shape IVF probe relation (rk ≤ nprobe pivot assignments at
+    * the frozen fixture-scale point nlist=64/nprobe=8) as a session memo
+    * — shared by q226 and q242 (and q227 through both).
+    */
   private def ivfNearMemo(spark: SparkSession, dir: String): DataFrame =
     memo(spark, dir, "ivf_near", s"nlist$ivfRecallNlist.p$ivfRecallNprobe.v1") {
       import spark.implicits._
@@ -2078,17 +1957,15 @@ object Similarity {
     * k-bounded top-k partial aggregation. At 100 TB the scan cost is
     * bounded by reading 8-byte codes, not 256-byte vectors.
     */
-  def q239PqAdcRecall(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    val exact = exactPanelTop5(spark, dir)
-    val panel = samplePanel(spark, dir, topkPanelK).select($"vec_id".as("a_id"))
-    // the code relation rides the session memo (one build per session/dir)
-    val nv = pqNormalized(Tables.embeddings(spark, dir))
-    val cent = pqCentroids(nv, pqSubspaces, pqSubDim, pqCodebookK)
-    val lutArr = pqLutsOf(nv, cent, panel, pqSubspaces, pqSubDim, pqCodebookK)
-    val ann = pqAdcTop5(pqCodesMemo(spark, dir), lutArr, pqCodebookK)
-    recallHistogram(exact, ann, panel).orderBy($"hits")
-  }
+  def q239PqAdcRecall(spark: SparkSession, dir: String): DataFrame =
+    panelRecall(spark, dir) { panel =>
+      // the code relation rides the session memo (one build per session/dir)
+      val nv = pqNormalized(Tables.embeddings(spark, dir))
+      val cent = pqCentroids(nv, pqSubspaces, pqSubDim, pqCodebookK)
+      adcTop5(pqCodesMemo(spark, dir)
+        .crossJoin(broadcast(pqLutsOf(nv, cent, panel, pqSubspaces, pqSubDim, pqCodebookK)))
+        .filter(col("a_id") =!= col("b_id")))
+    }
 
   val q239Sql: String = {
     val sq = "list_sum(list_transform(list_zip(%s, %s), z -> (z[1]-z[2])*(z[1]-z[2])))"
@@ -2167,36 +2044,18 @@ object Similarity {
     * bounded-state aggregator. No stage touches raw vectors after the
     * probe pass.
     */
-  def q242IvfPqRecall(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    val exact = exactPanelTop5(spark, dir)
-    val emb = Tables.embeddings(spark, dir).select($"vec_id", $"embedding")
-    // q226's probe kernel via the shared session memo
-    val near = ivfNearMemo(spark, dir)
-    val idx = near.filter($"rk" === 1).select($"vec_id".as("b_id"), $"p_id")
-    val panel = samplePanel(spark, dir, topkPanelK).select($"vec_id".as("a_id"))
-    val cand = near.join(broadcast(panel), near("vec_id") === panel("a_id"))
-      .select($"a_id", $"p_id")
-      .join(idx, Seq("p_id"))
-      .filter($"a_id" =!= $"b_id")
-      .select($"a_id", $"b_id")
-    // PQ side: the adopted 16×4/16 geometry from the shared code memo,
-    // scoring ONLY the candidates
-    val nv = pqNormalized(emb)
-    val cent = pqCentroids(nv, pqSubspaces, pqSubDim, pqCodebookK)
-    val codes = pqCodesMemo(spark, dir)
-    val lutArr = pqLutsOf(nv, cent, panel, pqSubspaces, pqSubDim, pqCodebookK)
-    val top5 = graft.functions.TopKByScore(5)
-    val ann = cand
-      .join(codes, Seq("b_id"))
-      .join(broadcast(lutArr), Seq("a_id"))
-      .withColumn("negd", -adcDist($"codes", $"lut", pqCodebookK).cast("double"))
-      .groupBy($"a_id")
-      .agg(top5($"negd", $"b_id").as("top"))
-      .select($"a_id", explode($"top").as("t"))
-      .select($"a_id", $"t.b_id".as("b_id"))
-    recallHistogram(exact, ann, panel).orderBy($"hits")
-  }
+  def q242IvfPqRecall(spark: SparkSession, dir: String): DataFrame =
+    panelRecall(spark, dir) { panel =>
+      // q226's probe kernel via the shared session memo
+      val cand = ivfCandidates(ivfNearMemo(spark, dir), panel)
+      // PQ side: the adopted 16×4/16 geometry from the shared code memo,
+      // scoring ONLY the candidates
+      val nv = pqNormalized(Tables.embeddings(spark, dir))
+      val cent = pqCentroids(nv, pqSubspaces, pqSubDim, pqCodebookK)
+      val codes = pqCodesMemo(spark, dir)
+      val lutArr = pqLutsOf(nv, cent, panel, pqSubspaces, pqSubDim, pqCodebookK)
+      adcTop5(cand.join(codes, Seq("b_id")).join(broadcast(lutArr), Seq("a_id")))
+    }
 
   val q242Sql: String = {
     val sq = "list_sum(list_transform(list_zip(%s, %s), z -> (z[1]-z[2])*(z[1]-z[2])))"
@@ -2293,11 +2152,8 @@ object Similarity {
     val emb = Tables.embeddings(spark, dir).select($"vec_id", $"embedding")
     val nv = pqNormalized(emb)
     val panel = samplePanel(spark, dir, topkPanelK).select($"vec_id".as("a_id"))
-    val probes = trainedCoarseProbes(nv, ivfTrainedCentMemo(spark, dir),
-      panel, ivfRecallNprobe)
-    val cand = probes.join(ivfTrainedListsMemo(spark, dir), Seq("c_id"))
-      .filter($"a_id" =!= $"b_id")
-      .select($"a_id", $"b_id")
+    val cand = trainedIvfCandidates(nv, ivfTrainedCentMemo(spark, dir),
+      ivfTrainedListsMemo(spark, dir), panel, ivfRecallNprobe)
     val pqCent = pqTrainedCentMemo(spark, dir)
     val codesR = trainedPqCodesWithResid(emb, pqCent)
     val luts = pqTrainedLutsOf(nv, pqCent, panel,
@@ -2309,7 +2165,7 @@ object Similarity {
       .join(broadcast(luts), Seq("a_id"))
       .join(broadcast(pe), Seq("a_id"))
       .join(emb.select($"vec_id".as("b_id"), $"embedding".as("eb")), Seq("b_id"))
-      .withColumn("a", sqrt(adcDist($"codes", $"lut", pqCodebookK).cast("double")))
+      .withColumn("a", sqrt(VectorFunctions.adcLookupSum($"codes", $"lut", pqCodebookK).cast("double")))
       .withColumn("r", sqrt($"resid".cast("double")))
       .withColumn("cs", VectorFunctions.cosineSim($"ea", $"eb"))
       .filter(!isnan($"cs"))
@@ -2815,16 +2671,10 @@ object Similarity {
     // candidate self-join + 2 embedding joins per execution; after:
     // a filter + union + bounded top-3 over the checkpointed relation.
     val scored = ivfCandScoredMemo(spark, dir)
-    val both = scored.select($"a_id", $"b_id".as("neg_id"), $"cs")
-      .unionByName(scored.select($"b_id".as("a_id"), $"a_id".as("neg_id"), $"cs"))
-    val top3 = graft.functions.TopKByScore(3)
-    both
-      .filter(!isnan($"cs") && $"cs" < 0.45)
-      .groupBy($"a_id".as("vec_id"))
-      .agg(top3($"cs", $"neg_id").as("top"))
-      .select($"vec_id", posexplode($"top").as(Seq("pos", "t")))
-      .select($"vec_id", ($"pos" + 1).cast("long").as("rk"),
-        $"t.b_id".as("neg_id"), $"t.cs".as("cs"))
+    val both = scored.select($"a_id".as("vec_id"), $"b_id".as("neg_id"), $"cs")
+      .unionByName(scored.select($"b_id".as("vec_id"), $"a_id".as("neg_id"), $"cs"))
+    TopKByScore.ranked(both.filter(!isnan($"cs") && $"cs" < 0.45), "vec_id", "cs", "neg_id", 3)
+      .select($"vec_id", $"rk".cast("long").as("rk"), $"neg_id", $"cs")
       .orderBy($"vec_id", $"rk")
   }
 

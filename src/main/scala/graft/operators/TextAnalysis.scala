@@ -1690,22 +1690,7 @@ object TextAnalysis {
       .withColumn("r_lex", row_number()
         .over(Window.orderBy($"score".desc, $"doc_id")).cast("long"))
       .filter($"r_lex" <= 10).select($"doc_id", $"r_lex")
-    val emb = Tables.embeddings(spark, dir)
-    val qv = emb.orderBy(md5($"vec_id".cast("string")), $"vec_id").limit(1)
-      .select($"vec_id".as("q_id"), $"embedding".as("eq"))
-    val top10 = graft.functions.TopKByScore(10)
-    val sem = emb
-      .spreadAcrossCores
-      .select($"vec_id".as("doc_id"), $"embedding".as("eb"))
-      .join(broadcast(qv), $"doc_id" =!= $"q_id")
-      .withColumn("cs",
-        graft.functions.VectorFunctions.cosineSim($"eq", $"eb"))
-      .filter(!isnan($"cs"))
-      .groupBy($"q_id")
-      .agg(top10($"cs", $"doc_id").as("top"))
-      .select(posexplode($"top").as(Seq("pos", "t")))
-      .select($"t.b_id".as("doc_id"), ($"pos" + 1).cast("long").as("r_sem"))
-    rboCensus(lex, sem)
+    rboCensus(lex, semArm(spark, dir, 10))
   }
 
   /** The RBO census over two (doc_id, r_lex)/(doc_id, r_sem) top-10
@@ -1989,34 +1974,32 @@ object TextAnalysis {
       .select($"doc_id", $"r_lex")
   }
 
-  /** The semantic retrieval arm shared by q185 and q241: cosine top-20
-    * for the deterministic md5-first query vector (broadcast query row,
-    * bounded-state TopKByScore — partitions shrink to ≤20 rows before
-    * the shuffle, never a corpus window sort).
+  /** The semantic retrieval arm shared by q185 (k = 20) and q223
+    * (k = 10): (doc_id, r_sem) cosine top-k for the deterministic
+    * md5-first query vector (broadcast query row, bounded-state
+    * TopKByScore — partitions shrink to ≤k rows before the shuffle,
+    * never a corpus window sort).
     */
-  private def semArm(spark: SparkSession, dir: String): DataFrame = {
+  private def semArm(spark: SparkSession, dir: String, k: Int): DataFrame = {
     import spark.implicits._
     val emb = Tables.embeddings(spark, dir)
     val qv = emb.orderBy(md5($"vec_id".cast("string")), $"vec_id").limit(1)
       .select($"vec_id".as("q_id"), $"embedding".as("eq"))
-    val top20 = graft.functions.TopKByScore(20)
-    emb
+    val scored = emb
       .spreadAcrossCores
       .select($"vec_id".as("doc_id"), $"embedding".as("eb"))
       .join(broadcast(qv), $"doc_id" =!= $"q_id")
       .withColumn("cs",
         graft.functions.VectorFunctions.cosineSim($"eq", $"eb"))
       .filter(!isnan($"cs"))
-      .groupBy($"q_id")
-      .agg(top20($"cs", $"doc_id").as("top"))
-      .select(posexplode($"top").as(Seq("pos", "t")))
-      .select($"t.b_id".as("doc_id"), ($"pos" + 1).cast("long").as("r_sem"))
+    graft.functions.TopKByScore.ranked(scored, "q_id", "cs", "doc_id", k)
+      .select($"doc_id", $"rk".cast("long").as("r_sem"))
   }
 
   def q185HybridRrf(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val lex = lexArm(spark, dir)
-    val sem = semArm(spark, dir)
+    val sem = semArm(spark, dir, 20)
     lex.join(sem, Seq("doc_id"), "full_outer")
       .select($"doc_id",
         coalesce($"r_lex", lit(0L)).as("r_lex"),

@@ -129,17 +129,13 @@ object AnnIndex extends IndexLifecycle {
         "left_semi")
       .select($"vec_id".as("a_id"), $"embedding".as("ea"))
     val qe = q.select($"vec_id".as("b_id"), $"embedding".as("eb"))
-    val topk = graft.functions.TopKByScore(k)
-    cand
+    val scored = cand
       .join(broadcast(corpusSlice), Seq("a_id"))
       .join(broadcast(qe), Seq("b_id"))
       .withColumn("cs", graft.functions.VectorFunctions.cosineSim($"eb", $"ea"))
       .filter(!isnan($"cs"))
-      .groupBy($"b_id")
-      .agg(topk($"cs", $"a_id").as("top"))
-      .select($"b_id".as("vec_id"), posexplode($"top").as(Seq("pos", "t")))
-      .select($"vec_id", ($"pos" + 1).cast("int").as("rk"),
-        $"t.b_id".as("b_id"), $"t.cs".as("score"))
+    graft.functions.TopKByScore.ranked(scored, "b_id", "cs", "a_id", k)
+      .select($"b_id".as("vec_id"), $"rk", $"a_id".as("b_id"), $"cs".as("score"))
   }
 
   /** Full index (re)derivation from the corpus store — bootstrap over an

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
@@ -90,6 +90,12 @@ object CorpusStreams {
     StructField("n_tokens", LongType),
     StructField("text", StringType)))
 
+  /** One row per `key`: the row lowest in `order`. */
+  private[streaming] def lowestPer(df: DataFrame, key: String, order: Column*): DataFrame =
+    df.withColumn("rk", row_number().over(
+        org.apache.spark.sql.expressions.Window.partitionBy(col(key)).orderBy(order: _*)))
+      .filter(col("rk") === 1).drop("rk")
+
   def admitNearDupBatch(batch: DataFrame, corpusDir: String,
       minTokens: Int = 5, minJaccard: Double = 0.7): Unit = {
     val spark = batch.sparkSession
@@ -104,14 +110,16 @@ object CorpusStreams {
         spark.read.schema(corpusStoreSchema).parquet(corpusDir)
       else spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], corpusStoreSchema)
-    val gated = batch
+    val normalized = batch
       .withColumn("fp", md5(lower(trim(regexp_replace(col("text"), "\\s+", " ")))))
       .withColumn("n_tokens", size(split(trim(col("text")), " ")).cast("long"))
       .filter(col("n_tokens") >= minTokens)
-      .withColumn("rk", row_number().over(
-        org.apache.spark.sql.expressions.Window.partitionBy($"fp").orderBy($"doc_id")))
-      .filter($"rk" === 1).drop("rk")
-      .join(existing.select($"fp"), Seq("fp"), "left_anti")
+    // the exact-dup gate (an in-batch duplicate text keeps the lowest
+    // doc_id), then a doc_id delivered twice keeps its lowest fp
+    val gated = lowestPer(
+      lowestPer(normalized, "fp", $"doc_id")
+        .join(existing.select($"fp"), Seq("fp"), "left_anti"),
+      "doc_id", $"fp")
       .select($"doc_id", $"source", $"fp", $"n_tokens", $"text")
       .localCheckpoint() // branches into the near-dup probe and the append
     val nearDups = graft.operators.Dedup.crossNearDupIds(

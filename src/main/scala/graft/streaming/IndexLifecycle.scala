@@ -235,12 +235,8 @@ private[streaming] trait IndexLifecycle {
       key: String, winner: Column*): DataFrame = {
     val hits = stored.select(col(key))
       .join(broadcast(batch.select(col(key))), Seq(key), "left_semi")
-    batch.join(broadcast(hits), Seq(key), "left_anti")
-      .withColumn("rk", row_number().over(
-        org.apache.spark.sql.expressions.Window.partitionBy(col(key))
-          .orderBy(winner: _*)))
-      .filter(col("rk") === 1)
-      .drop("rk")
+    CorpusStreams.lowestPer(batch.join(broadcast(hits), Seq(key), "left_anti"),
+      key, winner: _*)
   }
 
   /** Appends `rows` (derived from `admitted` admitted rows) to a store:

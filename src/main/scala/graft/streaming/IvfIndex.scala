@@ -420,7 +420,6 @@ object IvfIndex extends IndexLifecycle {
   private def adcScoredOf(spark: SparkSession, batch: DataFrame,
       candCoded: DataFrame, kEff: Int): DataFrame = {
     import spark.implicits._
-    val sim = graft.operators.Similarity
     // `batch` carries its per-row LUTs ([[withKernels]]); kEff is the
     // codebook's EFFECTIVE per-subspace size: an epoch trained on fewer
     // vectors than K has that many centroids, and the positional LUT
@@ -430,7 +429,8 @@ object IvfIndex extends IndexLifecycle {
     val luts = batch.filter($"lut".isNotNull).select($"vec_id".as("b_id"), $"lut")
     candCoded
       .join(broadcast(luts), Seq("b_id"))
-      .withColumn("a", sqrt(sim.adcDistOf($"code", $"lut", kEff).cast("double")))
+      .withColumn("a", sqrt(graft.functions.VectorFunctions.adcLookupSum(
+        $"code", $"lut", kEff).cast("double")))
       .withColumn("r", sqrt($"resid".cast("double")))
   }
 
@@ -742,43 +742,68 @@ object IvfIndex extends IndexLifecycle {
     * probe slice (≈ nprobe/nlist of the corpus — the q236 policy):
     *
     *  1. queries assign against the BROADCAST frozen pivots → their
-    *     top-`nprobe` probe lists (default: the epoch's recall nprobe
-    *     from meta — the ⌈nlist/8⌉ recall budget, NOT the admission
-    *     slice; search recall comes from probe depth, membership depth
-    *     is an admission concept);
+    *     top-`nprobe` probe lists (the epoch's recall nprobe from meta
+    *     — the ⌈nlist/8⌉ recall budget, NOT the admission slice; search
+    *     recall comes from probe depth, membership depth is an
+    *     admission concept);
     *  2. candidates = the rk = 1 single-assignment inverted lists
     *     (q226/q242's search semantics) scanned ONCE against a
     *     broadcast of the probe rows;
-    *  3. ADC scoring: each candidate's inlined code against the
-    *     query's LUT — frozen-integer exact, 16 lookups, no raw
-    *     vector — reduced to a per-query shortlist (max(k, 4k) unless
-    *     `shortlist` overrides) through the bounded-state
-    *     [[graft.functions.TopKByScore]] aggregator (map-side partial:
-    *     the shuffle carries shortlist rows per query per partition,
-    *     never the candidate set);
-    *  4. exact re-rank (`exactRerank=true`, default): the shortlist's
-    *     raw vectors fetched via broadcast-ids semi-join on the
-    *     corpus, ranked by exact cosine, keep k. With
-    *     `exactRerank=false` the ADC ranking is returned directly and
-    *     `score` is the NEGATED frozen ADC distance (higher = closer)
-    *     — rank-comparable, not a cosine.
+    *  3. ADC scoring ([[adcShortlist]]): each candidate's inlined code
+    *     against the query's LUT — frozen-integer exact, 16 lookups, no
+    *     raw vector — reduced to a per-query shortlist of
+    *     [[shortlistFactor]]·k through the bounded-state top-k seam
+    *     (map-side partial: the shuffle carries shortlist rows per query
+    *     per partition, never the candidate set);
+    *  4. exact re-rank: the shortlist's raw vectors fetched via
+    *     broadcast-ids semi-join on the corpus, ranked by exact cosine,
+    *     keep k.
     *
-    * Returns (vec_id, rk, b_id, score), rk 1-based best-first.
-    * Zero-norm queries carry no direction (no LUT under the PQ model)
-    * and return no rows — the same exclusion the exact arm's NaN
-    * filter applies. Version-guarded like [[admitBatch]].
+    * Returns (vec_id, rk, b_id, score), rk 1-based best-first, score =
+    * exact cosine. Zero-norm queries carry no direction (no LUT under
+    * the PQ model) and return no rows — the same exclusion the exact
+    * arm's NaN filter applies. Version-guarded like [[admitBatch]].
     */
   def topK(spark: SparkSession, indexDir: String, corpusDir: String,
-      queries: DataFrame, k: Int, shortlist: Int = 0,
-      exactRerank: Boolean = true): DataFrame = {
+      queries: DataFrame, k: Int): DataFrame = {
     import spark.implicits._
-    val sim = graft.operators.Similarity
+    val q = queries.select($"vec_id", $"embedding")
+    val short = adcShortlist(spark, indexDir, q, shortlistFactor * k)
+      .select($"q_id", $"n_id")
+    val raw = readOrEmpty(spark, corpusDir, vecSchema)
+      .join(broadcast(short.select($"n_id")), col("vec_id") === col("n_id"),
+        "left_semi")
+      .select($"vec_id".as("n_id"), $"embedding".as("en"))
+    val qe = q.select($"vec_id".as("q_id"), $"embedding".as("eq"))
+    val scored = short
+      .join(broadcast(raw), Seq("n_id"))
+      .join(broadcast(qe), Seq("q_id"))
+      .withColumn("cs",
+        graft.functions.VectorFunctions.cosineSim($"eq", $"en"))
+      .filter(!isnan($"cs"))
+    graft.functions.TopKByScore.ranked(scored, "q_id", "cs", "n_id", k)
+      .select($"q_id".as("vec_id"), $"rk", $"n_id".as("b_id"), $"cs".as("score"))
+  }
+
+  /** ADC candidates [[topK]] re-ranks per query: a shortlist of 4k
+    * leaves the exact stage room for ADC ranking error.
+    */
+  private val shortlistFactor = 4
+
+  /** Stages 1–3 of [[topK]]: per (vec_id, embedding) query, its n best
+    * candidates of the rk = 1 inverted lists by frozen ADC distance, as
+    * (q_id, rk, n_id, score) with rk 1-based best-first and score the
+    * NEGATED frozen ADC distance (higher = closer). A payload-less
+    * candidate (zero-norm corpus vector outside the PQ model) has no
+    * ADC score and is excluded, like the exact arm's NaN cosine.
+    */
+  private[graft] def adcShortlist(spark: SparkSession, indexDir: String,
+      queries: DataFrame, n: Int): DataFrame = {
+    import spark.implicits._
     val epoch = loadEpoch(spark, indexDir)
     epoch.meta.foreach(requireVersion(indexDir, _))
     val nprobe = epoch.meta.map(_.nprobe).getOrElse(1)
-    val kEff = epoch.kernels.kEff
-    val q = queries.select($"vec_id", $"embedding")
-    val qk = withKernels(q, epoch.kernels, nprobe)
+    val qk = withKernels(queries, epoch.kernels, nprobe)
     val probes = nearRows(qk).select($"vec_id".as("q_id"), $"p_id")
     val cand = readOrEmpty(spark, s"$indexDir/near", nearSchema)
       .filter($"rk" === 1)
@@ -786,42 +811,10 @@ object IvfIndex extends IndexLifecycle {
       .join(broadcast(probes), Seq("p_id"))
       .filter($"n_id" =!= $"q_id")
     val luts = qk.filter($"lut".isNotNull).select($"vec_id".as("q_id"), $"lut")
-    val sl = if (shortlist > 0) shortlist else 4 * k
-    val topSl = graft.functions.TopKByScore(sl)
-    val adcTop = cand.join(broadcast(luts), Seq("q_id"))
-      .withColumn("score", -sim.adcDistOf($"code", $"lut", kEff).cast("double"))
-      // a payload-less candidate (zero-norm corpus vector outside the
-      // PQ model) has no ADC score and cannot be ranked — excluded,
-      // like the exact arm's NaN cosine exclusion
+    val scored = cand.join(broadcast(luts), Seq("q_id"))
+      .withColumn("score", -graft.functions.VectorFunctions.adcLookupSum(
+        $"code", $"lut", epoch.kernels.kEff).cast("double"))
       .filter($"score".isNotNull && !isnan($"score"))
-      .groupBy($"q_id")
-      .agg(topSl($"score", $"n_id").as("top"))
-    if (!exactRerank) {
-      adcTop
-        .select($"q_id", posexplode($"top").as(Seq("pos", "t")))
-        .filter($"pos" < k)
-        .select($"q_id".as("vec_id"), ($"pos" + 1).cast("int").as("rk"),
-          $"t.b_id".as("b_id"), $"t.cs".as("score"))
-    } else {
-      val short = adcTop
-        .select($"q_id", explode($"top.b_id").as("n_id"))
-      val raw = readOrEmpty(spark, corpusDir, vecSchema)
-        .join(broadcast(short.select($"n_id")), col("vec_id") === col("n_id"),
-          "left_semi")
-        .select($"vec_id".as("n_id"), $"embedding".as("en"))
-      val qe = q.select($"vec_id".as("q_id"), $"embedding".as("eq"))
-      val topk = graft.functions.TopKByScore(k)
-      short
-        .join(broadcast(raw), Seq("n_id"))
-        .join(broadcast(qe), Seq("q_id"))
-        .withColumn("cs",
-          graft.functions.VectorFunctions.cosineSim($"eq", $"en"))
-        .filter(!isnan($"cs"))
-        .groupBy($"q_id")
-        .agg(topk($"cs", $"n_id").as("top"))
-        .select($"q_id", posexplode($"top").as(Seq("pos", "t")))
-        .select($"q_id".as("vec_id"), ($"pos" + 1).cast("int").as("rk"),
-          $"t.b_id".as("b_id"), $"t.cs".as("score"))
-    }
+    graft.functions.TopKByScore.ranked(scored, "q_id", "score", "n_id", n)
   }
 }

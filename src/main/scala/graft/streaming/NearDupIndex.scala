@@ -286,14 +286,19 @@ object NearDupIndex extends IndexLifecycle {
     }
     // indexed docs now, and the corpus size of the last rebuild
     val (indexed, lastN) = healedN.fold((preIdxCount, metaN))(n => (n, n))
-    // the exact-dup gate, keyed by the normalized-text fingerprint (the
-    // naive path's rule: an in-batch duplicate keeps the lowest doc_id)
-    val gated = ck(replayGate(batch
+    // the exact-dup gate, keyed by the normalized-text fingerprint, then
+    // the naive path's doc_id rule: an in-batch duplicate text keeps the
+    // lowest doc_id, and a doc_id delivered twice keeps its lowest fp —
+    // an id admitted twice would diverge the heal counts for good. The
+    // micro-batch (broadcast-sized: the gate broadcasts its keys) sits
+    // in one partition, so neither per-key window pays a shuffle.
+    val gated = ck(CorpusStreams.lowestPer(replayGate(batch
         .withColumn("fp", md5(lower(trim(regexp_replace(col("text"), "\\s+", " ")))))
         .withColumn("n_tokens", size(split(trim(col("text")), " ")).cast("long"))
         .filter(col("n_tokens") >= minTokens)
-        .select($"doc_id", $"source", $"fp", $"n_tokens", $"text"),
-      corpus, "fp", $"doc_id"))
+        .select($"doc_id", $"source", $"fp", $"n_tokens", $"text")
+        .coalesce(1),
+      corpus, "fp", $"doc_id"), "doc_id", $"fp"))
 
     val batchIdx = ck(indexRows(
       graft.operators.Dedup.hxOfDocs(gated),

@@ -657,6 +657,36 @@ class PlanSpec extends AnyFunSuite with SparkSpec {
       "q230 must be a join-free pass over the checkpointed scored candidates")
   }
 
+  test("q239/q242: every partition-less window ranks at most pqCodebookK codebook rows") {
+    import org.apache.spark.sql.execution.{GlobalLimitExec, SparkPlan, TakeOrderedAndProjectExec}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.execution.window.WindowExec
+    // pqCentroids numbers its codebook with row_number() over
+    // Window.orderBy(vec_id) — Similarity's only partition-less window.
+    // It is bounded because it sits on the kCent-row limit of the
+    // lowest-vec_id vectors, never on the corpus.
+    val bound = graft.operators.Similarity.pqCodebookK
+    def limitBelow(n: SparkPlan): Option[Int] = n match {
+      case t: TakeOrderedAndProjectExec => Some(t.limit)
+      case g: GlobalLimitExec => Some(g.limit)
+      case _ if n.children.size == 1 => limitBelow(n.children.head)
+      case _ => None
+    }
+    for (name <- Seq("q239_pq_adc_recall", "q242_ivfpq_recall")) {
+      val root = SparkEntry.queries(name)(spark, sfDir).queryExecution.executedPlan match {
+        case a: AdaptiveSparkPlanExec => a.initialPlan
+        case p => p
+      }
+      val global = root.collect { case w: WindowExec if w.partitionSpec.isEmpty => w }
+      assert(global.nonEmpty, s"$name: expected the codebook's row_number window")
+      global.foreach { w =>
+        val lim = limitBelow(w.child)
+        assert(lim.exists(_ <= bound),
+          s"$name: a partition-less window over $lim rows, not a ≤ $bound-row limit:\n$w")
+      }
+    }
+  }
+
   test("q222: churn enumerates edges once — a single self-join, no full-outer") {
     val p = plan("q222_graph_churn")
     assert(!p.contains("FullOuter"), "single-pass census needs no full-outer join")

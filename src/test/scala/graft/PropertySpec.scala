@@ -58,16 +58,6 @@ class PropertySpec extends AnyFunSuite with SparkSpec {
     }
   }
 
-  test("metrics listener records executions") {
-    val m = graft.core.Metrics.attach(spark)
-    Seq(1, 2, 3).toDF("x").count()
-    // listener delivery is async; poll briefly
-    val deadline = System.currentTimeMillis() + 5000
-    while (m.snapshot().isEmpty && System.currentTimeMillis() < deadline) Thread.sleep(50)
-    assert(m.snapshot().nonEmpty)
-    assert(m.snapshot().forall(!_.failed))
-  }
-
   test("headerOnly keeps schema, drops rows; ensureDir creates path") {
     val df = Seq((1, "a")).toDF("x", "y")
     val h = graft.sources.Sinks.headerOnly(df)
@@ -169,9 +159,10 @@ class PropertySpec extends AnyFunSuite with SparkSpec {
   }
 
   test("TopKByScore equals the sort-based reference and is partition-order invariant") {
-    // the bounded-state aggregator behind q34/q225/q226/q230/q236: its
-    // (score desc, id asc) top-k must equal a full sort's head, under any
-    // partitioning (map-side partials merge associatively).
+    // the bounded-state aggregator behind every ANN search, raw and
+    // through its one seam `TopKByScore.ranked`: its (score desc, id asc)
+    // top-k must equal a full sort's head, under any partitioning
+    // (map-side partials merge associatively).
     val rowGen = Gen.listOfN(60,
       Gen.zip(Gen.chooseNum(0, 3), Gen.chooseNum(1, 200),
         Gen.chooseNum(-1000, 1000).map(_ / 997.0)))
@@ -183,20 +174,31 @@ class PropertySpec extends AnyFunSuite with SparkSpec {
         _.sortBy(r => (-r._3, r._2.toLong)).take(5)
           .map(r => (r._2.toLong, r._3))).toMap
       Seq(1, 7).foreach { nPart =>
-        val top5 = graft.functions.TopKByScore(5)
-        val got = data.toDF("g", "id", "score")
+        val input = data.toDF("g", "id", "score")
+          .withColumn("id", $"id".cast("long"))
           .repartition(nPart)
+        val top5 = graft.functions.TopKByScore(5)
+        // the raw aggregator, and the engine's one top-k seam over it
+        val viaAgg = input
           .groupBy($"g")
-          .agg(top5($"score", $"id".cast("long")).as("top"))
+          .agg(top5($"score", $"id").as("top"))
           .select($"g", posexplode($"top").as(Seq("pos", "t")))
-          .select($"g", $"pos", $"t.b_id", $"t.cs")
-          .collect()
-          .groupBy(_.getAs[Int]("g"))
-          .view.mapValues(_.sortBy(_.getAs[Int]("pos"))
-            .map(r => (r.getAs[Long]("b_id"), r.getAs[Double]("cs"))).toList)
-          .toMap
-        assert(got == expected.map { case (k, v) => k -> v.toList },
-          s"nPart=$nPart")
+          .select($"g", ($"pos" + 1).as("rk"), $"t.b_id".as("id"), $"t.cs".as("score"))
+        val viaSeam = graft.functions.TopKByScore.ranked(input, "g", "score", "id", 5)
+        Seq("aggregator" -> viaAgg, "ranked" -> viaSeam).foreach { case (path, df) =>
+          val rows = df.collect()
+          rows.groupBy(_.getAs[Int]("g")).values.foreach { rs =>
+            assert(rs.map(_.getAs[Int]("rk")).sorted.toSeq == (1 to rs.length),
+              s"$path nPart=$nPart: ranks must run 1..n")
+          }
+          val got = rows
+            .groupBy(_.getAs[Int]("g"))
+            .view.mapValues(_.sortBy(_.getAs[Int]("rk"))
+              .map(r => (r.getAs[Long]("id"), r.getAs[Double]("score"))).toList)
+            .toMap
+          assert(got == expected.map { case (k, v) => k -> v.toList },
+            s"$path nPart=$nPart")
+        }
       }
     }
   }

@@ -124,4 +124,21 @@ class ToolchainSpec extends AnyFunSuite with SparkSpec {
     assert(mains.sorted === Seq("graft.Bench", "graft.Main", "graft.Verify",
       "graft.tools.Explain", "graft.tools.PlanLedger"))
   }
+
+  test("src/main ranks top-k only through TopKByScore.ranked") {
+    // every ANN search shares one top-k tail: no other engine file builds
+    // the aggregator or reads its (cs, b_id) buffer layout
+    import java.nio.file.{Files, Paths}
+    import scala.jdk.CollectionConverters._
+    val root = Paths.get("src/main/scala")
+    val seam = root.resolve("graft/functions/TopKAggregator.scala")
+    val marks = Seq("TopKByScore(", "\"t.b_id\"", "\"t.cs\"", "top.b_id")
+    val offenders = Files.walk(root).iterator().asScala
+      .filter(f => f.toString.endsWith(".scala") && f != seam)
+      .flatMap { f =>
+        val text = Files.readString(f)
+        marks.filter(text.contains).map(m => s"${root.relativize(f)}: $m")
+      }.toSeq
+    assert(offenders.isEmpty, s"top-k tails outside the seam:\n${offenders.mkString("\n")}")
+  }
 }

@@ -379,6 +379,46 @@ class CorpusStreamsSpec extends AnyFunSuite with SparkSpec {
       "replay must not duplicate index rows")
   }
 
+  test("a doc_id delivered twice in one batch is admitted once; later batches stay incremental") {
+    val base = java.nio.file.Files.createTempDirectory("graft_ndidx_dupid")
+    val corpus = base.resolve("corpus").toString
+    val indexDir = base.resolve("index").toString
+    val naiveCorpus = base.resolve("naive").toString
+    def toks(p: String, n: Int) = (1 to n).map(i => s"$p$i").mkString(" ")
+    def storeFiles: Set[String] = Seq("docs", "px").flatMap { d =>
+      new java.io.File(s"$indexDir/$d").listFiles().map(f => s"$d/${f.getName}")
+        .filter(_.endsWith(".parquet"))
+    }.toSet
+    def ids(dir: String): Seq[Long] =
+      spark.read.parquet(dir).select("doc_id").collect().map(_.getLong(0)).toSeq.sorted
+    def admit(b: org.apache.spark.sql.DataFrame): Unit = {
+      NearDupIndex.admitBatch(b, corpus, indexDir)
+      CorpusStreams.admitNearDupBatch(b, naiveCorpus)
+    }
+    // doc 1 arrives twice with two different texts in the same batch:
+    // it keeps one row, the one with the lowest fingerprint
+    val first = docsDf(1L -> toks("a", 40), 1L -> toks("b", 40), 2L -> toks("c", 40))
+    admit(first)
+    val fp1 = first.filter($"doc_id" === 1L)
+      .select(md5(lower(trim(regexp_replace($"text", "\\s+", " "))))).as[String]
+      .collect().min
+    assert(ids(corpus) == Seq(1L, 2L), "doc 1 must be admitted once")
+    assert(spark.read.parquet(corpus).filter($"doc_id" === 1L).select("fp")
+      .as[String].collect().toSeq == Seq(fp1), "doc 1 keeps its lowest fp")
+    assert(ids(naiveCorpus) == ids(corpus), "the naive path decides the same")
+    // three single-doc batches — new, near-dup, exact-dup — below the
+    // doubling trigger: none may pay a heal rebuild
+    Seq(3L -> toks("d", 40), 4L -> (toks("d", 39) + " qq"), 5L -> toks("c", 40))
+      .foreach { d =>
+        val before = storeFiles
+        admit(docsDf(d))
+        assert(before.subsetOf(storeFiles), s"batch of doc ${d._1} rebuilt the index")
+        assert(ids(corpus) == Seq(1L, 2L, 3L))
+        assert(ids(s"$indexDir/docs") == ids(corpus), "index and corpus agree")
+        assert(ids(naiveCorpus) == ids(corpus), "the naive path decides the same")
+      }
+  }
+
   test("corpus/index divergence self-heals on the next batch") {
     // crash between corpus append and index append: the replayed batch
     // is exact-dup-gated out, so without the divergence check those docs

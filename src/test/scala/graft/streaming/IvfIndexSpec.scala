@@ -414,16 +414,16 @@ class IvfIndexSpec extends AnyFunSuite with SparkSpec {
       assert(b == q - 5000000L, s"query $q's rank-1 must be its twin, got $b")
       assert(s > 0.9999, s"twin cosine must be ~1, got $s")
     }
-    // the ADC stage (exactRerank=false) is bit-equal to a recompute
-    // from the batch kernels under the same frozen epoch state
+    // the ADC stage topK shortlists from (at n = k) is bit-equal to a
+    // recompute from the batch kernels under the same frozen epoch state
     val meta = spark.read.parquet(s"$index/meta").head()
     val nprobe = meta.getAs[Int]("nprobe")
     val piv = spark.read.schema(IvfIndex.pivSchema).parquet(s"$index/piv")
     val cb = spark.read.schema(IvfIndex.cbSchema).parquet(s"$index/cb")
     val sim = graft.operators.Similarity
     val k = 3
-    val adc = IvfIndex.topK(spark, index, corpus, twins, k, exactRerank = false)
-      .select($"vec_id", $"rk", $"b_id")
+    val adc = IvfIndex.adcShortlist(spark, index, twins, k)
+      .select($"q_id", $"rk", $"n_id")
       .as[(Long, Int, Long)].collect().toSet
     val admitted = spark.read.schema(IvfIndex.vecSchema).parquet(corpus)
       .select($"vec_id", $"embedding")
@@ -438,7 +438,7 @@ class IvfIndexSpec extends AnyFunSuite with SparkSpec {
       .select($"vec_id".as("n_id"), $"codes")
     val expect = lists.join(probes, Seq("p_id")).filter($"n_id" =!= $"q_id")
       .join(codes, Seq("n_id")).join(luts, Seq("q_id"))
-      .withColumn("d", sim.adcDistOf($"codes", $"lut", kEff))
+      .withColumn("d", graft.functions.VectorFunctions.adcLookupSum($"codes", $"lut", kEff))
       .withColumn("rk", row_number().over(
         org.apache.spark.sql.expressions.Window.partitionBy($"q_id")
           .orderBy($"d", $"n_id")))
