@@ -519,14 +519,12 @@ class PlanSpec extends AnyFunSuite with SparkSpec {
     }
   }
 
-  test("q185: fusion arms are bounded before the join — no corpus-sized window") {
+  /** The windows of query `name` that sit above neither a LIMIT nor the
+    * checkpointed BM25 memo pool (itself limit-20 by construction).
+    */
+  private def unboundedWindows(name: String) = {
     import org.apache.spark.sql.catalyst.plans.logical.{GlobalLimit, Window => LWindow}
-    val df = SparkEntry.queries("q185_hybrid_rrf")(spark, sfDir)
-    // every window must sit above a LIMIT (the 20-row arm) or the
-    // checkpointed BM25 memo pool (itself limit-20 by construction) —
-    // the semantic arm ranks through the bounded-state TopKByScore
-    // aggregator, never a window over the corpus
-    val unbounded = df.queryExecution.analyzed.collect {
+    SparkEntry.queries(name)(spark, sfDir).queryExecution.analyzed.collect {
       case w: LWindow if !w.child.exists {
         case _: GlobalLimit => true
         case r: org.apache.spark.sql.execution.LogicalRDD =>
@@ -534,11 +532,23 @@ class PlanSpec extends AnyFunSuite with SparkSpec {
         case _ => false
       } => w
     }
+  }
+
+  test("q185: fusion arms are bounded before the join — no corpus-sized window") {
+    // the semantic arm ranks through the bounded-state TopKByScore
+    // aggregator, never a window over the corpus
+    val unbounded = unboundedWindows("q185_hybrid_rrf")
     assert(unbounded.isEmpty,
       s"window over an unbounded relation in the fusion plan:\n$unbounded")
     val p = plan("q185_hybrid_rrf")
     assert(p.contains("TopKByScore") || p.contains("topkbyscore"),
       "semantic arm must rank via the bounded-state aggregator")
+  }
+
+  test("q223: the lexical rank window runs over the memoized BM25 pool") {
+    val unbounded = unboundedWindows("q223_rank_overlap")
+    assert(unbounded.isEmpty,
+      s"window over an unbounded relation in the rank-overlap plan:\n$unbounded")
   }
 
   test("q205: the stats aggregate is answered from parquet footers") {

@@ -99,14 +99,14 @@ class ToolchainSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("documents.doc_id is unique (the data contract q143/q148 rely on)") {
-    // q143/q148 de-duplicate shingles with a per-doc array_distinct, which
-    // equals the oracle's corpus-wide SELECT DISTINCT only when no doc_id
-    // repeats
+    // q143/q148 de-duplicate shingles, and q131 tokens, with a per-doc
+    // array_distinct, which equals the oracle's corpus-wide SELECT
+    // DISTINCT (or count(DISTINCT doc_id)) only when no doc_id repeats
     val r = Tables.documents(spark, sfDir)
       .selectExpr("count(*) AS n", "count(DISTINCT doc_id) AS d").head()
     assert(r.getLong(0) === r.getLong(1),
       s"documents has ${r.getLong(0)} rows but ${r.getLong(1)} distinct doc_ids; " +
-        "q143/q148's per-doc array_distinct no longer matches the oracle's DISTINCT")
+        "q131/q143/q148's per-doc array_distinct no longer matches the oracle's DISTINCT")
   }
 
   test("src/main declares exactly the five program entry points") {
