@@ -1549,6 +1549,8 @@ object Dedup {
       changed = next.filter($"lbl" < $"prev").count()
       labels = next.select($"v", $"lbl")
     }
+    // the result reads only the last round's labels
+    org.apache.spark.sql.graft.CheckpointUtils.free(edges)
     val sizes = labels.groupBy($"lbl").agg(count(lit(1)).as("cluster_size"))
     labels.join(sizes, Seq("lbl"))
       .select($"v".as("doc_id"), $"lbl".as("cluster_rep"), $"cluster_size")

@@ -60,50 +60,6 @@ object Graphs {
       .select($"e.s".as("s"), $"e.t".as("t"), $"e.dt".as("dt"))
   }
 
-  /** Per-vertex triangle counts for an undirected edge list (`u`, `v`),
-    * edge-iterator form over the degree orientation: a triangle with
-    * rank-ordered corners a<b<c carries oriented edges a→b, a→c, b→c,
-    * so it is discovered EXACTLY once — at edge (a,b), as
-    * c ∈ N⁺(a) ∩ N⁺(b) — and attributed |I| to each endpoint and 1 to
-    * each intersection member. This never materializes the O(E^1.5)
-    * wedge relation the join formulation builds (41M rows at sf0.1 for
-    * 1.9M triangles): total intersection work is Σ(|N⁺(s)|+|N⁺(t)|)
-    * per edge ≤ E·O(√E) — the same asymptotic bound, but streamed
-    * through `array_intersect` inside one map stage instead of
-    * generated, shuffled, and probed as rows.
-    *
-    * Physical shape: the oriented edge list is materialized once
-    * (localCheckpoint — it feeds the adjacency build and the edge scan,
-    * and recomputing the distinct+degree lineage per branch tripled the
-    * query's cost). The adjacency-list relation is |V| rows of
-    * O(√E)-bounded arrays — broadcast while the vertex dimension fits
-    * (`spark.graft.triangles.broadcastVertices` rows, default 1M), a
-    * plain shuffle join on the vertex key past it. Measured at sf0.1
-    * (1.2M edges, 1.9M triangles): 7.3 s as a wedge join → 2.9 s this
-    * form, vs 2.4 s for single-node DuckDB on the same graph.
-    */
-  def triangleCounts(edges: DataFrame): DataFrame = {
-    import edges.sparkSession.implicits._
-    val spark = edges.sparkSession
-    val oriented = orientByDegree(edges).localCheckpoint()
-    val adj = oriented.groupBy($"s").agg(collect_list($"t").as("nbrs"))
-    val nV = adj.count()
-    val broadcastMax =
-      spark.conf.getOption("spark.graft.triangles.broadcastVertices")
-        .map(_.toLong).getOrElse(1000000L)
-    def side(keyed: DataFrame) = if (nV <= broadcastMax) broadcast(keyed) else keyed
-    val withSets = oriented.select($"s", $"t")
-      .join(side(adj.select($"s", $"nbrs".as("ns"))), Seq("s"))
-      .join(side(adj.select($"s".as("t"), $"nbrs".as("nt"))), Seq("t"))
-      .select($"s", $"t", array_intersect($"ns", $"nt").as("ws"))
-      .filter(size($"ws") > 0)
-    val endpoints = withSets.select(
-      explode(array($"s", $"t")).as("part"), size($"ws").cast("long").as("n"))
-    val thirds = withSets.select(explode($"ws").as("part"), lit(1L).as("n"))
-    endpoints.union(thirds)
-      .groupBy($"part").agg(sum($"n").as("n_triangles"))
-  }
-
   def q125TriangleCount(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     triangleCountsMemo(spark, dir).orderBy($"part")
@@ -133,38 +89,58 @@ object Graphs {
         .localCheckpoint()
     }
 
-  /** Per-undirected-edge triangle counts — |N(u) ∩ N(v)| for every
-    * co-purchase edge (u, v), the common-neighbour statistic link
-    * prediction scores are built from. Same degree-ordered edge-iterator
-    * enumeration as [[triangleCounts]] (each triangle found exactly once
-    * on its lowest-rank base edge, O(E^1.5)-bounded combos, hub-proof),
-    * but each oriented triangle (s, t, w) is exploded into its three
-    * undirected edges before the count, so the result is keyed by edge
-    * rather than by vertex. Memoized: q215 pays the adjacency build once
-    * per (session, dir) as an adjudicated `memo_build` line item.
+  /** Per-undirected-edge triangle counts for an edge list (`u`, `v`):
+    * (u, v, n_common) with u < v and n_common = |N(u) ∩ N(v)| > 0, the
+    * common-neighbour statistic link prediction scores are built from.
+    * Edge-iterator form over the degree orientation: a triangle with
+    * rank-ordered corners a<b<c carries oriented edges a→b, a→c, b→c,
+    * so it is discovered EXACTLY once — at edge (a,b), as
+    * c ∈ N⁺(a) ∩ N⁺(b) — and exploded into its three undirected edges
+    * before the count. This never materializes the O(E^1.5) wedge
+    * relation the join formulation builds (41M rows at sf0.1 for 1.9M
+    * triangles): total intersection work is Σ(|N⁺(s)|+|N⁺(t)|) per edge
+    * ≤ E·O(√E) — the same asymptotic bound, but streamed through
+    * `array_intersect` inside one map stage instead of generated,
+    * shuffled, and probed as rows.
+    *
+    * Physical shape: the oriented edge list is materialized once
+    * (localCheckpoint — it feeds the adjacency build and the edge scan,
+    * and recomputing the distinct+degree lineage per branch tripled the
+    * query's cost). The adjacency-list relation is |V| rows of
+    * O(√E)-bounded arrays — broadcast while the vertex dimension fits
+    * (`spark.graft.triangles.broadcastVertices` rows, default 1M), a
+    * plain shuffle join on the vertex key past it. Measured at sf0.1
+    * (1.2M edges, 1.9M triangles): 7.3 s as a wedge join → 2.9 s this
+    * form, vs 2.4 s for single-node DuckDB on the same graph.
+    */
+  private[graft] def edgeTriangleCounts(edges: DataFrame): DataFrame = {
+    import edges.sparkSession.implicits._
+    val oriented = orientByDegree(edges).localCheckpoint()
+    val adj = oriented.groupBy($"s").agg(collect_list($"t").as("nbrs"))
+    val nV = adj.count()
+    val broadcastMax =
+      edges.sparkSession.conf.getOption("spark.graft.triangles.broadcastVertices")
+        .map(_.toLong).getOrElse(1000000L)
+    def side(keyed: DataFrame) = if (nV <= broadcastMax) broadcast(keyed) else keyed
+    val tri = oriented.select($"s", $"t")
+      .join(side(adj.select($"s", $"nbrs".as("ns"))), Seq("s"))
+      .join(side(adj.select($"s".as("t"), $"nbrs".as("nt"))), Seq("t"))
+      .select($"s", $"t", explode(array_intersect($"ns", $"nt")).as("w"))
+    tri.select(explode(array(
+        struct(least($"s", $"t").as("u"), greatest($"s", $"t").as("v")),
+        struct(least($"s", $"w").as("u"), greatest($"s", $"w").as("v")),
+        struct(least($"t", $"w").as("u"), greatest($"t", $"w").as("v")))).as("e"))
+      .groupBy($"e.u".as("u"), $"e.v".as("v"))
+      .agg(count(lit(1)).as("n_common"))
+  }
+
+  /** [[edgeTriangleCounts]] of the co-purchase graph, memoized: q215
+    * pays the adjacency build once per (session, dir) as an adjudicated
+    * `memo_build` line item, and q125/q202 roll it up per vertex.
     */
   private[graft] def edgeTriangleCountsMemo(spark: SparkSession, dir: String): DataFrame =
     memo(spark, dir, "edge_triangles") {
-      import spark.implicits._
-      val sp = spark
-      val oriented = orientByDegree(coPurchaseEdges(spark, dir)).localCheckpoint()
-      val adj = oriented.groupBy($"s").agg(collect_list($"t").as("nbrs"))
-      val nV = adj.count()
-      val broadcastMax =
-        sp.conf.getOption("spark.graft.triangles.broadcastVertices")
-          .map(_.toLong).getOrElse(1000000L)
-      def side(keyed: DataFrame) = if (nV <= broadcastMax) broadcast(keyed) else keyed
-      val tri = oriented.select($"s", $"t")
-        .join(side(adj.select($"s", $"nbrs".as("ns"))), Seq("s"))
-        .join(side(adj.select($"s".as("t"), $"nbrs".as("nt"))), Seq("t"))
-        .select($"s", $"t", explode(array_intersect($"ns", $"nt")).as("w"))
-      tri.select(explode(array(
-          struct(least($"s", $"t").as("u"), greatest($"s", $"t").as("v")),
-          struct(least($"s", $"w").as("u"), greatest($"s", $"w").as("v")),
-          struct(least($"t", $"w").as("u"), greatest($"t", $"w").as("v")))).as("e"))
-        .groupBy($"e.u".as("u"), $"e.v".as("v"))
-        .agg(count(lit(1)).as("n_common"))
-        .localCheckpoint()
+      edgeTriangleCounts(coPurchaseEdges(spark, dir)).localCheckpoint()
     }
 
   /** q215 — edge Jaccard link strength over the co-purchase graph: for

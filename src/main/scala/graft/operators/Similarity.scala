@@ -1014,9 +1014,8 @@ object Similarity {
     * Dispatch: the serial driver-side loop below the
     * [[lloydSerialOpsBudget]] op count, the bit-identical
     * [[pqTrainedCentroidsSharded]] above it — every caller (the
-    * q244/q245/q246 memos, [[trainedCoarsePivots]],
-    * [[graft.streaming.IvfIndex]] epochs) gets the scale path
-    * automatically, and because the two kernels are bit-equal
+    * q244/q245/q246 memos, [[graft.streaming.IvfIndex]] epochs) gets the
+    * scale path automatically, and because the two kernels are bit-equal
     * (spec-pinned, q247 oracle-gated) the dispatch can never change a
     * gated result.
     */
@@ -1463,24 +1462,6 @@ object Similarity {
         Window.partitionBy($"a_id").orderBy($"d", $"c_id")))
       .filter($"rk" <= nprobe)
       .select($"a_id", $"c_id", $"rk")
-  }
-
-  /** Trained coarse pivots in the (p_id, pe) payload shape
-    * [[graft.streaming.IvfIndex]]'s `piv/` store and [[ivfNearOf]]
-    * consume: q245's k-means centroids (frozen-integer Lloyd over the
-    * full vectors, 64-points-per-centroid sample, [[pqTrainIters]]
-    * iterations) thawed back to FLOAT at the freeze scale. Cosine
-    * ranking against them is scale-invariant in the pivot; the r14
-    * spherical arm measured it at recall parity with the gated
-    * integer-L2 form across 64× growth (NOTES_r14 §9).
-    */
-  private[graft] def trainedCoarsePivots(emb: DataFrame, nlist: Int): DataFrame = {
-    val spark = emb.sparkSession
-    import spark.implicits._
-    pqTrainedCentroids(pqNormalized(emb), 1, pqSubspaces * pqSubDim, nlist,
-      64 * nlist, pqTrainIters)
-      .select($"c_id".cast("long").as("p_id"),
-        expr(s"transform(fc, x -> CAST(x / ${pqFreezeScale.toLong}.0D AS FLOAT))").as("pe"))
   }
 
   // ——— production-geometry trained-PQ state over ANY corpus ————————————
@@ -2254,7 +2235,7 @@ object Similarity {
 
   /** q249 — admission-probe calibration: the measured justification for
     * [[graft.streaming.IvfIndex]]'s `(admitNprobe = 1, admitListRk = 4)`
-    * defaults, gated — the (k, R) grid the r15 snapshot commit cited but
+    * constants, gated — the (k, R) grid the r15 snapshot commit cited but
     * never committed. Production admission is ASYMMETRIC in arrival
     * order (r16 advisor): when `a` is already indexed and `b` arrives,
     * the pair is caught iff `b`'s k-probe set intersects `a`'s rk ≤ R
@@ -2523,7 +2504,7 @@ object Similarity {
     *
     *   - `ivfpq_indexed` — [[graft.streaming.IvfIndex]]'s production
     *     store shape (r16): the rk ≤ payload_rk membership slice
-    *     (default 4 — `admitListRk`) with code + quantization residual
+    *     (4 — `admitListRk`) with code + quantization residual
     *     inlined on EVERY membership row, 24 B each — FAISS
     *     `IndexIVFPQ` extended to multi-assignment, so index_rows is
     *     payload_rk × n and the per-VECTOR cost is ~96 B. The r15

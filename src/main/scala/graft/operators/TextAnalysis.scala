@@ -1280,8 +1280,9 @@ object TextAnalysis {
     *    by construction, not by luck).
     *  - the tf/length saturation rationalized: with k1=12/10, b=3/4 and
     *    avglen = A/N, term score = idf·22·A·tf div (10·A·tf + 3·A +
-    *    9·len·N) — numerator ≲ 3e13·tf at sf0.1, BIGINT with room;
-    *    nothing widens it, so past idf·A·tf ≈ 4e17 it overflows.
+    *    9·len·N) ([[bm25Term]]) — numerator and denominator in
+    *    DECIMAL(38,0), so corpus-scale A cannot overflow them; the
+    *    quotient is ≤ 2.2·idf and comes back BIGINT.
     *
     * Shape: per-corpus constants from one distributed census, scoring
     * per document row. The census is df over `explode(array_distinct(t))`
@@ -1319,10 +1320,8 @@ object TextAnalysis {
       .collect()
     val len = size($"t").cast("long")
     val terms = qterms.toSeq.map { q =>
-      val (a, n) = (lit(q.getLong(2)), lit(q.getLong(3)))
       val tf = size(filter($"t", _ === q.getString(0))).cast("long")
-      (tf, call_function("div", lit(q.getLong(1)) * 22 * a * tf,
-        lit(10) * a * tf + lit(3) * a + lit(9) * len * n))
+      (tf, bm25Term(q.getLong(1), q.getLong(2), q.getLong(3), tf, len))
     }
     def total(cs: Seq[Column]): Column = cs.reduceOption(_ + _).getOrElse(lit(0L))
     tk.select($"doc_id",
@@ -1331,6 +1330,20 @@ object TextAnalysis {
       .filter($"n_terms" > 0)
       .orderBy($"score".desc, $"doc_id")
       .limit(20)
+  }
+
+  /** One query term's BM25 score, idf_micro·22·A·tf div (10·A·tf + 3·A +
+    * 9·len·N), for corpus constants (idf_micro, A, N) and BIGINT `tf` and
+    * `len` columns. The per-corpus products enter as DECIMAL(38,0)
+    * literals, so neither side wraps (ANSI off) or fails (ANSI on) once
+    * idf·A·tf passes the BIGINT range; the `div` quotient is BIGINT.
+    */
+  private[graft] def bm25Term(idfMicro: Long, a: Long, n: Long,
+      tf: Column, len: Column): Column = {
+    def dec(x: BigInt): Column =
+      lit(new java.math.BigDecimal(x.bigInteger)).cast("decimal(38,0)")
+    call_function("div", dec(BigInt(idfMicro) * 22 * a) * tf,
+      dec(BigInt(10) * a) * tf + dec(BigInt(3) * a) + dec(BigInt(9) * n) * len)
   }
 
   /** The q131 BM25 pipeline as a reusable CTE chain ending in `tf` and

@@ -121,23 +121,24 @@ object CdcStreams {
     fs.delete(old, true)
   }
 
-  private def bucketCount(spark: SparkSession): Int =
-    spark.conf.getOption("spark.graft.cdc.buckets").map(_.toInt).getOrElse(16)
+  /** A row's bucket in the partitioned store tier: `cust_key mod N`, N =
+    * 16. A batch rewrites every bucket it touches, so N bounds how finely
+    * a merge is targeted; a store's layout is fixed when it is seeded.
+    */
+  private val pkBucket = pmod(col("cust_key"), lit(16L))
 
   /** Seed the PARTITIONED snapshot store: the same rows as
     * [[initSnapshot]], laid out as `pk_bucket=<cust_key mod N>`
     * partitions so per-batch merges can overwrite only the buckets a
     * batch actually touches.
     */
-  def initSnapshotPartitioned(base: DataFrame, snapshotDir: String): Unit = {
-    val n = bucketCount(base.sparkSession)
+  def initSnapshotPartitioned(base: DataFrame, snapshotDir: String): Unit =
     base.select(col("cust_key"), col("balance"),
         lit("kept").as("change"), lit(true).as("base_member"),
         lit(false).as("deleted"),
         lit(Long.MinValue).as("last_us"), lit(Long.MinValue).as("last_eid"))
-      .withColumn("pk_bucket", pmod(col("cust_key"), lit(n.toLong)))
+      .withColumn("pk_bucket", pkBucket)
       .write.mode("overwrite").partitionBy("pk_bucket").parquet(snapshotDir)
-  }
 
   /** The 100 TB store tier the tree-swap scaladoc promises: the
     * snapshot is a `pk_bucket`-partitioned table and each batch merge
@@ -153,9 +154,8 @@ object CdcStreams {
     */
   def applyBatchPartitioned(spark: SparkSession, batch: DataFrame,
       snapshotDir: String): Unit = {
-    val n = bucketCount(spark)
     val latest = latestOfBatch(batch)
-      .withColumn("pk_bucket", pmod(col("cust_key"), lit(n.toLong)))
+      .withColumn("pk_bucket", pkBucket)
       .localCheckpoint() // feeds the bucket probe AND the merge join
     val arrived = latest.select(col("pk_bucket")).distinct()
       .collect().map(_.getLong(0)) // ≤ N bucket ids — a meta read, not data
@@ -164,7 +164,7 @@ object CdcStreams {
       .filter(col("pk_bucket").isin(arrived.toIndexedSeq: _*))
       .drop("pk_bucket")
     val merged = mergeWithSnapshot(snapSlice, latest.drop("pk_bucket"))
-      .withColumn("pk_bucket", pmod(col("cust_key"), lit(n.toLong)))
+      .withColumn("pk_bucket", pkBucket)
     val key = "spark.sql.sources.partitionOverwriteMode"
     val saved = spark.conf.getOption(key)
     spark.conf.set(key, "dynamic")

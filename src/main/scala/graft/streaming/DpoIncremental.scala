@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, DoubleType, IntegerType, LongType, StringType, StructField, StructType}
 import graft.operators.{Corpus, Dedup, TextAnalysis}
+import IndexLifecycle.{CkptScope, readOrEmpty}
 
 /** Incrementally-maintained DPO manifest — q237's funnel → pairs →
   * packing path as partial-merge IVM (r12 verdict item 4, composing the
@@ -93,15 +94,6 @@ object DpoIncremental {
     StructField("rejected_q", DoubleType), StructField("quality_gap", DoubleType),
     StructField("pair_tokens", LongType)))
 
-  private def readOrEmpty(spark: SparkSession, dir: String,
-      schema: StructType): DataFrame = {
-    val p = new org.apache.hadoop.fs.Path(dir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(p)) spark.read.schema(schema).parquet(dir)
-    else spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-  }
-
   /** q179's containment prefix bound (n − ⌊t·n⌋ + 1 distinct hashes in
     * the fixed ascending-h order — one more than the ⌈⌉ pigeonhole needs,
     * conservative either way).
@@ -114,18 +106,20 @@ object DpoIncremental {
     * semantics — q31 near-dup edges (J ≥ 0.7 over banded candidates),
     * q179 subsumption (containment ≥ 0.8), exact-keep, stratified
     * pairing, packing — are maintained incrementally as per the object
-    * doc.
+    * doc. Frees exactly the checkpoints it made once its writes land;
+    * the caller's cached or checkpointed relations are never touched.
     */
   def update(batch: DataFrame, stateDir: String): Unit = {
     val spark = batch.sparkSession
     import spark.implicits._
+    val ck = new CkptScope
+    try {
     val docsStore = readOrEmpty(spark, s"$stateDir/docs", docsSchema)
     // replay gate: already-seen ids drop (store scanned once, batch broadcast)
     val seen = docsStore.select($"doc_id")
       .join(broadcast(batch.select($"doc_id")), Seq("doc_id")).distinct()
-    val fresh = batch.select($"doc_id", $"source", $"text")
-      .join(broadcast(seen), Seq("doc_id"), "left_anti")
-      .localCheckpoint()
+    val fresh = ck(batch.select($"doc_id", $"source", $"text")
+      .join(broadcast(seen), Seq("doc_id"), "left_anti"))
 
     // ---- batch-sized text work: derived per-doc state (q237's exact
     // scoring expressions + the q31/q179 hash state) ----
@@ -136,16 +130,14 @@ object DpoIncremental {
       .withColumn("quality", TextAnalysis.qualityScoreCol($"text", $"toksc"))
       .withColumn("len_bucket", expr("n_tokens div 16"))
       .select($"doc_id", $"source", $"fp", $"n_tokens", $"quality", $"len_bucket")
-    val st = Dedup.incrementalDocState(fresh)
+    val st = ck(Dedup.incrementalDocState(fresh)
       .join(scored, Seq("doc_id"))
       .select($"doc_id", $"source", $"fp", $"n_tokens", $"quality",
-        $"len_bucket", $"harr", $"n", $"bands")
-      .localCheckpoint()
+        $"len_bucket", $"harr", $"n", $"bands"))
 
     // ---- near-dup delta edges: banded candidates involving the batch ----
-    val bx = st.select($"doc_id", explode($"bands").as("b"))
-      .select($"doc_id", $"b.band_id".as("band_id"), $"b.key".as("key"))
-      .localCheckpoint()
+    val bx = ck(st.select($"doc_id", explode($"bands").as("b"))
+      .select($"doc_id", $"b.band_id".as("band_id"), $"b.key".as("key")))
     val sigStore = readOrEmpty(spark, s"$stateDir/sig", sigSchema)
     val candOldNew = sigStore
       .join(broadcast(bx.select($"doc_id".as("b_id"), $"band_id", $"key")),
@@ -155,7 +147,7 @@ object DpoIncremental {
         col("x.band_id") === col("y.band_id") && col("x.key") === col("y.key") &&
           col("x.doc_id") < col("y.doc_id"))
       .select(col("x.doc_id").as("a_id"), col("y.doc_id").as("b_id"))
-    val ndCand = candOldNew.unionByName(candNewNew).distinct().localCheckpoint()
+    val ndCand = ck(candOldNew.unionByName(candNewNew).distinct())
     // verification arrays for candidate partners only (+ the batch's own)
     val partners = ndCand.select($"a_id".as("doc_id"))
       .unionByName(ndCand.select($"b_id".as("doc_id"))).distinct()
@@ -163,22 +155,20 @@ object DpoIncremental {
       .join(broadcast(partners), Seq("doc_id"))
       .select($"doc_id", $"harr", $"n")
       .unionByName(st.select($"doc_id", $"harr", $"n"))
-    val newEdges = ndCand
+    val newEdges = ck(ndCand
       .join(broadcast(arrs.select($"doc_id".as("a_id"), $"harr".as("ha"), $"n".as("na"))), Seq("a_id"))
       .join(broadcast(arrs.select($"doc_id".as("b_id"), $"harr".as("hb"), $"n".as("nb"))), Seq("b_id"))
       .withColumn("i", graft.functions.SetFunctions.intersectCount($"ha", $"hb"))
       .withColumn("jaccard", $"i".cast("double") / ($"na" + $"nb" - $"i"))
       .filter($"jaccard" >= 0.7)
-      .select($"a_id", $"b_id")
-      .localCheckpoint()
+      .select($"a_id", $"b_id"))
 
     // ---- containment delta: prefix-filtered candidates involving the
     // batch, in all three directions ----
-    val stP = st.select($"doc_id".as("a_id"), $"n".as("na"),
-        explode(slice($"harr", lit(1), plen($"n"))).as("ph"))
-      .localCheckpoint()
-    val stPost = st.select(explode($"harr").as("ph"), $"doc_id".as("b_id"),
-      $"n".as("nb")).localCheckpoint()
+    val stP = ck(st.select($"doc_id".as("a_id"), $"n".as("na"),
+        explode(slice($"harr", lit(1), plen($"n"))).as("ph")))
+    val stPost = ck(st.select(explode($"harr").as("ph"), $"doc_id".as("b_id"),
+      $"n".as("nb")))
     val postStore = readOrEmpty(spark, s"$stateDir/post", postSchema)
     val apxStore = readOrEmpty(spark, s"$stateDir/apx", apxSchema)
     // new a ⊂ old b: batch prefixes probe the full-postings store
@@ -195,8 +185,8 @@ object DpoIncremental {
     val cNewNew = stP.join(stPost, Seq("ph"))
       .filter($"a_id" =!= $"b_id" && $"nb" * 5 >= $"na" * 4)
       .select($"a_id", $"b_id")
-    val ctCand = cNewOld.unionByName(cOldNew).unionByName(cNewNew)
-      .distinct().localCheckpoint()
+    val ctCand = ck(cNewOld.unionByName(cOldNew).unionByName(cNewNew)
+      .distinct())
     val ctPartners = ctCand.select($"a_id".as("doc_id"))
       .unionByName(ctCand.select($"b_id".as("doc_id"))).distinct()
     val ctArrs = docsStore
@@ -204,7 +194,7 @@ object DpoIncremental {
       .select($"doc_id", $"harr", $"n")
       .unionByName(st.select($"doc_id", $"harr", $"n"))
     val subsumedStore = readOrEmpty(spark, s"$stateDir/subsumed", idSchema)
-    val newSubsumed = ctCand
+    val newSubsumed = ck(ctCand
       .join(broadcast(ctArrs.select($"doc_id".as("a_id"), $"harr".as("ha"), $"n".as("na"))), Seq("a_id"))
       .join(broadcast(ctArrs.select($"doc_id".as("b_id"), $"harr".as("hb"))), Seq("b_id"))
       .withColumn("i", graft.functions.SetFunctions.intersectCount($"ha", $"hb"))
@@ -212,8 +202,7 @@ object DpoIncremental {
       .select($"a_id".as("doc_id")).distinct()
       .join(broadcast(subsumedStore.select($"doc_id")
         .join(broadcast(ctCand.select($"a_id".as("doc_id")).distinct()), Seq("doc_id"))),
-        Seq("doc_id"), "left_anti") // monotone set: append only what's new
-      .localCheckpoint()
+        Seq("doc_id"), "left_anti")) // monotone set: append only what's new
 
     // ---- append the corpus-fact stores ----
     st.select($"doc_id", $"source", $"fp", $"n_tokens", $"quality",
@@ -235,15 +224,16 @@ object DpoIncremental {
     val ek = docsAll.groupBy($"fp").agg(min($"doc_id").as("doc_id"))
       .select($"doc_id")
     val edges = readOrEmpty(spark, s"$stateDir/ndedges", edgeSchema)
-    val drop = Dedup.dedupClusters(edges)
-      .filter($"doc_id" =!= $"cluster_rep").select($"doc_id")
+    val clusters = Dedup.dedupClusters(edges)
+    val drop = clusters.filter($"doc_id" =!= $"cluster_rep").select($"doc_id")
     val sub = readOrEmpty(spark, s"$stateDir/subsumed", idSchema)
-    val survNew = docsAll
+    val survNew = ck(docsAll
       .join(ek, Seq("doc_id"), "left_semi")
       .join(drop, Seq("doc_id"), "left_anti")
       .join(sub, Seq("doc_id"), "left_anti")
-      .select($"doc_id", $"source", $"len_bucket", $"n_tokens", $"quality")
-      .localCheckpoint()
+      .select($"doc_id", $"source", $"len_bucket", $"n_tokens", $"quality"))
+    // the survivors are materialized: the cluster labels' blocks can go
+    org.apache.spark.sql.graft.CheckpointUtils.free(clusters)
 
     // ---- touched strata: where any doc's survivor status changed ----
     val survOld = readOrEmpty(spark, s"$stateDir/surv", survSchema)
@@ -251,8 +241,7 @@ object DpoIncremental {
       .join(survOld.select($"doc_id"), Seq("doc_id"), "left_anti")
       .unionByName(survOld.select($"doc_id", $"source", $"len_bucket")
         .join(survNew.select($"doc_id"), Seq("doc_id"), "left_anti"))
-    val touched = changed.select($"source", $"len_bucket").distinct()
-      .localCheckpoint()
+    val touched = ck(changed.select($"source", $"len_bucket").distinct())
 
     // ---- partial-merge of the pair relation: recompute touched strata
     // from current survivors, keep untouched rows verbatim ----
@@ -260,11 +249,11 @@ object DpoIncremental {
     val kept = pairsOld.join(touched, Seq("source", "len_bucket"), "left_anti")
     val recomputed = pairsOf(
       survNew.join(broadcast(touched), Seq("source", "len_bucket"), "left_semi"))
-    val merged = kept.unionByName(recomputed).localCheckpoint() // materialize
+    val merged = ck(kept.unionByName(recomputed)) // materialize
     // before overwriting the store it was read from
     merged.write.mode("overwrite").parquet(s"$stateDir/stratpairs")
     survNew.write.mode("overwrite").parquet(s"$stateDir/surv")
-    org.apache.spark.sql.graft.CheckpointUtils.sweepUnpinned(spark.sparkContext)
+    } finally ck.freeAll()
   }
 
   /** q237's stratified pairing, verbatim, over a survivor relation. */

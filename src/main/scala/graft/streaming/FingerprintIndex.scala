@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, BinaryType, IntegerType, LongType, StringType, StructField, StructType}
+import IndexLifecycle.{CkptScope, readOrEmpty}
 
 /** A banded perceptual hasher: derives the 8-band signature relation
   * (doc_id, bands: Array[Int]) from a (doc_id, blob) relation. `name` +

@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions.{broadcast, col, count, countDistinct, isnan, lit, row_number, struct, when}
 import org.apache.spark.sql.types.StructType
+import IndexLifecycle.readOrEmpty
 
 /** The shared store lifecycle of the incrementally-maintained admission
   * indexes — one definition of the plumbing and the admission steps
@@ -67,18 +68,6 @@ import org.apache.spark.sql.types.StructType
   * 100k).
   */
 private[streaming] trait IndexLifecycle {
-
-  /** Schema-pinned parquet read; an absent dir is a typed EMPTY relation
-    * (bootstrap and first-touch paths need no existence special-cases).
-    */
-  protected final def readOrEmpty(spark: SparkSession, dir: String,
-      schema: StructType): DataFrame = {
-    val p = new org.apache.hadoop.fs.Path(dir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(p)) spark.read.schema(schema).parquet(dir)
-    else spark.createDataFrame(
-      spark.sparkContext.emptyRDD[Row], schema)
-  }
 
   /** The raw `meta/` singleton row, with every partial-write state
     * (missing dir, empty dir, truncated file) collapsed to None — the
@@ -264,32 +253,6 @@ private[streaming] trait IndexLifecycle {
     if (storeDirs.exists(d => storeFileCount(spark, d) > maxStoreFiles(spark)))
       rebuild
 
-  /** Per-call checkpoint OWNERSHIP — the r15 lesson. The indexes used to
-    * end rebuild/admitBatch with a blanket
-    * `CheckpointUtils.sweepUnpinned`, which also dropped checkpoints the
-    * CALLER owned: a heal-path rebuild runs before the batch's own
-    * derivations, so a caller-checkpointed incoming batch lost its
-    * blocks and the subsequent probe crashed with
-    * CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND (a truncated-lineage relation
-    * cannot recompute) — reproduced live by IndexOwnershipSpec across
-    * the family. Each call now checkpoints through its own scope and
-    * frees exactly what it created; caller-owned blocks are never
-    * touched, and nothing leaks (rebuild's relations are freed once
-    * their parquet is written, admitBatch's once the appends land).
-    */
-  protected final class CkptScope {
-    private val owned =
-      scala.collection.mutable.ArrayBuffer.empty[org.apache.spark.sql.Dataset[_]]
-    /** localCheckpoint `ds` and register its blocks for [[freeAll]]. */
-    def apply[T](ds: org.apache.spark.sql.Dataset[T]): org.apache.spark.sql.Dataset[T] = {
-      val c = ds.localCheckpoint()
-      owned += c
-      c
-    }
-    def freeAll(): Unit =
-      owned.foreach(org.apache.spark.sql.graft.CheckpointUtils.free(_))
-  }
-
   /** The exact-cosine admission verify shared by the vector indexes
     * ([[AnnIndex]], [[IvfIndex]] — one definition, the r13 lesson):
     * fetch corpus embeddings for candidate partners only (broadcast the
@@ -316,5 +279,50 @@ private[streaming] trait IndexLifecycle {
       .withColumn("cs", graft.functions.VectorFunctions.cosineSim(col("ea"), col("eb")))
       .filter(!isnan(col("cs")) && col("cs") >= maxCosine)
       .select(col("b_id").as("vec_id"))
+  }
+}
+
+/** The store helpers the admission indexes share with [[DpoIncremental]],
+  * which keeps stores of its own but admits nothing.
+  */
+private[streaming] object IndexLifecycle {
+
+  /** Schema-pinned parquet read; an absent dir is a typed EMPTY relation
+    * (bootstrap and first-touch paths need no existence special-cases).
+    */
+  def readOrEmpty(spark: SparkSession, dir: String,
+      schema: StructType): DataFrame = {
+    val p = new org.apache.hadoop.fs.Path(dir)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (fs.exists(p)) spark.read.schema(schema).parquet(dir)
+    else spark.createDataFrame(
+      spark.sparkContext.emptyRDD[Row], schema)
+  }
+
+  /** Per-call checkpoint OWNERSHIP — the r15 lesson. The indexes used to
+    * end rebuild/admitBatch with a blanket
+    * `CheckpointUtils.sweepUnpinned`, which also dropped checkpoints the
+    * CALLER owned: a heal-path rebuild runs before the batch's own
+    * derivations, so a caller-checkpointed incoming batch lost its
+    * blocks and the subsequent probe crashed with
+    * CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND (a truncated-lineage relation
+    * cannot recompute) — reproduced live by IndexOwnershipSpec across
+    * the family. Each call now checkpoints through its own scope and
+    * frees exactly what it created; caller-owned blocks are never
+    * touched, and nothing leaks (rebuild's relations are freed once
+    * their parquet is written, admitBatch's once the appends land).
+    * [[DpoIncremental.update]] frees its checkpoints the same way.
+    */
+  final class CkptScope {
+    private val owned =
+      scala.collection.mutable.ArrayBuffer.empty[org.apache.spark.sql.Dataset[_]]
+    /** localCheckpoint `ds` and register its blocks for [[freeAll]]. */
+    def apply[T](ds: org.apache.spark.sql.Dataset[T]): org.apache.spark.sql.Dataset[T] = {
+      val c = ds.localCheckpoint()
+      owned += c
+      c
+    }
+    def freeAll(): Unit =
+      owned.foreach(org.apache.spark.sql.graft.CheckpointUtils.free(_))
   }
 }

@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, BooleanType, FloatType, IntegerType, LongType, StringType, StructField, StructType}
+import IndexLifecycle.{CkptScope, readOrEmpty}
 
 /** Incrementally-maintained IVF+PQ index — the [[IndexLifecycle]]
   * applied to the coarse-quantizer inverted-list family (q226/q242/
@@ -44,7 +45,7 @@ import org.apache.spark.sql.types.{ArrayType, BooleanType, FloatType, IntegerTyp
   *    list matched — the r15 rk=1-only layout left rk>1-overlap
   *    candidates with NULL payload, which the ADC bands silently
   *    admitted (r16 advisor finding). The duplication is bounded by
-  *    payload_rk (default 4): ~4×24 B/vec buys a one-scan,
+  *    payload_rk (≤ [[admitListRk]] = 4): ~4×24 B/vec buys a one-scan,
   *    no-extra-join probe whose decisions are always payload-backed.
   *  - `piv/`  — (p_id, pe): the frozen pivot set of the current epoch.
   *  - `cb/`   — (m, c_id, fc): the epoch's trained PQ codebook
@@ -65,8 +66,8 @@ import org.apache.spark.sql.types.{ArrayType, BooleanType, FloatType, IntegerTyp
   * certainly clean, and only the thin GRAY band pays the exact-cosine
   * raw-vector fetch — at 100 TB the raw corpus is touched for a sliver
   * of candidates instead of all of them. The admitted set is therefore
-  * BIT-EQUAL to the full exact-verify path (spec-pinned), which remains
-  * available as `spark.graft.ivfIndex.exactVerify=true`.
+  * BIT-EQUAL to exact-verifying every candidate (IvfIndexSpec pins it
+  * against a test-local exact-cosine reference).
   *
   * Per-batch cost = batch + candidates, not a fixed scheduling bill.
   * Each call ([[admitBatch]], [[topK]], [[rebuild]]) holds its epoch
@@ -96,8 +97,8 @@ import org.apache.spark.sql.types.{ArrayType, BooleanType, FloatType, IntegerTyp
   * of truth, stores append after it, pre-probe divergence heal rebuilds
   * ([[IndexLifecycle]] ordering argument) — extended here with the
   * fingerprinted two-phase meta commit, because pivots/codebook are
-  * correctness-bearing state the count heal alone cannot see (the r14
-  * advisor's toggled-`trainedPivots` crash window).
+  * correctness-bearing state the count heal alone cannot see (a `piv/`
+  * or `cb/` rewritten under matching row counts).
   */
 object IvfIndex extends IndexLifecycle {
 
@@ -240,67 +241,60 @@ object IvfIndex extends IndexLifecycle {
         when(col("n.rk") <= payloadRk, col("pq.codes")).as("code"),
         when(col("n.rk") <= payloadRk, col("pq.resid")).as("resid"))
 
+  /** `pivot_src` is always "policy" (q226's lowest-vec_id pivots); the
+    * column stays in the meta schema, and stores stamped otherwise by
+    * earlier builds still load — their pivots are whatever `piv/` holds.
+    */
   private def writeMeta(spark: SparkSession, indexDir: String, n: Long,
-      nlist: Int, nprobe: Int, payloadRk: Int, pivotSrc: String,
+      nlist: Int, nprobe: Int, payloadRk: Int,
       pivotFp: Long, cbFp: Long, committed: Boolean): Unit = {
     import spark.implicits._
     writeMetaDf(indexDir, Seq((n, nlist, nprobe, payloadRk,
         graft.operators.Similarity.ivfLogicVersion,
-        pivotSrc, pivotFp, cbFp, committed))
+        "policy", pivotFp, cbFp, committed))
       .toDF("n_vecs", "nlist", "nprobe", "payload_rk", "logic_version",
         "pivot_src", "pivot_fp", "cb_fp", "committed"))
   }
 
-  /** Pivot source for rebuilds: `spark.graft.ivfIndex.trainedPivots`
-    * (default false = q226's lowest-vec_id pivots). When true, each
-    * rebuild TRAINS the epoch's pivots (q245's frozen-integer Lloyd, 64
-    * points per centroid, 8 iterations) and freezes the centroids as
-    * the `piv/` payload. Assignment stays the cosine [[ivfNearOf]]
-    * kernel either way — validated by the r14 ANN scale run's spherical
-    * arm (NOTES_r14 §9): cosine-ranked assignment against trained
-    * centroids matches the gated q245 integer-L2 form's recall at every
-    * rung of 64× growth (73/85/97/105 vs 73/82/94/106 of 160), because
-    * cosine is scale-invariant in the pivot. The flag only steers the
-    * NEXT rebuild; probes always rank against the FROZEN stored payload,
-    * so epochs stay internally consistent whatever the flag does later —
-    * and the meta fingerprint makes a toggle-plus-crash window detectable
-    * (see [[rebuild]]).
+  /** How many lists an ADMISSION probe scans: the batch vector's nearest
+    * one. The epoch nprobe (⌈nlist/8⌉, the q236 policy) is a RECALL
+    * budget — right for top-k queries, ruinous for admission: at 1/8 of
+    * the lists every admitted vector compares against ~12.5% of the
+    * corpus, which is O(n) per vector. A near-dup at the 0.92 gate all
+    * but shares its twin's NEAREST list (an exact copy does so by
+    * construction), so admission probes 1 list — corpus/nlist ≈ √n
+    * candidates per vector under the √n policy, SUBLINEAR, the same
+    * trade LSH banding makes (false negatives only from pairs straddling
+    * a Voronoi boundary, which the store-side membership depth
+    * [[admitListRk]] catches). Measured on the r15 evidence ladder: the
+    * steady-state per-batch admit wall at probe depth 1 tracks the
+    * batch, not the corpus.
     */
-  private def trainedPivots(spark: SparkSession): Boolean =
-    spark.conf.getOption("spark.graft.ivfIndex.trainedPivots")
-      .exists(_.toBoolean)
+  private val admitNprobe = 1
 
-  /** `spark.graft.ivfIndex.exactVerify=true` restores the full
-    * exact-cosine verify over every candidate (the pre-ADC fallback).
-    * Default false: ADC-primary with gray-band exact — the SAME
-    * admitted set (spec-pinned), touching raw vectors for the gray
-    * band only.
+  /** Store-side list-membership depth R for ADMISSION candidate
+    * generation: a pair is a candidate iff the batch vector's nearest
+    * list ([[admitNprobe]]) is among the corpus vector's rk ≤ R stored
+    * assignments. R = 4 is the measured ZERO-MISS depth: the r16 clean
+    * grid (NOTES r16 §3, four full 128k-corpus ladder runs) caught
+    * 1340/1340 planted 0.989-cosine isotropic clones at R = 4, against
+    * 1319/1340 at R = 1 (misses 0.6–3.4% per wave — the Voronoi-boundary
+    * argmax flips, rare but real), at ~2.1× per-batch admission cost and
+    * 4× payload bytes. The R-axis beats the probe-depth axis at equal
+    * candidate volume ((1,4) caught everything the (2,1) and (1,2) cells
+    * each missed ~5 of), because membership depth is paid in
+    * storage-local bytes while probe depth is paid on every batch. The
+    * gated q249 calibration carries the fixture-geometry grid.
+    *
+    * At WRITE time (rebuild) R decides how deep the payload duplicates
+    * — capped at nlist, recorded in meta as `payload_rk`. At READ time
+    * ([[candidatePairsCoded]]) the depth is min(R, the STORE's recorded
+    * payload_rk): membership beyond the payload depth would yield
+    * payload-less candidates the ADC bands cannot decide, so a store
+    * written shallower by an earlier build probes at its own depth until
+    * its next rebuild.
     */
-  private def exactVerify(spark: SparkSession): Boolean =
-    spark.conf.getOption("spark.graft.ivfIndex.exactVerify")
-      .exists(_.toBoolean)
-
-  /** How many lists an ADMISSION probe scans
-    * (`spark.graft.ivfIndex.admitNprobe`, default 1, capped at the
-    * epoch's nprobe). The epoch nprobe (⌈nlist/8⌉, the q236 policy) is
-    * a RECALL budget — right for top-k queries, ruinous for admission:
-    * at 1/8 of the lists every admitted vector compares against ~12.5%
-    * of the corpus, which is O(n) per vector. A near-dup at the 0.92
-    * gate all but shares its twin's NEAREST list (an exact copy does so
-    * by construction), so admission probes 1 list by default —
-    * corpus/nlist ≈ √n candidates per vector under the √n policy,
-    * SUBLINEAR, the same trade LSH banding makes (false negatives only
-    * from pairs straddling a Voronoi boundary; raise the knob or set
-    * exactVerify for stricter gates). Measured on the r15 evidence
-    * ladder: the steady-state per-batch admit wall at nprobe=1 tracks
-    * the batch, not the corpus.
-    */
-  private def admitNprobe(spark: SparkSession, epochNprobe: Int): Int =
-    // floor the KNOB at 1 (a non-positive setting must not silently
-    // disable admission dedup), then cap at the epoch's nprobe
-    math.min(math.max(1, epochNprobe),
-      math.max(1, spark.conf.getOption("spark.graft.ivfIndex.admitNprobe")
-        .map(_.toInt).getOrElse(1)))
+  private[streaming] val admitListRk = 4
 
   /** Candidate (corpus, batch) pairs WITH the corpus side's inlined ADC
     * payload, from probing the persisted membership lists with a
@@ -308,56 +302,21 @@ object IvfIndex extends IndexLifecycle {
     * frozen pivots, then the rk ≤ R membership slice of the list store
     * is scanned once against a broadcast of the batch's probe rows (the
     * q226 candidate shape at micro-batch grain). A (corpus, batch) pair
-    * can co-occur in several lists (R-way membership × nprobe probes),
-    * so pairs dedup through the group-by — the payload is identical per
+    * can co-occur in several lists (R-way membership × probe rows), so
+    * pairs dedup through the group-by — the payload is identical per
     * a_id (every membership row self-carries it), so any surviving row
     * is the right one.
     */
-  /** Store-side list-membership depth for ADMISSION candidate
-    * generation (`spark.graft.ivfIndex.admitListRk`): a pair is a
-    * candidate iff the batch's [[admitNprobe]]-probe set intersects the
-    * corpus vector's rk ≤ R stored assignments. The r15 claim that R=1
-    * catches only ~1/640 planted clones was a GENERATOR ARTIFACT (the
-    * in-wave clone-source bug shrank the real cross-batch sample to ~1
-    * pair per wave); the r16 clean grid (NOTES r16 §3, four full
-    * 128k-corpus ladder runs) measures R=1 at k=1 catching
-    * 1319/1340 planted 0.989-cosine isotropic clones (misses 0.6–3.4%
-    * per wave — the Voronoi-boundary argmax flips, rare but real),
-    * while R=4 is the measured ZERO-MISS depth: 1340/1340, at ~2.1×
-    * per-batch admission cost and 4× payload bytes. The R-axis beats
-    * the k-axis at equal candidate volume ((1,4) caught everything the
-    * (2,1) and (1,2) cells each missed ~5 of), because membership
-    * depth is paid in storage-local bytes while probe depth is paid on
-    * every batch. Default 4 = the zero-miss point; set 1 to restore
-    * the lean 24 B/vec profile where ~98.5% admission recall suffices.
-    * The gated q250 planted-clone calibration carries the
-    * fixture-geometry grid (clustered corpora sit near 100% already at
-    * R=1); the fixture spec pins ADC==exact exactly on the
-    * rk>1-overlap path.
-    *
-    * At WRITE time (rebuild / incremental append) the conf decides how
-    * deep the payload duplicates — capped at nlist, recorded in meta as
-    * `payload_rk`. At READ time ([[candidatePairsCoded]]) the effective
-    * depth is min(conf, the STORE's recorded payload_rk): membership
-    * beyond the payload depth would yield payload-less candidates the
-    * ADC bands cannot decide, so a raised conf takes effect at the next
-    * rebuild, never mid-epoch.
-    */
-  private[streaming] def admitListRk(spark: SparkSession): Int =
-    math.max(1, spark.conf.getOption("spark.graft.ivfIndex.admitListRk")
-      .map(_.toInt).getOrElse(4))
-
-  /** The store's recorded payload duplication depth (1 for pre-r16 or
-    * missing meta — the rk=1-only layout).
-    */
-  private[streaming] def storedPayloadRk(spark: SparkSession,
-      indexDir: String): Int =
-    metaRow(spark, indexDir).map(_.payloadRk).getOrElse(1)
-
   def candidatePairsCoded(spark: SparkSession, indexDir: String,
       batchNear: DataFrame): DataFrame =
     candidatePairsCoded(spark, indexDir, batchNear,
       storedPayloadRk(spark, indexDir))
+
+  /** The store's recorded payload duplication depth (1 for pre-r16 or
+    * missing meta — the rk=1-only layout).
+    */
+  private def storedPayloadRk(spark: SparkSession, indexDir: String): Int =
+    metaRow(spark, indexDir).map(_.payloadRk).getOrElse(1)
 
   /** [[candidatePairsCoded]] at the store's payload depth as the caller's
     * epoch already read it from meta.
@@ -373,7 +332,7 @@ object IvfIndex extends IndexLifecycle {
     // capped at the STORE's payload depth: rows beyond it would join
     // payload-less and the ADC bands could not decide them (the r15
     // null-payload admission hole).
-    val rEff = math.min(admitListRk(spark), payloadRk)
+    val rEff = math.min(admitListRk, payloadRk)
     val members = store.filter($"rk" <= rEff)
       .select($"vec_id".as("a_id"), $"p_id", $"code", $"resid")
     members.join(broadcast(batchNear.select($"vec_id".as("b_id"), $"p_id")),
@@ -390,6 +349,31 @@ object IvfIndex extends IndexLifecycle {
       batchNear: DataFrame): DataFrame =
     candidatePairsCoded(spark, indexDir, batchNear)
       .select(col("a_id"), col("b_id"))
+
+  /** Band predicates over the ADC sandwich (a = √adc, r = √resid) —
+    * rejection bound as a frozen-unit DISTANCE (not squared): the
+    * sandwich compares √adc ± √resid against it. A NULL sandwich (no
+    * payload: a zero-norm corpus vector the PQ model excludes, or a
+    * store violating the payload_rk invariant) fails SAFE into the gray
+    * band's exact verify — a certain decision is only ever made on
+    * payload-backed arithmetic (r16 advisor: the r15 layout silently
+    * ADMITTED null-payload pairs because all three band predicates
+    * evaluate null→false).
+    */
+  private def certainPred(maxCosine: Double): org.apache.spark.sql.Column = {
+    val sim = graft.operators.Similarity
+    val boundF = sim.adcBoundFrozen(maxCosine)
+    col("a").isNotNull && col("r").isNotNull &&
+      col("a") + col("r") <= lit(boundF - sim.adcEpsFrozen)
+  }
+
+  private def grayPred(maxCosine: Double): org.apache.spark.sql.Column = {
+    val sim = graft.operators.Similarity
+    val boundF = sim.adcBoundFrozen(maxCosine)
+    col("a").isNull || col("r").isNull ||
+      (col("a") + col("r") > lit(boundF - sim.adcEpsFrozen) &&
+        abs(col("a") - col("r")) <= lit(boundF + sim.adcEpsFrozen))
+  }
 
   /** Batch ids with an indexed neighbor at cosine ≥ maxCosine, decided
     * ADC-FIRST: score every candidate from its inlined (code, resid)
@@ -411,14 +395,9 @@ object IvfIndex extends IndexLifecycle {
     * cosineSim, erring only toward a wider gray band — never toward a
     * wrong certain decision.
     */
-  /** The ADC sandwich of a coded candidate relation: each pair scored
-    * as (a = √adc, r = √resid) against the batch's LUTs — the shared
-    * kernel of [[adcRejectedIds]] and the [[admitBandCounts]]
-    * diagnostic (one definition, so a band re-tune cannot desync the
-    * evidence ladder's census from production).
-    */
-  private def adcScoredOf(spark: SparkSession, batch: DataFrame,
-      candCoded: DataFrame, kEff: Int): DataFrame = {
+  private[streaming] def adcRejectedIds(spark: SparkSession,
+      corpusDir: String, batch: DataFrame, candCoded: DataFrame,
+      kEff: Int, maxCosine: Double, ck: CkptScope): DataFrame = {
     import spark.implicits._
     // `batch` carries its per-row LUTs ([[withKernels]]); kEff is the
     // codebook's EFFECTIVE per-subspace size: an epoch trained on fewer
@@ -427,43 +406,11 @@ object IvfIndex extends IndexLifecycle {
     // store → no LUTs → no ADC rejections, matching the empty candidate
     // set)
     val luts = batch.filter($"lut".isNotNull).select($"vec_id".as("b_id"), $"lut")
-    candCoded
+    val scored = candCoded
       .join(broadcast(luts), Seq("b_id"))
       .withColumn("a", sqrt(graft.functions.VectorFunctions.adcLookupSum(
         $"code", $"lut", kEff).cast("double")))
       .withColumn("r", sqrt($"resid".cast("double")))
-  }
-
-  /** Band predicates over an [[adcScoredOf]] relation — rejection bound
-    * as a frozen-unit DISTANCE (not squared): the sandwich compares
-    * √adc ± √resid against it. A NULL sandwich (no payload: a zero-norm
-    * corpus vector the PQ model excludes, or a store violating the
-    * payload_rk invariant) fails SAFE into the gray band's exact
-    * verify — a certain decision is only ever made on payload-backed
-    * arithmetic (r16 advisor: the r15 layout silently ADMITTED
-    * null-payload pairs because all three band predicates evaluate
-    * null→false).
-    */
-  private def certainPred(maxCosine: Double): org.apache.spark.sql.Column = {
-    val sim = graft.operators.Similarity
-    val boundF = sim.adcBoundFrozen(maxCosine)
-    col("a").isNotNull && col("r").isNotNull &&
-      col("a") + col("r") <= lit(boundF - sim.adcEpsFrozen)
-  }
-
-  private def grayPred(maxCosine: Double): org.apache.spark.sql.Column = {
-    val sim = graft.operators.Similarity
-    val boundF = sim.adcBoundFrozen(maxCosine)
-    col("a").isNull || col("r").isNull ||
-      (col("a") + col("r") > lit(boundF - sim.adcEpsFrozen) &&
-        abs(col("a") - col("r")) <= lit(boundF + sim.adcEpsFrozen))
-  }
-
-  private[streaming] def adcRejectedIds(spark: SparkSession,
-      corpusDir: String, batch: DataFrame, candCoded: DataFrame,
-      kEff: Int, maxCosine: Double, ck: CkptScope): DataFrame = {
-    import spark.implicits._
-    val scored = adcScoredOf(spark, batch, candCoded, kEff)
     // ONE pass over the candidate join materializes BOTH decided bands
     // (certain-dup ∪ gray), dropping the certain-clean bulk in the same
     // scan — the r16 first cut filtered `scored` twice (the gray
@@ -471,7 +418,7 @@ object IvfIndex extends IndexLifecycle {
     // candidate join per batch; measured on the evidence ladder this
     // one-pass form cuts steady-state admission from 14.5–17.5 s to
     // 8.6–10.0 s per 2k batch at a 130k corpus (NOTES r16 §3) — the
-    // rk ≤ 4 zero-miss default now costs ~15% over the r15 rk=1
+    // rk ≤ 4 zero-miss depth now costs ~15% over the r15 rk=1
     // baseline instead of ~2.1×. The materialized relation
     // stays SMALL by construction: threshold-adjacent pairs, actual dup
     // pairs, and the fail-safe null sandwiches only.
@@ -487,33 +434,6 @@ object IvfIndex extends IndexLifecycle {
     certain.union(grayRejected)
   }
 
-  /** Diagnostic band census of one batch's admission-shaped ADC
-    * sandwich against the CURRENT index state: (certain_dup, gray,
-    * certain_clean) candidate-pair counts under the production
-    * predicates — the per-wave gray-fraction line the evidence ladder
-    * prints, so codebook staleness across epochs shows up as a
-    * WIDENING gray band (more raw-vector fetches) rather than silent
-    * cost growth. Read-only: probes exactly what [[admitBatch]] would,
-    * writes nothing.
-    */
-  private[graft] def admitBandCounts(spark: SparkSession, indexDir: String,
-      batch: DataFrame, maxCosine: Double = 0.92): (Long, Long, Long) = {
-    val epoch = loadEpoch(spark, indexDir)
-    val b = withKernels(batch, epoch.kernels,
-      admitNprobe(spark, epoch.meta.map(_.nprobe).getOrElse(1)))
-    val candCoded = candidatePairsCoded(spark, indexDir, nearRows(b),
-      epoch.meta.map(_.payloadRk).getOrElse(1))
-    val row = adcScoredOf(spark, b, candCoded, epoch.kernels.kEff)
-      .agg(sum(when(certainPred(maxCosine), 1L).otherwise(0L)),
-        sum(when(!certainPred(maxCosine) && grayPred(maxCosine), 1L)
-          .otherwise(0L)),
-        sum(when(!certainPred(maxCosine) && !grayPred(maxCosine), 1L)
-          .otherwise(0L)))
-      .head()
-    def g(i: Int): Long = if (row.isNullAt(i)) 0L else row.getLong(i)
-    (g(0), g(1), g(2))
-  }
-
   /** Plan view for the cost-shape pin: the full per-batch probe (assign
     * against frozen pivots → coded candidates → ADC sandwich →
     * gray-band cosine verify), no writes. Since the r16 one-pass band
@@ -527,8 +447,7 @@ object IvfIndex extends IndexLifecycle {
   private[graft] def batchProbePlan(spark: SparkSession, indexDir: String,
       corpusDir: String, batch: DataFrame, maxCosine: Double): DataFrame = {
     val epoch = loadEpoch(spark, indexDir)
-    val b = withKernels(batch, epoch.kernels,
-      admitNprobe(spark, epoch.meta.map(_.nprobe).getOrElse(1)))
+    val b = withKernels(batch, epoch.kernels, admitNprobe)
     // the scope is deliberately NOT freed: the returned plan references
     // the gray checkpoint and may execute later (diagnostic API — one
     // tiny gray block per call)
@@ -548,10 +467,9 @@ object IvfIndex extends IndexLifecycle {
     * shuffles corpus-sized relations.)
     *
     * '''Two-phase fingerprinted meta commit''' (r14 advisor: a crash
-    * between the piv/ overwrite and the near/ overwrite during a
-    * pure-compaction rebuild with `trainedPivots` toggled between
-    * sessions left trained pivots over old-pivot assignments with
-    * MATCHING row counts — invisible to the count heal). Write order:
+    * between the piv/ overwrite and the near/ overwrite of a rebuild
+    * can leave new pivots over old-pivot assignments with MATCHING row
+    * counts — invisible to the count heal). Write order:
     *
     *   1. piv/ and cb/ (the epoch state),
     *   2. meta with their content fingerprints and `committed = false`,
@@ -581,23 +499,20 @@ object IvfIndex extends IndexLifecycle {
     val n = rows.getOrElse(corpus.count())
     val nlist = sim.ivfPolicyNlist(n)
     val nprobe = sim.ivfPolicyNprobe(nlist)
-    // admission membership depth for THIS epoch (frozen into meta): the
-    // conf capped at nlist (a vector has only nlist distinct lists);
-    // the stored slice deepens to cover it when it exceeds nprobe
-    val payloadRk = math.min(admitListRk(spark), math.max(1, nlist))
+    // admission membership depth for THIS epoch (frozen into meta):
+    // [[admitListRk]] capped at nlist (a vector has only nlist distinct
+    // lists); the stored slice deepens to cover it when it exceeds nprobe
+    val payloadRk = math.min(admitListRk, math.max(1, nlist))
     val storeRk = math.max(nprobe, payloadRk)
-    val pivotSrc = if (trainedPivots(spark)) "trained" else "policy"
     // the epoch state, collected once with its fingerprints: the
     // collected rows are what gets written, what the fingerprints hash
     // and what the kernels assign and code against, so the values cannot
     // move between the two meta writes
-    val (piv, fpPiv) = collectHashed(
-      if (pivotSrc == "trained") sim.trainedCoarsePivots(corpus, nlist)
-      else sim.ivfPivotsOf(corpus, nlist), pivCols)
+    val (piv, fpPiv) = collectHashed(sim.ivfPivotsOf(corpus, nlist), pivCols)
     val (cb, fpCb) = collectHashed(sim.trainedPqCodebookOf(corpus), cbCols)
     writeStore(spark, piv, pivSchema, s"$indexDir/piv")
     writeStore(spark, cb, cbSchema, s"$indexDir/cb")
-    writeMeta(spark, indexDir, n, nlist, nprobe, payloadRk, pivotSrc,
+    writeMeta(spark, indexDir, n, nlist, nprobe, payloadRk,
       fpPiv, fpCb, committed = false)
     val kernels = IvfKernels(piv, cb)
     // corpus-sized but map-only: each vector is assigned and coded in
@@ -606,7 +521,7 @@ object IvfIndex extends IndexLifecycle {
         .withColumn("pq", kernels.code($"embedding")), payloadRk)
       .coalesce(compactFiles(spark, n)).write.mode("overwrite")
       .parquet(s"$indexDir/near")
-    writeMeta(spark, indexDir, n, nlist, nprobe, payloadRk, pivotSrc,
+    writeMeta(spark, indexDir, n, nlist, nprobe, payloadRk,
       fpPiv, fpCb, committed = true)
     val epoch = Epoch(Some(Meta(n, nlist, nprobe, payloadRk, sim.ivfLogicVersion,
       fpPiv, fpCb, committed = true)), kernels, fpPiv, fpCb)
@@ -656,8 +571,7 @@ object IvfIndex extends IndexLifecycle {
           val m0 = Meta(0L, nlist0, sim.ivfPolicyNprobe(nlist0), 1,
             sim.ivfLogicVersion, 0L, 0L, committed = true)
           writeMeta(spark, indexDir, m0.n, m0.nlist, m0.nprobe, m0.payloadRk,
-            if (trainedPivots(spark)) "trained" else "policy", 0L, 0L,
-            committed = true)
+            0L, 0L, committed = true)
           val e = loaded.copy(meta = Some(m0))
           epochs.remember(spark, indexDir, e)
           e
@@ -669,7 +583,7 @@ object IvfIndex extends IndexLifecycle {
     val meta = epoch.meta.get
     val lastN = meta.n
     val nprobe = meta.nprobe
-    // the EPOCH's recorded depths, not the live conf: incremental
+    // the EPOCH's recorded depths, not [[admitListRk]]: incremental
     // appends must write the exact slice the rebuild wrote, or the
     // store==batch-path pin (and the heal's count invariant) drift
     val payloadRkEpoch = meta.payloadRk
@@ -684,7 +598,7 @@ object IvfIndex extends IndexLifecycle {
         .select($"vec_id", $"embedding", $"label"),
       epoch.kernels, storeRkEpoch))
     // DELIBERATELY NOT checkpointed: the candidate relation is
-    // batch × corpus × (admitNprobe/nlist) pairs — at a 32k batch
+    // batch × corpus × (R/nlist) pairs — at a 32k batch
     // against a 64k corpus with the epoch's recall nprobe that was
     // ~270M wide rows (inlined code arrays), and materializing it OOMed
     // a single JVM (measured: the r15 evidence ladder's wave-5 heap
@@ -692,17 +606,13 @@ object IvfIndex extends IndexLifecycle {
     // (the certain-reject pass and the gray-band pass) each stream the
     // rk=1 list scan + broadcast joins instead: scan-heavy,
     // memory-light, fully distributed. The probe slice is the
-    // [[admitNprobe]] prefix of the epoch assignment (default: the
-    // nearest list only — √n candidates per vector under the policy);
-    // the store append below keeps the FULL epoch slice.
-    val probeNear = nearRows(fresh).filter($"rk" <= admitNprobe(spark, nprobe))
+    // [[admitNprobe]] prefix of the epoch assignment (the nearest list
+    // only — √n candidates per vector under the policy); the store
+    // append below keeps the FULL epoch slice.
+    val probeNear = nearRows(fresh).filter($"rk" <= admitNprobe)
     val candCoded = candidatePairsCoded(spark, indexDir, probeNear, payloadRkEpoch)
-    val rejected =
-      if (exactVerify(spark))
-        cosineRejectedIds(spark, corpusDir, vecSchema, fresh,
-          candCoded.select($"a_id", $"b_id"), maxCosine)
-      else adcRejectedIds(spark, corpusDir, fresh, candCoded,
-        epoch.kernels.kEff, maxCosine, ck)
+    val rejected = adcRejectedIds(spark, corpusDir, fresh, candCoded,
+      epoch.kernels.kEff, maxCosine, ck)
     val admitted = ck(fresh.drop("lut")
       .join(broadcast(rejected), Seq("vec_id"), "left_anti"))
     val nAdmitted = admitted.count()

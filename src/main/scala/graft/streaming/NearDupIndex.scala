@@ -4,6 +4,7 @@ import graft.operators.OpUtils.SpreadOps
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, DoubleType, LongType, StructField, StructType}
+import IndexLifecycle.{CkptScope, readOrEmpty}
 
 /** Incrementally-maintained near-dup admission index — the scale form of
   * [[CorpusStreams.admitNearDupBatch]].
@@ -338,7 +339,7 @@ object NearDupIndex extends IndexLifecycle {
     val total = indexed + nAdmitted
     val batchRows = batchIdx.count()
     if (total >= 2 * math.max(1L, lastN) ||
-        nCand > stormFactor(spark) * math.max(1L, batchRows))
+        nCand > stormFactor * math.max(1L, batchRows))
       rebuild(spark, corpusDir, indexDir, minJaccard)
     else compactIfOverCap(spark, Seq(s"$indexDir/px")) {
       rebuild(spark, corpusDir, indexDir, minJaccard)
@@ -347,14 +348,11 @@ object NearDupIndex extends IndexLifecycle {
   }
 
   /** Candidates-per-batch-row ratio above which the frozen snapshot is
-    * considered drift-poisoned and refreshed
-    * (`spark.graft.nearDupIndex.stormCandidateFactor`, default 32 — the
-    * measured healthy drift ceiling is ~1.5 candidates/row; a
-    * boilerplate storm measures in the hundreds).
+    * considered drift-poisoned and refreshed: 32, far from both sides —
+    * the measured healthy drift ceiling is ~1.5 candidates/row, a
+    * boilerplate storm measures in the hundreds.
     */
-  private def stormFactor(spark: SparkSession): Long =
-    spark.conf.getOption("spark.graft.nearDupIndex.stormCandidateFactor")
-      .map(_.toLong).getOrElse(32L)
+  private val stormFactor = 32L
 
   /** The indexed admission policy as a continuous query — drop-in
     * sibling of [[CorpusStreams.nearDupIntake]] with per-batch cost

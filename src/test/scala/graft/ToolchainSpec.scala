@@ -125,6 +125,23 @@ class ToolchainSpec extends AnyFunSuite with SparkSpec {
       "graft.tools.Explain", "graft.tools.PlanLedger"))
   }
 
+  test("src/main reads exactly these spark.graft.* keys") {
+    // every conf key doubles the configurations to test: an index derives
+    // its effort from its own state, not from a knob no workload sets
+    import java.nio.file.{Files, Paths}
+    import scala.jdk.CollectionConverters._
+    val root = Paths.get("src/main/scala")
+    val keys = Files.walk(root).iterator().asScala
+      .filter(_.toString.endsWith(".scala"))
+      .flatMap(f => "\"spark\\.graft\\.[A-Za-z.]*".r.findAllIn(Files.readString(f)))
+      .map(_.stripPrefix("\"")).toSet
+    val pinned = Set("spark.graft.artifactDir", "spark.graft.artifactTmpGraceMs",
+      "spark.graft.index.maxStoreFiles", "spark.graft.index.rowsPerAppendFile",
+      "spark.graft.triangles.broadcastVertices")
+    assert(keys == pinned, s"read but not pinned: ${(keys -- pinned).toSeq.sorted}, " +
+      s"pinned but not read: ${(pinned -- keys).toSeq.sorted}")
+  }
+
   test("src/main ranks top-k only through TopKByScore.ranked") {
     // every ANN search shares one top-k tail: no other engine file builds
     // the aggregator or reads its (cs, b_id) buffer layout

@@ -144,27 +144,60 @@ class GraphsSpec extends AnyFunSuite with SparkSpec {
         $"x.s" === $"y.s" &&
           ($"x.dt" < $"y.dt" || ($"x.dt" === $"y.dt" && $"x.t" < $"y.t"))).count()
     assert(wedges <= 2 * n, s"wedge relation must stay linear in E, got $wedges")
-    // and the counts are still exactly right: each ring edge closes one
-    // triangle with the hub; interior leaves touch 2, ends 1, hub all
-    val tri = Graphs.triangleCounts(edges).collect()
-      .map(r => r.getAs[Long]("part") -> r.getAs[Long]("n_triangles")).toMap
-    assert(tri(0L) == n - 1, "hub participates in every hub-ring triangle")
-    assert(tri(1L) == 1 && tri(n) == 1 && tri(2L) == 2)
-    assert(tri.values.sum == 3 * (n - 1))
+    // and the per-edge counts are still exactly right: each ring edge
+    // (i, i+1) has the hub as its one common neighbour; each star edge
+    // (0, i) has i's ring neighbours, 2 of them, 1 at the ring's ends
+    val got = Graphs.edgeTriangleCounts(edges).collect()
+      .map(r => (r.getAs[Long]("u"), r.getAs[Long]("v")) -> r.getAs[Long]("n_common")).toMap
+    val want = ring.map(_ -> 1L).toMap ++
+      star.map { case (h, i) => (h, i) -> (if (i == 1L || i == n) 1L else 2L) }
+    assert(got == want, s"only-got ${(got.toSet -- want.toSet).take(5)}, " +
+      s"only-want ${(want.toSet -- got.toSet).take(5)}")
     oriented.unpersist()
   }
 
   test("shuffle fallback (vertex dim past broadcast budget) counts identically") {
+    // the enumeration itself, not a memo: the conf is read per call
     val key = "spark.graft.triangles.broadcastVertices"
-    val broadcastCounts = Graphs.q125TriangleCount(spark, sfDir).collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toMap
+    val edges = Graphs.coPurchaseEdges(spark, sfDir)
+    def counts(df: org.apache.spark.sql.DataFrame): Map[(Long, Long), Long] =
+      df.collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2)).toMap
+    /** Broadcast joins whose build side carries an adjacency array, in
+      * the plan as executed.
+      */
+    def adjacencyBroadcasts(df: org.apache.spark.sql.DataFrame): Seq[String] =
+      AdaptivePlans.collect(df.queryExecution.executedPlan) {
+        case j: org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
+            if (j.buildSide match {
+              case org.apache.spark.sql.catalyst.optimizer.BuildLeft => j.left
+              case _ => j.right
+            }).output.exists(a => a.name == "ns" || a.name == "nt") => j.simpleString(3)
+      }
+    val broadcastPath = Graphs.edgeTriangleCounts(edges)
+    val broadcastCounts = counts(broadcastPath)
+    assert(adjacencyBroadcasts(broadcastPath).size == 2)
+    // past the budget the adjacency lists are far beyond Spark's own
+    // size-based broadcast threshold too; at this fixture they are tiny,
+    // so the threshold is switched off to reach the shuffle joins
+    val auto = Seq("spark.sql.autoBroadcastJoinThreshold",
+      "spark.sql.adaptive.autoBroadcastJoinThreshold")
+    val saved = auto.map(k => k -> spark.conf.getOption(k))
     spark.conf.set(key, "1")
+    auto.foreach(spark.conf.set(_, "-1"))
     try {
-      val shuffleCounts = Graphs.q125TriangleCount(spark, sfDir).collect()
-        .map(r => (r.getLong(0), r.getLong(1))).toMap
-      assert(shuffleCounts == broadcastCounts,
+      val shufflePath = Graphs.edgeTriangleCounts(edges)
+      val shuffleCounts = counts(shufflePath)
+      val plan = adjacencyBroadcasts(shufflePath)
+      assert(plan.isEmpty, s"the adjacency side still broadcasts at $key=1: $plan")
+      assert(broadcastCounts.nonEmpty && shuffleCounts == broadcastCounts,
         "the scale path (shuffle adjacency join) must agree with the broadcast path")
-    } finally spark.conf.unset(key)
+    } finally {
+      spark.conf.unset(key)
+      saved.foreach {
+        case (k, Some(v)) => spark.conf.set(k, v)
+        case (k, None) => spark.conf.unset(k)
+      }
+    }
   }
 
   test("q125 plans with equi joins only — no theta/nested-loop wedge join") {
@@ -276,3 +309,7 @@ class GraphsSpec extends AnyFunSuite with SparkSpec {
       "pair generation must stay an equi join on the order key")
   }
 }
+
+/** Walks an adaptive plan's current physical plan and its query stages. */
+private object AdaptivePlans
+  extends org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper

@@ -554,6 +554,31 @@ class TextAnalysisSpec extends AnyFunSuite with SparkSpec {
     assert(got("no token")._1.isEmpty && got("no token")._2.isEmpty)
   }
 
+  test("q131 term score equals BigInt arithmetic at corpus scale, ANSI on and off") {
+    // A = 1e12 tokens: idf·22·A·tf passes the BIGINT range at tf = 1
+    val (a, n) = (1000000000000L, 2000000000L)
+    val idfs = Seq(1L, 693147L, 21416413L)
+    val cases = for (idf <- idfs; tf <- Seq(0L, 1L, 7L, 100000L);
+      len <- Seq(1L, 350L, 4000000L)) yield (idf, tf, len)
+    def want(idf: Long, tf: Long, len: Long): Long =
+      ((BigInt(idf) * 22 * a * tf) / (BigInt(10) * a * tf + BigInt(3) * a +
+        BigInt(9) * len * n)).toLong
+    val noAnsi = spark.newSession()
+    noAnsi.conf.set("spark.sql.ansi.enabled", "false")
+    for (s <- Seq(spark, noAnsi)) {
+      import s.implicits._
+      val df = cases.toDF("idf", "tf", "len")
+      val scores = idfs.map(idf =>
+        when($"idf" === idf, TextAnalysis.bm25Term(idf, a, n, $"tf", $"len")))
+      val got = df.select($"idf", $"tf", $"len", coalesce(scores: _*).as("score"))
+      assert(got.schema("score").dataType == org.apache.spark.sql.types.LongType)
+      got.as[(Long, Long, Long, Long)].collect().foreach { case (idf, tf, len, score) =>
+        assert(score == want(idf, tf, len),
+          s"ansi ${s.conf.get("spark.sql.ansi.enabled")}: idf $idf tf $tf len $len")
+      }
+    }
+  }
+
   test("q131 and q148 per-call Spark jobs stay at their counts") {
     // one warm-up call first: a corpus's first touch can read parquet in
     // one extra job, so only calls after it are counted

@@ -91,4 +91,22 @@ class DpoIncrementalSpec extends AnyFunSuite with SparkSpec {
     assert(surv == Set(12L),
       s"old docs must drop retroactively, 12 must survive: $surv")
   }
+
+  test("update frees only its own checkpoints: a caller-held checkpoint survives and still counts") {
+    val state = java.nio.file.Files.createTempDirectory("graft_dpo_ivm4").toString
+    val docs = graft.sources.Tables.documents(spark, sfDir)
+      .select($"doc_id", $"source", $"text")
+    val held = docs.filter($"doc_id" % 3 === 0).localCheckpoint()
+    val n = held.count()
+    val heldIds = held.queryExecution.analyzed.collect {
+      case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd.id
+    }
+    assert(heldIds.nonEmpty)
+    DpoIncremental.update(held, state)
+    val persisted = spark.sparkContext.getPersistentRDDs.keySet
+    assert(heldIds.forall(persisted.contains),
+      s"update unpersisted the caller's checkpoint $heldIds")
+    assert(held.count() == n)
+    org.apache.spark.sql.graft.CheckpointUtils.free(held)
+  }
 }

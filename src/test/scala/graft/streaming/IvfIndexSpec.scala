@@ -7,7 +7,8 @@ import graft.SparkSpec
 /** Incremental IVF+PQ index: frozen-epoch incremental assignment AND
   * coding are bit-equal to the batch path, the doubling rebuild
   * re-policies (√n nlist, nprobe = ⌈nlist/8⌉), ADC-primary admission is
-  * bit-equal to the exact-verify path, admission rejects indexed cosine
+  * bit-equal to an exact-cosine verify of every candidate, admission
+  * rejects indexed cosine
   * near-dups through the inverted lists, mixed-epoch crash states heal
   * pre-probe via the meta fingerprints, and the per-batch probe never
   * shuffles the corpus-sided stores.
@@ -42,11 +43,11 @@ class IvfIndexSpec extends AnyFunSuite with SparkSpec {
     val lastN = meta.getLong(0)
     assert(meta.getInt(1) == graft.operators.Similarity.ivfPolicyNlist(lastN))
     assert(meta.getInt(2) == graft.operators.Similarity.ivfPolicyNprobe(meta.getInt(1)))
-    // the epoch's recorded payload depth: the admitListRk default (4)
-    // capped at nlist, and the stored slice covers max(nprobe, it)
+    // the epoch's recorded payload depth: admitListRk (4) capped at
+    // nlist, and the stored slice covers max(nprobe, it)
     val payloadRk = meta.getAs[Int]("payload_rk")
     assert(payloadRk ==
-      math.min(IvfIndex.admitListRk(spark), math.max(1, meta.getInt(1))))
+      math.min(IvfIndex.admitListRk, math.max(1, meta.getInt(1))))
     val storeRk = math.max(meta.getInt(2), payloadRk)
     // the store (rebuild-written epoch base + wave-3 incremental
     // append) is bit-equal to a from-scratch batch assignment of the
@@ -120,30 +121,51 @@ class IvfIndexSpec extends AnyFunSuite with SparkSpec {
     assert(rk1Cand.subsetOf(incr) && rk1Cand.size < incr.size)
   }
 
+  private def corpusIds(corpus: String): Set[Long] =
+    spark.read.schema(IvfIndex.vecSchema).parquet(corpus)
+      .select($"vec_id").as[Long].collect().toSet
+
+  /** The ids of `wave` an exact-cosine verify of EVERY admission
+    * candidate admits against the index as it stands: the candidate
+    * pairs at probe depth 1 (the batch vector's nearest list against
+    * the stored membership slice), their exact cosine, and every wave
+    * id with an indexed partner at ≥ 0.92 (admitBatch's default gate)
+    * rejected. Call before the wave is admitted.
+    */
+  private def exactAdmitted(corpus: String, index: String,
+      wave: org.apache.spark.sql.DataFrame): Set[Long] = {
+    val w = wave.select($"vec_id", $"embedding")
+    val piv = spark.read.schema(IvfIndex.pivSchema).parquet(s"$index/piv")
+    val cand = IvfIndex.candidatePairs(spark, index,
+      graft.operators.Similarity.ivfNearOf(w, piv, 1))
+    val rejected = cand
+      .join(spark.read.schema(IvfIndex.vecSchema).parquet(corpus)
+        .select($"vec_id".as("a_id"), $"embedding".as("ea")), Seq("a_id"))
+      .join(w.select($"vec_id".as("b_id"), $"embedding".as("eb")), Seq("b_id"))
+      .withColumn("cs", graft.functions.VectorFunctions.cosineSim($"ea", $"eb"))
+      .filter(!isnan($"cs") && $"cs" >= 0.92)
+      .select($"b_id").as[Long].collect().toSet
+    w.select($"vec_id").as[Long].collect().toSet -- rejected
+  }
+
   test("ADC-primary admission == exact-verify admission (identical admitted sets)") {
-    def run(exact: Boolean): Set[Long] = {
-      val (corpus, index) = freshDirs()
-      if (exact) spark.conf.set("spark.graft.ivfIndex.exactVerify", "true")
-      try {
-        IvfIndex.admitBatch(fixtureVecs.filter($"vec_id" % 3 === 0), corpus, index)
-        // wave 2 plants exact copies of indexed vectors under fresh ids
-        // (certain-reject band) among genuinely new vectors — the mix
-        // exercises certain-reject, certain-keep AND the gray band
-        val dupes = fixtureVecs
-          .filter($"vec_id" % 3 === 0 && $"vec_id" % 5 === 0)
-          .select(($"vec_id" + 1000000L).as("vec_id"), $"embedding", $"label")
-        IvfIndex.admitBatch(
-          fixtureVecs.filter($"vec_id" % 3 === 1).unionByName(dupes),
-          corpus, index)
-        spark.read.schema(IvfIndex.vecSchema).parquet(corpus)
-          .select($"vec_id").as[Long].collect().toSet
-      } finally spark.conf.unset("spark.graft.ivfIndex.exactVerify")
-    }
-    val adc = run(exact = false)
-    val ex = run(exact = true)
-    assert(adc == ex,
-      s"ADC and exact admission diverged: only-adc=${(adc -- ex).take(5)}, " +
-        s"only-exact=${(ex -- adc).take(5)}")
+    val (corpus, index) = freshDirs()
+    IvfIndex.admitBatch(fixtureVecs.filter($"vec_id" % 3 === 0), corpus, index)
+    // wave 2 plants exact copies of indexed vectors under fresh ids
+    // (certain-reject band) among genuinely new vectors — the mix
+    // exercises certain-reject, certain-keep AND the gray band
+    val dupes = fixtureVecs
+      .filter($"vec_id" % 3 === 0 && $"vec_id" % 5 === 0)
+      .select(($"vec_id" + 1000000L).as("vec_id"), $"embedding", $"label")
+    val wave2 = fixtureVecs.filter($"vec_id" % 3 === 1).unionByName(dupes)
+      .localCheckpoint()
+    val before = corpusIds(corpus)
+    val expected = before ++ exactAdmitted(corpus, index, wave2)
+    IvfIndex.admitBatch(wave2, corpus, index)
+    val adc = corpusIds(corpus)
+    assert(adc == expected,
+      s"ADC and exact admission diverged: only-adc=${(adc -- expected).take(5)}, " +
+        s"only-exact=${(expected -- adc).take(5)}")
     assert(!adc.exists(_ >= 1000000L),
       "planted exact copies must be rejected by the ADC path")
   }
@@ -156,32 +178,27 @@ class IvfIndexSpec extends AnyFunSuite with SparkSpec {
     // proves the flip case occurs). Flipped pairs overlap the corpus
     // side only at rk > 1 — exactly where the r15
     // rk=1-only payload layout served NULL (code, resid) and the ADC
-    // bands silently admitted what exactVerify=true rejected (r16
+    // bands silently admitted what an exact verify rejected (r16
     // advisor finding; the exact-copy test above can NOT reach this
     // path because a copy shares its twin's rk=1 list by construction).
-    def clones = fixtureVecs.filter($"vec_id" % 3 === 0 && $"vec_id" % 4 === 0)
+    val clones = fixtureVecs.filter($"vec_id" % 3 === 0 && $"vec_id" % 4 === 0)
       .select(($"vec_id" + 2000000L).as("vec_id"),
         expr("""transform(embedding, (x, d) -> CAST(
                |  x * (1.0D + 0.3D * (pmod(xxhash64(vec_id, d), 2001) - 1000) / 1000.0D)
                |  AS FLOAT))""".stripMargin).as("embedding"),
         $"label")
-    def run(exact: Boolean): (Set[Long], String, String) = {
-      val (corpus, index) = freshDirs()
-      if (exact) spark.conf.set("spark.graft.ivfIndex.exactVerify", "true")
-      try {
-        IvfIndex.admitBatch(fixtureVecs.filter($"vec_id" % 3 === 0), corpus, index)
-        // wave 2 is clones-only and far below the doubling trigger, so
-        // the wave-1 epoch's pivots survive the run for the teeth check
-        IvfIndex.admitBatch(clones, corpus, index)
-        (spark.read.schema(IvfIndex.vecSchema).parquet(corpus)
-          .select($"vec_id").as[Long].collect().toSet, corpus, index)
-      } finally spark.conf.unset("spark.graft.ivfIndex.exactVerify")
-    }
-    val (adc, _, index) = run(exact = false)
-    val (ex, _, _) = run(exact = true)
-    assert(adc == ex,
+      .localCheckpoint()
+    val (corpus, index) = freshDirs()
+    IvfIndex.admitBatch(fixtureVecs.filter($"vec_id" % 3 === 0), corpus, index)
+    // wave 2 is clones-only and far below the doubling trigger, so
+    // the wave-1 epoch's pivots survive the run for the teeth check
+    val before = corpusIds(corpus)
+    val expected = before ++ exactAdmitted(corpus, index, clones)
+    IvfIndex.admitBatch(clones, corpus, index)
+    val adc = corpusIds(corpus)
+    assert(adc == expected,
       s"ADC and exact admission diverged on perturbed near-dups: " +
-        s"only-adc=${(adc -- ex).take(5)}, only-exact=${(ex -- adc).take(5)}")
+        s"only-adc=${(adc -- expected).take(5)}, only-exact=${(expected -- adc).take(5)}")
     val caught = clones.select($"vec_id").as[Long].collect().toSet -- adc
     assert(caught.nonEmpty, "no perturbed clone was rejected — the ladder " +
       "geometry moved; re-tune the jitter so the test keeps its teeth")
@@ -205,6 +222,29 @@ class IvfIndexSpec extends AnyFunSuite with SparkSpec {
     assert(caught.exists(id => minOverlap.get(id).exists(_ > 1)),
       s"every caught clone overlapped its source at rk=1 — the rk>1 " +
         s"payload path went unexercised: $minOverlap")
+  }
+
+  test("ADC bands at their edges: a sandwich inside the slack and a payload-less pair go to the exact verify") {
+    // hand-built coded candidates against a one-subspace, one-centroid
+    // LUT, so adc = lut(0) exactly. Pair (1, 10): r = 0 and a just under
+    // the rejection bound but inside the adcEpsFrozen slack — not
+    // certain, and the exact cosine says clean. Pair (2, 11): no payload
+    // — never certain, and the exact cosine says duplicate.
+    val sim = graft.operators.Similarity
+    val a = math.floor(sim.adcBoundFrozen(0.92) - sim.adcEpsFrozen / 2).toLong
+    val (corpus, _) = freshDirs()
+    Seq((1L, vec(1), 0), (2L, vec(3), 0)).toDF("vec_id", "embedding", "label")
+      .write.parquet(corpus)
+    val batch = Seq((10L, vec(9), Seq(a * a)), (11L, vec(3), Seq(a * a)))
+      .toDF("vec_id", "embedding", "lut")
+    val cand = Seq((1L, 10L, Option(Seq(1)), Option(0L)), (2L, 11L, None, None))
+      .toDF("a_id", "b_id", "code", "resid")
+    val ck = new IndexLifecycle.CkptScope
+    try {
+      val rejected = IvfIndex.adcRejectedIds(spark, corpus, batch, cand, 1, 0.92, ck)
+        .as[Long].collect().toSet
+      assert(rejected == Set(11L), s"rejected $rejected")
+    } finally ck.freeAll()
   }
 
   test("admission rejects an indexed near-identical vector; replay appends nothing") {
@@ -253,10 +293,9 @@ class IvfIndexSpec extends AnyFunSuite with SparkSpec {
     IvfIndex.admitBatch((1 to 8).map(i => (i.toLong, vec(i), 0))
       .toDF("vec_id", "embedding", "label"), corpus, index)
     // simulate the r14 advisor crash window: the piv/ store is
-    // overwritten with a DIFFERENT pivot set (a trainedPivots toggle +
-    // crash between the piv and near writes of a pure-compaction
-    // rebuild) while near/ and every row count stay consistent — the
-    // count heal alone can NOT see this
+    // overwritten with a DIFFERENT pivot set (a crash between the piv
+    // and near writes of a rebuild) while near/ and every row count stay
+    // consistent — the count heal alone can NOT see this
     val corrupted = spark.read.schema(IvfIndex.pivSchema)
       .parquet(s"$index/piv")
       .select($"p_id", reverse($"pe").as("pe"))
@@ -293,24 +332,6 @@ class IvfIndexSpec extends AnyFunSuite with SparkSpec {
     val admitted = spark.read.schema(IvfIndex.vecSchema).parquet(corpus)
       .select($"vec_id").as[Long].collect().toSet
     assert(admitted == Set(1L))
-  }
-
-  test("a non-positive admitNprobe conf cannot disable admission dedup") {
-    val (corpus, index) = freshDirs()
-    spark.conf.set("spark.graft.ivfIndex.admitNprobe", "0")
-    try {
-      IvfIndex.admitBatch((1 to 8).map(i => (i.toLong, vec(i), 0))
-        .toDF("vec_id", "embedding", "label"), corpus, index)
-      // the knob floors at 1 (r15 review: min/max were composed the
-      // wrong way round, so 0 emptied the probe slice and every copy
-      // was silently admitted)
-      IvfIndex.admitBatch(Seq((101L, vec(1), 0)).toDF("vec_id", "embedding", "label"),
-        corpus, index)
-      val admitted = spark.read.schema(IvfIndex.vecSchema).parquet(corpus)
-        .select($"vec_id").as[Long].collect().toSet
-      assert(admitted == (1L to 8L).toSet,
-        s"the exact copy must be rejected under admitNprobe=0: $admitted")
-    } finally spark.conf.unset("spark.graft.ivfIndex.admitNprobe")
   }
 
   test("a vec_id duplicated WITHIN one batch is admitted once (no perpetual heal wedge)") {
@@ -356,45 +377,6 @@ class IvfIndexSpec extends AnyFunSuite with SparkSpec {
     assert(!plan.contains("SortMergeJoin") && !plan.contains("ShuffledHashJoin"),
       "gray-band exact verify must fetch raw vectors via broadcast only:\n" + plan)
     assert(plan.contains("BroadcastHashJoin"))
-  }
-
-  test("trained-pivot epochs: rebuild freezes k-means centroids, incremental stays exact") {
-    val (corpus, index) = freshDirs()
-    spark.conf.set("spark.graft.ivfIndex.trainedPivots", "true")
-    try {
-      IvfIndex.admitBatch(fixtureVecs.filter($"vec_id" % 10 < 4), corpus, index)
-      IvfIndex.admitBatch(fixtureVecs.filter($"vec_id" % 10 >= 4 && $"vec_id" % 10 <= 7),
-        corpus, index)
-      // wave 3: incremental under the trained frozen pivots
-      IvfIndex.admitBatch(fixtureVecs.filter($"vec_id" % 10 === 8), corpus, index)
-      val meta = spark.read.parquet(s"$index/meta").head()
-      val piv = spark.read.schema(IvfIndex.pivSchema).parquet(s"$index/piv")
-      assert(piv.count() == meta.getInt(1).toLong,
-        "the epoch freezes exactly nlist trained centroids")
-      assert(meta.getAs[String]("pivot_src") == "trained")
-      // trained pivots are MEANS, not corpus vectors: at least one
-      // centroid must differ from every corpus embedding (the payload
-      // proves training actually ran, vs the lowest-vec_id default)
-      val corpusVecs = spark.read.schema(IvfIndex.vecSchema).parquet(corpus)
-        .select($"embedding").as[Seq[Float]].collect().toSet
-      val pivVecs = piv.select($"pe").as[Seq[Float]].collect()
-      assert(pivVecs.exists(p => !corpusVecs.contains(p)),
-        "trained pivots must not all be raw corpus vectors")
-      // exactness pin unchanged: store == batch path under the SAME
-      // frozen (trained) pivots and epoch params (slice depth =
-      // max(nprobe, payload_rk), the r16 membership layout)
-      val admitted = spark.read.schema(IvfIndex.vecSchema).parquet(corpus)
-        .select($"vec_id", $"embedding")
-      val batchPath = graft.operators.Similarity
-        .ivfNearOf(admitted, piv,
-          math.max(meta.getInt(2), meta.getAs[Int]("payload_rk")))
-        .as[(Long, Long, Int)].collect().toSet
-      val store = spark.read.schema(IvfIndex.nearSchema).parquet(s"$index/near")
-        .select($"vec_id", $"p_id", $"rk")
-        .as[(Long, Long, Int)].collect().toSet
-      assert(store.nonEmpty && store == batchPath,
-        "trained-pivot incremental store must equal the batch path")
-    } finally spark.conf.unset("spark.graft.ivfIndex.trainedPivots")
   }
 
   test("topK search: a planted twin ranks first; ADC shortlist == batch-kernel recompute") {
@@ -461,40 +443,6 @@ class IvfIndexSpec extends AnyFunSuite with SparkSpec {
     assert(!plan.contains("SortMergeJoin") && !plan.contains("ShuffledHashJoin"),
       "topK must never shuffle-join the corpus-sided stores:\n" + plan)
     assert(plan.contains("BroadcastHashJoin"))
-  }
-
-  test("admitBandCounts: census totals the candidate set and bands agree with admission") {
-    val (corpus, index) = freshDirs()
-    IvfIndex.admitBatch(fixtureVecs.filter($"vec_id" % 2 === 0), corpus, index)
-    // a batch of exact copies + genuinely novel vectors. An exact
-    // copy's ADC distance to its twin IS the twin's quantization
-    // residual (a = r), so |a − r| = 0 ≤ bound + eps: a copy can land
-    // certain-dup (well-quantized twin, 2√resid under the bound) or
-    // gray (coarse residual — the fixture's 16-centroid geometry), but
-    // NEVER certain-clean
-    val copies = fixtureVecs.filter($"vec_id" % 2 === 0 && $"vec_id" % 10 === 0)
-      .select(($"vec_id" + 7000000L).as("vec_id"), $"embedding", $"label")
-    val batch = fixtureVecs.filter($"vec_id" % 2 === 1).unionByName(copies)
-      .localCheckpoint()
-    val (cd, gy, cc) = IvfIndex.admitBandCounts(spark, index, batch)
-    // the census is read-only over exactly the admission candidate set
-    val meta = spark.read.parquet(s"$index/meta").head()
-    val piv = spark.read.schema(IvfIndex.pivSchema).parquet(s"$index/piv")
-    val bn = graft.operators.Similarity.ivfNearOf(
-      batch.select($"vec_id", $"embedding"), piv, 1)
-    val nCand = IvfIndex.candidatePairs(spark, index, bn).count()
-    assert(cd + gy + cc == nCand,
-      s"band census ($cd+$gy+$cc) must total the candidate set ($nCand)")
-    val nCopies = copies.count()
-    assert(cd + gy >= nCopies,
-      s"each planted copy pairs with its twin OUTSIDE certain-clean " +
-        s"(|a−r| = 0), so decided-dup+gray ($cd+$gy) must cover $nCopies")
-    // and the bands are consistent with what admitBatch then does: the
-    // copies are rejected, the novel vectors admitted
-    IvfIndex.admitBatch(batch, corpus, index)
-    val admitted = spark.read.schema(IvfIndex.vecSchema).parquet(corpus)
-      .select($"vec_id").as[Long].collect().toSet
-    assert(!admitted.exists(_ >= 7000000L))
   }
 
   // ——— per-row epoch kernels vs their relational references ———————————
@@ -730,24 +678,21 @@ class IvfIndexSpec extends AnyFunSuite with SparkSpec {
     def gauss(): Array[Float] = Array.fill(64)(rnd.nextGaussian().toFloat)
     val base = gauss()
     def nearCopy(): Array[Float] = base.map(x => x + 0.01f * rnd.nextGaussian().toFloat)
-    // 100 vectors: nlist 10, nprobe 2, so admitNprobe = 2 takes effect;
+    // 100 vectors: nlist 10, nprobe 2 (admission still probes 1 list);
     // ids 1-3 are near-copies of `base`, all admitted in-batch
     val corpusRows = (1 to 3).map(i => (i.toLong, nearCopy(), 0)) ++
       (4 to 100).map(i => (i.toLong, gauss(), 0))
-    spark.conf.set("spark.graft.ivfIndex.admitNprobe", "2")
-    try {
-      IvfIndex.admitBatch(corpusRows.toDF("vec_id", "embedding", "label"), corpus, index)
-      assert(spark.read.parquet(s"$index/meta").head().getAs[Int]("nprobe") == 2)
-      val batch = Seq((101L, base, 0), (102L, gauss(), 0))
-        .toDF("vec_id", "embedding", "label").localCheckpoint()
-      // the rejected relation is a multiset: 101 sits on one decided
-      // row per near-copy
-      val rejected = IvfIndex.batchProbePlan(spark, index, corpus, batch, 0.92)
-        .as[Long].collect().toSeq
-      assert(rejected.count(_ == 101L) >= 2 && !rejected.contains(102L),
-        s"101 should reject through several corpus rows: $rejected")
-      IvfIndex.admitBatch(batch, corpus, index)
-    } finally spark.conf.unset("spark.graft.ivfIndex.admitNprobe")
+    IvfIndex.admitBatch(corpusRows.toDF("vec_id", "embedding", "label"), corpus, index)
+    assert(spark.read.parquet(s"$index/meta").head().getAs[Int]("nprobe") == 2)
+    val batch = Seq((101L, base, 0), (102L, gauss(), 0))
+      .toDF("vec_id", "embedding", "label").localCheckpoint()
+    // the rejected relation is a multiset: 101 sits on one decided
+    // row per near-copy
+    val rejected = IvfIndex.batchProbePlan(spark, index, corpus, batch, 0.92)
+      .as[Long].collect().toSeq
+    assert(rejected.count(_ == 101L) >= 2 && !rejected.contains(102L),
+      s"101 should reject through several corpus rows: $rejected")
+    IvfIndex.admitBatch(batch, corpus, index)
     val ids = spark.read.schema(IvfIndex.vecSchema).parquet(corpus)
       .select($"vec_id").as[Long].collect().toSeq
     assert(ids.size == ids.distinct.size, s"duplicated corpus ids: ${ids.diff(ids.distinct)}")
